@@ -133,19 +133,6 @@ def hash56_sql(s: str) -> str:
     return f"(md5_number_lower({s}) % 72057594037927936)::BIGINT"
 
 
-def perm_hash_expr(h64: Column, a: int, b: int) -> Column:
-    """Universal-hash permutation ``(a*h + b) mod (2^61-1)`` as BIGINT.
-
-    Exact: DECIMAL(38,0) holds a*h+b (< 2^96) without overflow.
-    """
-    expr = (h64 * F.lit(a).cast("decimal(20,0)") + F.lit(b)).cast("decimal(38,0)")
-    return F.pmod(expr, F.lit(MERSENNE_61).cast("decimal(38,0)")).cast("long")
-
-
-def perm_hash_sql(h64_sql_s: str, a: int, b: int) -> str:
-    return f"((({h64_sql_s}) * {a} + {b}) % {MERSENNE_61})::BIGINT"
-
-
 def minhash_perms(k: int, seed: int = 1) -> list[tuple[int, int]]:
     """Deterministic (a, b) parameter pairs via a 64-bit LCG — no RNG
     state, reproducible in any process, literal-embeddable in SQL."""
@@ -203,13 +190,6 @@ def char_ngrams_expr(c: Column, n: int) -> Column:
         lambda i: F.substring(lc, i, n),
     )
     return F.array_distinct(grams)
-
-
-def char_ngrams_sql(s: str, n: int) -> str:
-    return (
-        f"list_distinct([substring(lower({s}), i, {n}) "
-        f"FOR i IN range(1, greatest(length(lower({s})) - {n - 2}, 2))])"
-    )
 
 
 def jaccard_expr(a: Column, b: Column, nd: int = 6) -> Column:

@@ -32,7 +32,6 @@ DuckDB query from the same constants, for the differential oracle.
 from __future__ import annotations
 
 import functools
-import operator as pyop
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -207,33 +206,6 @@ def ngram_jaccard_pairs_sql(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-def minhash_signature_expr(shingles: Column, num_perm: int, seed: int = 1) -> Column:
-    """MinHash signature as one array expression (array-API form; the
-    pipeline uses the faster explode/aggregate form in
-    :func:`minhash_signatures`).
-
-    Permutation: ``(a_i*h31(s) + b_i) mod (2^31-1)``. The 31-bit fold
-    keeps products inside a signed long, and the 2^31-1 modulus is ~2^31
-    times smaller than the products, so they wrap it many times — proper
-    mixing. (A larger modulus like 2^61-1 would be a correctness trap:
-    products below ~2·M never wrap, every permutation's min degenerates
-    to the same argmin shingle, and LSH bands collapse.)
-    """
-    hs = F.transform(shingles, lambda s: hash31_expr(s))
-
-    def perm_fn(a: int, b: int):
-        def f(h: Column) -> Column:
-            return F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE_31))
-
-        return f
-
-    sig = [
-        F.array_min(F.transform(hs, perm_fn(a, b)))
-        for a, b in minhash_perms(num_perm, seed)
-    ]
-    return F.array(*sig)
 
 
 def _minhash_signature_sql(shingles: str, num_perm: int, seed: int = 1) -> str:
@@ -636,39 +608,6 @@ def minhash_dedup_incremental(
     return survivors, pairs
 
 
-def simhash_expr(toks: Column) -> Column:
-    """60-bit SimHash of a token array (term-frequency weighted).
-
-    Stage 1: one 60-bit hash per token. Stage 2: elementwise ±1 bit
-    votes accumulated with ``aggregate``+``zip_with``. Stage 3: sign →
-    bit reassembly. All three are array expressions — a single
-    projection, no shuffle, no UDF.
-    """
-    hs = F.transform(toks, lambda t: hash56_expr(t))
-    zeros = F.array(*[F.lit(0)] * SIMHASH_BITS)
-
-    def bit_votes(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(h.bitwiseAND(F.lit(1 << b)) != 0, 1).otherwise(-1)
-                for b in range(SIMHASH_BITS)
-            ]
-        )
-
-    votes = F.aggregate(
-        hs, zeros, lambda acc, h: F.zip_with(acc, bit_votes(h), lambda x, y: x + y)
-    )
-    return functools.reduce(
-        pyop.add,
-        [
-            F.when(F.element_at(votes, b + 1) >= 0, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(SIMHASH_BITS)
-        ],
-    ).alias("simhash")
-
-
 def simhash_sql(toks: str) -> str:
     # One comprehension per bit (DuckDB list comprehensions cannot
     # capture outer lambda variables, so no elementwise zip-reduce):
@@ -713,7 +652,7 @@ def _simhash_vote_sql() -> tuple[tuple[str, ...], tuple[str, ...]]:
 def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, simhash) fingerprint table.
 
-    Relational form of :func:`simhash_expr` (explode tokens → packed
+    60-bit term-frequency-weighted SimHash (explode tokens → packed
     popcount aggregates → majority/reassemble), keeping the bit-vote
     bank in WholeStageCodegen with map-side partial sums. Per bit, the
     ±1 vote sum ``2·s_b − n`` (s_b = ones count, n = token count) is

@@ -6,7 +6,10 @@ initial load. Merge/dedup helpers live in operators/merge.py (F1-F2).
 
 Spark shape: the watermark predicate is one filter pushed to the scan
 (Parquet row-group pruning / JDBC WHERE), and the count + max(tc) +
-result rows are produced from a single persisted delta scan.
+result rows come from one locally checkpointed delta. The checkpoint
+is a snapshot: a result built on it never re-reads the live table, so
+a cache of it cannot pick up rows appended after the read (Spark drops
+and lazily rebuilds every cached plan over a path it appends to).
 """
 
 from __future__ import annotations
@@ -36,27 +39,20 @@ class IncrementalLoader:
         df = self.df_provider()
         delta: DataFrame = watermark_read(
             df, self.time_col, last_timestamp, limit=limit, tiebreaker=tiebreaker
-        )
-        delta.persist()
-        try:
-            row_count = delta.count()
-            if row_count == 0:
-                return IncrementalLoadResult(
-                    success=False,
-                    df=None,
-                    row_count=0,
-                    is_initial=last_timestamp is None,
-                    error=NO_DATA_ERROR,
-                )
-            max_ts = delta.agg(F.max(self.time_col)).first()[0]
+        ).localCheckpoint()
+        row_count, max_ts = delta.agg(F.count(F.lit(1)), F.max(self.time_col)).first()
+        if row_count == 0:
             return IncrementalLoadResult(
-                success=True,
-                df=delta,
-                row_count=row_count,
-                max_timestamp=max_ts,
+                success=False,
+                df=None,
+                row_count=0,
                 is_initial=last_timestamp is None,
+                error=NO_DATA_ERROR,
             )
-        finally:
-            # caller-owned persistence: the result df stays cached until
-            # the service layer merges + re-caches, then unpersists
-            pass
+        return IncrementalLoadResult(
+            success=True,
+            df=delta,
+            row_count=row_count,
+            max_timestamp=max_ts,
+            is_initial=last_timestamp is None,
+        )

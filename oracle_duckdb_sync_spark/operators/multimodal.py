@@ -10,25 +10,24 @@ stage is map-only (no shuffle of binary payloads, ever). Downstream
 relational work (joins, dedup on features) happens on the *small*
 derived columns, never the blobs.
 
-The actual codec calls (PIL/librosa/av) are STUBBED — this container
-ships no media libraries. The stubs are clearly marked: real decode
-raises :class:`NotImplementedError` unless the library import
-succeeds; the deterministic fake path derives features from the md5
-digest of the bytes, so tests (and the DuckDB oracle, via
+Decode is real for two formats, with the stdlib only: PNG
+(:func:`decode_png`, 8-bit non-interlaced, all five scanline filters)
+and RIFF/WAVE PCM (:func:`decode_wav`, 8/16-bit). Every other format
+goes to a PIL-gated decoder that raises :class:`NotImplementedError`
+when PIL is not installed. The deterministic fake path derives features
+from the md5 digest of the bytes, so tests (and the DuckDB oracle, via
 ``md5_number_lower``) can verify the full Spark plumbing — schema,
 batching, UDF signature — end to end.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -70,25 +69,6 @@ def attach_media_columns(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     )
 
 
-def _real_image_decode(content: bytes):  # pragma: no cover - stub
-    """REAL decode path — requires PIL, not shipped in this container.
-
-    Kept import-gated so the engine runs anywhere; swap-in point for a
-    production image stack. For PNG content the engine no longer needs
-    it: :func:`decode_png` is a dependency-free decoder.
-    """
-    try:
-        from PIL import Image  # noqa: F401
-        import io
-
-        return Image.open(io.BytesIO(content))
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decode requires PIL; install pillow or use "
-            "deterministic_features (fake=True)"
-        ) from e
-
-
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
@@ -124,7 +104,11 @@ def _make_png_decoder():
             ctype = content[pos + 4 : pos + 8]
             data = content[pos + 8 : pos + 8 + length]
             pos += 12 + length  # length + type + data + crc
+            if pos > len(content):
+                raise ValueError("truncated PNG chunk")
             if ctype == b"IHDR":
+                if length != 13:
+                    raise ValueError("bad PNG IHDR length")
                 width, height, bit_depth, color_type, _comp, _filt, interlace = (
                     struct.unpack(">IIBBBBB", data)
                 )
@@ -144,7 +128,10 @@ def _make_png_decoder():
             raise NotImplementedError(
                 f"unsupported PNG color type {color_type} (palette needs PLTE)"
             )
-        raw = zlib.decompress(bytes(idat))
+        try:
+            raw = zlib.decompress(bytes(idat))
+        except zlib.error as e:
+            raise ValueError(f"corrupt PNG image data: {e}") from e
         stride = width * channels
         if len(raw) != (stride + 1) * height:
             raise ValueError("PNG pixel data length mismatch")
@@ -191,1772 +178,6 @@ def _make_png_decoder():
 
 
 decode_png = _make_png_decoder()
-
-
-BMP_MAGIC = b"BM"
-
-
-def _make_bmp_decoder():
-    """Factory for the stdlib-only BMP decoder (same by-value pickling
-    rationale as :func:`_make_png_decoder`)."""
-
-    def decode_bmp(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Decode an uncompressed BMP with the stdlib only (struct):
-        returns ``(width, height, channels, per_channel_means)`` with
-        means in [0, 1] and channels ordered RGB(A) — BMP stores rows
-        as BGR(A), this decoder swaps to match :func:`decode_png`.
-        Supports the common BITMAPINFOHEADER layouts: 24-bit BI_RGB
-        (rows padded to 4 bytes) and 32-bit BI_RGB, bottom-up
-        (positive height) or top-down (negative). Row order doesn't
-        change channel means, but top-down is accepted for
-        completeness since encoders emit both."""
-        import struct
-
-        if content[:2] != BMP_MAGIC:
-            raise ValueError("not a BMP (bad signature)")
-        if len(content) < 54:
-            raise ValueError("BMP truncated before headers")
-        (pixel_off,) = struct.unpack_from("<I", content, 10)
-        (hdr_size,) = struct.unpack_from("<I", content, 14)
-        if hdr_size < 40:
-            raise NotImplementedError(
-                f"stdlib BMP path needs BITMAPINFOHEADER+ (got {hdr_size})"
-            )
-        width, height = struct.unpack_from("<ii", content, 18)
-        planes, bpp = struct.unpack_from("<HH", content, 26)
-        (compression,) = struct.unpack_from("<I", content, 30)
-        if compression != 0:
-            raise NotImplementedError(
-                f"stdlib BMP path supports BI_RGB only (got {compression})"
-            )
-        if bpp not in (24, 32):
-            raise NotImplementedError(
-                f"stdlib BMP path supports 24/32-bit only (got {bpp}-bit)"
-            )
-        if width <= 0 or height == 0 or planes != 1:
-            raise ValueError("bad BMP dimensions")
-        n_rows = abs(height)
-        ch = bpp // 8
-        row_bytes = width * ch
-        stride = (row_bytes + 3) & ~3  # rows pad to 4-byte boundaries
-        need = pixel_off + stride * n_rows
-        if len(content) < need:
-            raise ValueError("BMP pixel data length mismatch")
-        # slice-stride sums run in C (≈30-50× a per-byte Python loop —
-        # this is the worker-side hot path over whole media tables);
-        # BMP rows have no scanline filters, so raw samples sum directly
-        sums_bgra = [0] * ch
-        mv = memoryview(content)
-        for y in range(n_rows):
-            off = pixel_off + y * stride
-            row = mv[off : off + row_bytes]
-            for c in range(ch):
-                sums_bgra[c] += sum(row[c::ch])
-        n_px = width * n_rows
-        # BGR(A) on disk → RGB(A) out
-        order = (2, 1, 0) if ch == 3 else (2, 1, 0, 3)
-        means = [sums_bgra[i] / (n_px * 255.0) for i in order]
-        return width, n_rows, ch, means
-
-    return decode_bmp
-
-
-decode_bmp = _make_bmp_decoder()
-
-
-def _make_pnm_decoder():
-    """Factory for the stdlib-only PPM/PGM decoder (same by-value
-    pickling rationale as :func:`_make_png_decoder`)."""
-
-    def decode_pnm(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Decode a binary netpbm image (P5 grayscale PGM / P6 RGB PPM)
-        with the stdlib only: returns ``(width, height, channels,
-        per_channel_means)`` with means in [0, 1] normalized by the
-        header's maxval. Header tokens may be separated by any
-        whitespace and ``#`` comments (the netpbm grammar); maxval must
-        be ≤ 255 (one byte per sample, the common case)."""
-        if content[:2] not in (b"P5", b"P6"):
-            raise NotImplementedError(
-                "stdlib netpbm path supports binary P5/P6 only"
-            )
-        ch = 3 if content[:2] == b"P6" else 1
-        pos = 2
-        tokens: list[int] = []
-        while len(tokens) < 3:
-            if pos >= len(content):
-                raise ValueError("netpbm header truncated")
-            c = content[pos : pos + 1]
-            if c == b"#":  # comment runs to end of line
-                while pos < len(content) and content[pos : pos + 1] != b"\n":
-                    pos += 1
-            elif c.isspace():
-                pos += 1
-            elif c.isdigit():
-                start = pos
-                while (
-                    pos < len(content) and content[pos : pos + 1].isdigit()
-                ):
-                    pos += 1
-                tokens.append(int(content[start:pos]))
-            else:
-                raise ValueError(f"bad netpbm header byte {c!r}")
-        width, height, maxval = tokens
-        if not (0 < maxval <= 255):
-            raise NotImplementedError(
-                f"stdlib netpbm path supports maxval<=255 (got {maxval})"
-            )
-        pos += 1  # exactly ONE whitespace byte after maxval, per spec
-        need = width * height * ch
-        raw = content[pos : pos + need]
-        if len(raw) != need:
-            raise ValueError("netpbm pixel data length mismatch")
-        # slice-stride sums (C speed) — same rationale as decode_bmp
-        sums = [sum(raw[c::ch]) for c in range(ch)]
-        n_px = width * height
-        means = [s / (n_px * float(maxval)) for s in sums]
-        return width, height, ch, means
-
-    return decode_pnm
-
-
-decode_pnm = _make_pnm_decoder()
-
-
-GIF_MAGICS = (b"GIF87a", b"GIF89a")
-
-
-def _make_gif_decoder():
-    """Factory for the stdlib-only GIF decoder (same by-value pickling
-    rationale as :func:`_make_png_decoder`)."""
-
-    def decode_gif(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Decode a GIF87a/89a FIRST frame with the stdlib only
-        (struct + a pure-Python GIF-LZW): returns ``(width, height,
-        channels=3, per_channel_means)`` with means in [0, 1]. The
-        LZW stream decodes to palette-index FREQUENCIES rather than a
-        pixel buffer — channel means are order-independent, so
-        interlacing needs no row reshuffling and memory stays
-        O(palette). Extensions (GCE/comment/application) are skipped;
-        transparency is ignored for means (indices count at their
-        palette color); animations use frame 1. Malformed payloads
-        raise ValueError (routed to the PIL fallback by the dispatch);
-        a GIF with no color table at all gets the spec-mandated
-        decoder-supplied default — a deterministic grayscale ramp
-        sized to the LZW root alphabet (GIF89a §19)."""
-        import struct
-
-        if content[:6] not in GIF_MAGICS:
-            raise ValueError("not a GIF (bad signature)")
-        if len(content) < 13:
-            raise ValueError("GIF truncated before screen descriptor")
-        _sw, _sh, packed, _bg, _aspect = struct.unpack_from("<HHBBB", content, 6)
-        pos = 13
-        gct = None
-        if packed & 0x80:
-            n = 2 ** ((packed & 0x07) + 1)
-            gct = content[pos : pos + 3 * n]
-            if len(gct) < 3 * n:
-                raise ValueError("GIF global color table truncated")
-            pos += 3 * n
-        # walk blocks to the first image descriptor
-        while True:
-            if pos >= len(content):
-                raise ValueError("GIF truncated before image data")
-            b = content[pos]
-            pos += 1
-            if b == 0x3B:
-                raise ValueError("GIF trailer before any image")
-            if b == 0x21:  # extension: label byte + data sub-blocks
-                pos += 1
-                while True:
-                    if pos >= len(content):
-                        raise ValueError("GIF extension truncated")
-                    sz = content[pos]
-                    pos += 1
-                    if sz == 0:
-                        break
-                    pos += sz
-                continue
-            if b != 0x2C:
-                raise ValueError(f"unexpected GIF block 0x{b:02x}")
-            break
-        if pos + 9 > len(content):
-            raise ValueError("GIF image descriptor truncated")
-        _l, _t, width, height, ipacked = struct.unpack_from("<HHHHB", content, pos)
-        pos += 9
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 ** ((ipacked & 0x07) + 1)
-            pal = content[pos : pos + 3 * n]
-            if len(pal) < 3 * n:
-                raise ValueError("GIF local color table truncated")
-            pos += 3 * n
-        if width <= 0 or height <= 0:
-            raise ValueError("bad GIF dimensions")
-        if pos >= len(content):
-            raise ValueError("GIF truncated before LZW data")
-        min_code = content[pos]
-        pos += 1
-        # 8 is the true GIF ceiling (palette ≤ 256 colors); rejecting
-        # 9-11 here is intentional, not an incidental bytes() crash
-        if not 2 <= min_code <= 8:
-            raise ValueError(f"bad GIF LZW min code size {min_code}")
-        if pal is None:
-            # no GCT and no LCT: the GIF89a spec (section 19) tells the
-            # DECODER to supply its own table in this case. Use a
-            # deterministic grayscale ramp sized to the LZW root-code
-            # alphabet (entry 0 black, last entry white — satisfying
-            # the spec's "black and white first" suggestion while
-            # keeping every legal index addressable); this replaces the
-            # former NotImplementedError PIL gate (VERDICT r13 #7).
-            n = 1 << min_code
-            pal = bytes(
-                round(i * 255 / (n - 1)) for i in range(n) for _ in range(3)
-            )
-        data = bytearray()
-        while True:
-            if pos >= len(content):
-                raise ValueError("GIF sub-blocks truncated")
-            sz = content[pos]
-            pos += 1
-            if sz == 0:
-                break
-            chunk = content[pos : pos + sz]
-            if len(chunk) < sz:
-                raise ValueError("GIF sub-block truncated")
-            data += chunk
-            pos += sz
-        # GIF-LZW → index frequencies. Codes are LSB-first with width
-        # min_code+1..12; <clear> resets the table, the decoder grows
-        # the width when the table reaches 1<<width ("late change"),
-        # and a full 4096-entry table freezes until the next clear
-        # (the "deferred clear" encoders are allowed to use).
-        clear = 1 << min_code
-        end = clear + 1
-        base = [bytes([i]) for i in range(clear)] + [b"", b""]
-        entries = list(base)
-        width_bits = min_code + 1
-        counts = [0] * 256
-        acc = nbits = di = 0
-        prev = None
-        n_out = 0
-        total = width * height
-        while n_out < total:
-            while nbits < width_bits:
-                if di >= len(data):
-                    raise ValueError("GIF LZW stream truncated")
-                acc |= data[di] << nbits
-                di += 1
-                nbits += 8
-            code = acc & ((1 << width_bits) - 1)
-            acc >>= width_bits
-            nbits -= width_bits
-            if code == clear:
-                entries = list(base)
-                width_bits = min_code + 1
-                prev = None
-                continue
-            if code == end:
-                break
-            if code < len(entries) and (seq := entries[code]):
-                pass
-            elif code == len(entries) and prev is not None:
-                seq = prev + prev[:1]
-            else:
-                raise ValueError("corrupt GIF LZW code")
-            if prev is not None and len(entries) < 4096:
-                entries.append(prev + seq[:1])
-                if len(entries) == (1 << width_bits) and width_bits < 12:
-                    width_bits += 1
-            for idx in seq:
-                counts[idx] += 1
-            n_out += len(seq)
-            prev = seq
-        if n_out != total:
-            raise ValueError(
-                f"GIF pixel count mismatch ({n_out} decoded, {total} expected)"
-            )
-        n_pal = len(pal) // 3
-        if any(counts[i] for i in range(n_pal, 256)):
-            raise ValueError("GIF palette index out of range")
-        sums = [0, 0, 0]
-        for i in range(n_pal):
-            c = counts[i]
-            if c:
-                sums[0] += c * pal[3 * i]
-                sums[1] += c * pal[3 * i + 1]
-                sums[2] += c * pal[3 * i + 2]
-        means = [s / (total * 255.0) for s in sums]
-        return width, height, 3, means
-
-    return decode_gif
-
-
-decode_gif = _make_gif_decoder()
-
-
-TIFF_MAGICS = (b"II*\x00", b"MM\x00*")
-
-
-def _make_tiff_decoder(jpeg_stats=None):
-    """Factory for the stdlib-only TIFF decoder (same by-value pickling
-    rationale as :func:`_make_png_decoder`). ``jpeg_stats`` is the
-    :func:`decode_jpeg_stats` callable, carried by value into the
-    closure for the Compression=7 (new-style JPEG-in-TIFF) path."""
-
-    def decode_tiff(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Decode a TIFF with the stdlib only (struct): returns
-        ``(width, height, channels, per_channel_means)`` with means in
-        [0, 1]. Supports both byte orders, uniform 8- or 16-bit
-        samples (means normalized by 255 / 65535), 1/3/4 channels
-        (grayscale / RGB / RGBA), BOTH planar configurations (chunky
-        and separate — tag 284; separate files carry one plane's
-        strips/tiles per channel, in channel order), STRIP and TILE
-        layouts (tags 322-325; edge tiles padded to the full tile per
-        TIFF6 §15 — padding excluded from the means), Compression = 1
-        (none), 5 (LZW, TIFF-variant MSB-first codes with the spec's
-        early-change width bump, per-segment reset), or 32773
-        (PackBits), and Predictor = 1 (none) or 2 (horizontal
-        differencing over SAMPLES, reversed per row within each
-        strip/tile). Compression = 7 (new-style JPEG-in-TIFF, TIFF
-        Tech Note 2) decodes through the embedded-JPEG statistics
-        decoder: per-segment streams (JPEGTables tag 347 spliced in
-        when present) combine pixel-weighted by their own SOF dims.
-        Old-style JPEG (6), padded-edge JPEG tiles, and exotic depths
-        raise NotImplementedError (the PIL gate); malformed structures
-        raise ValueError."""
-        import array as _array
-        import struct
-        import sys as _sys
-
-        if content[:4] not in TIFF_MAGICS:
-            raise ValueError("not a TIFF (bad signature)")
-        bo = "<" if content[:2] == b"II" else ">"
-
-        def u16(off):
-            return struct.unpack_from(bo + "H", content, off)[0]
-
-        def u32(off):
-            return struct.unpack_from(bo + "I", content, off)[0]
-
-        try:
-            ifd = u32(4)
-            n_tags = u16(ifd)
-        except struct.error as e:
-            raise ValueError("TIFF truncated before IFD") from e
-        tags: dict[int, list[int]] = {}
-        type_size = {1: 1, 3: 2, 4: 4, 7: 1}  # 7=UNDEFINED: raw bytes
-        for i in range(n_tags):
-            off = ifd + 2 + 12 * i
-            if off + 12 > len(content):
-                raise ValueError("TIFF IFD truncated")
-            tag, typ = u16(off), u16(off + 2)
-            count = u32(off + 4)
-            if typ not in type_size:  # rational/sbyte/...: not needed
-                continue
-            if count == 0:  # corrupt zero-count tag: treat as absent —
-                continue  # an empty value list would crash one(tag)[0]
-            sz = type_size[typ] * count
-            voff = off + 8 if sz <= 4 else u32(off + 8)
-            if voff + sz > len(content):
-                raise ValueError("TIFF tag value out of bounds")
-            rd = u16 if typ == 3 else (u32 if typ == 4 else
-                                       lambda o: content[o])
-            step = type_size[typ]
-            tags[tag] = [rd(voff + j * step) for j in range(count)]
-
-        def one(tag, default=None):
-            v = tags.get(tag)
-            if v is None:
-                if default is None:
-                    raise ValueError(f"TIFF missing required tag {tag}")
-                return default
-            return v[0]
-
-        width = one(256)
-        height = one(257)
-        if not width or not height:
-            raise ValueError("bad TIFF dimensions")
-        compression = one(259, 1)
-        if compression not in (1, 5, 32773) and not (
-            compression == 7 and jpeg_stats is not None
-        ):
-            raise NotImplementedError(
-                f"stdlib TIFF path supports none/LZW/PackBits/JPEG "
-                f"(compression {compression})"
-            )
-        bits = tags.get(258, [8])
-        depth = bits[0]
-        if depth not in (8, 16) or any(b != depth for b in bits):
-            raise NotImplementedError(
-                "stdlib TIFF path supports uniform 8/16-bit samples only"
-            )
-        ch = one(277, 1)
-        if ch not in (1, 3, 4):
-            raise NotImplementedError(
-                f"stdlib TIFF path supports 1/3/4 samples (got {ch})"
-            )
-        planar = one(284, 1)
-        if planar not in (1, 2):  # only two values defined by TIFF6
-            raise ValueError(f"bad TIFF planar configuration {planar}")
-        planes = ch if planar == 2 else 1
-        pch = 1 if planar == 2 else ch  # components per plane
-
-        if compression == 7:
-            # new-style JPEG-in-TIFF (TIFF Tech Note 2): each strip or
-            # tile is an independent — possibly abbreviated — JPEG
-            # stream; tag 347 (JPEGTables) holds shared tables as an
-            # SOI..EOI stream whose body splices after each segment's
-            # SOI. Segment dims come from each JPEG's own SOF, so the
-            # per-segment means combine pixel-weighted; if the summed
-            # segment area exceeds width×height the file has padded
-            # edge tiles, which a mean-only decode cannot exclude —
-            # that variant routes to the PIL gate.
-            tables = b""
-            if 347 in tags:
-                tb = bytes(tags[347])
-                if (len(tb) < 4 or tb[:2] != b"\xff\xd8"
-                        or tb[-2:] != b"\xff\xd9"):
-                    raise ValueError("bad JPEGTables stream")
-                tables = tb[2:-2]
-            if 322 in tags or 323 in tags or 324 in tags or 325 in tags:
-                offs, cnts = tags.get(324), tags.get(325)
-            else:
-                offs, cnts = tags.get(273), tags.get(279)
-            if not offs or not cnts or len(offs) != len(cnts):
-                raise ValueError("TIFF JPEG segment offsets missing")
-            tot_px = 0
-            sums = jch = None
-            for so, sc in zip(offs, cnts):
-                seg = content[so : so + sc]
-                if len(seg) != sc:
-                    raise ValueError("TIFF segment out of bounds")
-                if seg[:2] != b"\xff\xd8":
-                    raise ValueError("TIFF JPEG segment missing SOI")
-                sw, sh, sch, sm = jpeg_stats(seg[:2] + tables + seg[2:])
-                if jch is None:
-                    jch, sums = sch, [0.0] * sch
-                elif sch != jch:
-                    raise ValueError(
-                        "TIFF JPEG segments disagree on channel count"
-                    )
-                n = sw * sh
-                tot_px += n
-                for c in range(sch):
-                    sums[c] += sm[c] * n
-            if tot_px != width * height:
-                raise NotImplementedError(
-                    "JPEG-in-TIFF with padded edge segments needs PIL"
-                )
-            return width, height, jch, [s / tot_px for s in sums]
-        predictor = one(317, 1)
-        if predictor not in (1, 2):
-            raise NotImplementedError(
-                f"stdlib TIFF path supports predictor none/horizontal "
-                f"only (got {predictor})"
-            )
-
-        def _lzw(data):
-            """TIFF-variant LZW (TIFF6 §13): MSB-first codes, Clear=256,
-            EOI=257, width 9→12 with the spec's EARLY-CHANGE bump (the
-            encoder's off-by-one: width grows when entry 510/1022/2046
-            is added, one code before the table actually fills). Each
-            strip/tile is an independent stream (caller resets)."""
-            out = bytearray()
-            table = [bytes((i,)) for i in range(256)] + [b"", b""]
-            nbits, acc, nacc = 9, 0, 0
-            prev = None
-            for byte in data:
-                acc = (acc << 8) | byte
-                nacc += 8
-                while nacc >= nbits:
-                    code = (acc >> (nacc - nbits)) & ((1 << nbits) - 1)
-                    nacc -= nbits
-                    acc &= (1 << nacc) - 1
-                    if code == 256:  # ClearCode
-                        del table[258:]
-                        nbits, prev = 9, None
-                        continue
-                    if code == 257:  # EOI
-                        return bytes(out)
-                    if prev is None:
-                        if code > 255:
-                            raise ValueError(
-                                "TIFF LZW first code after clear not literal"
-                            )
-                        entry = table[code]
-                    elif code < len(table):
-                        entry = table[code]
-                        table.append(prev + entry[:1])
-                    elif code == len(table):  # the KwKwK case
-                        entry = prev + prev[:1]
-                        table.append(entry)
-                    else:
-                        raise ValueError("TIFF LZW code out of range")
-                    out += entry
-                    prev = entry
-                    # width bump is TWO below the table ceiling: one for
-                    # the spec's early change, one because the decoder's
-                    # table trails the encoder's by the deferred entry
-                    if len(table) == (1 << nbits) - 2 and nbits < 12:
-                        nbits += 1
-            return bytes(out)  # missing EOI: tolerated (common writers)
-
-        def _segment(off, cnt):
-            """One strip/tile decompressed to raw samples."""
-            chunk = content[off : off + cnt]
-            if len(chunk) != cnt:
-                raise ValueError("TIFF segment out of bounds")
-            if compression == 1:
-                return bytes(chunk)
-            if compression == 5:
-                return _lzw(chunk)
-            raw = bytearray()  # PackBits (RFC-style RLE)
-            p = 0
-            while p < len(chunk):
-                n = chunk[p]
-                p += 1
-                if n < 128:  # literal run of n+1 bytes
-                    lit = chunk[p : p + n + 1]
-                    if len(lit) != n + 1:
-                        raise ValueError("TIFF PackBits truncated")
-                    raw += lit
-                    p += n + 1
-                elif n > 128:  # repeat next byte 257-n times
-                    if p >= len(chunk):
-                        raise ValueError("TIFF PackBits truncated")
-                    raw += bytes([chunk[p]]) * (257 - n)
-                    p += 1
-                # n == 128: no-op per spec
-            return bytes(raw)
-
-        def _samples(raw):
-            """Decompressed bytes -> indexable sample sequence (bytes
-            for 8-bit; ``array('H')`` in native order for 16-bit)."""
-            if depth == 8:
-                return raw
-            if len(raw) & 1:
-                raw = raw[:-1]  # odd tail can only be writer padding
-            a = _array.array("H")
-            a.frombytes(bytes(raw))
-            if (bo == "<") != (_sys.byteorder == "little"):
-                a.byteswap()
-            return a
-
-        def _unpredict(smp, row_px):
-            """Reverse horizontal differencing (predictor 2) in rows of
-            ``row_px`` pixels — per strip/tile/plane, over samples."""
-            if predictor != 2:
-                return smp
-            smp = list(smp)
-            stride = row_px * pch
-            mask = (1 << depth) - 1
-            for r0 in range(0, len(smp), stride):
-                for i in range(r0 + pch, min(r0 + stride, len(smp))):
-                    smp[i] = (smp[i] + smp[i - pch]) & mask
-            return smp
-
-        sums = [0] * ch
-        if 322 in tags or 323 in tags or 324 in tags or 325 in tags:
-            # tile layout (TIFF6 §15): row-major grid of tw×th tiles,
-            # edge tiles padded to full size — padding never counted;
-            # planar-separate files store one full grid per channel
-            if 322 not in tags or 323 not in tags:
-                raise ValueError("TIFF tile dimensions missing")
-            tw, th = one(322), one(323)
-            if not tw or not th:
-                raise ValueError("bad TIFF tile dimensions")
-            t_offs, t_cnts = tags.get(324), tags.get(325)
-            if not t_offs or not t_cnts or len(t_offs) != len(t_cnts):
-                raise ValueError("TIFF tile offsets/byte-counts missing")
-            across = (width + tw - 1) // tw
-            down = (height + th - 1) // th
-            if len(t_offs) < across * down * planes:
-                raise ValueError("TIFF tile count mismatch")
-            t_need = tw * th * pch
-            for p in range(planes):
-                for idx in range(across * down):
-                    smp = _samples(
-                        _segment(*[
-                            t[p * across * down + idx]
-                            for t in (t_offs, t_cnts)
-                        ])
-                    )
-                    if len(smp) < t_need:
-                        raise ValueError("TIFF tile data length mismatch")
-                    smp = _unpredict(smp[:t_need], tw)
-                    vw = min(tw, width - (idx % across) * tw)
-                    vh = min(th, height - (idx // across) * th)
-                    if vw == tw:
-                        band = smp[: vh * tw * pch]
-                        if planar == 2:
-                            sums[p] += sum(band)
-                        else:
-                            for c in range(ch):
-                                sums[c] += sum(band[c::ch])
-                    else:
-                        for y in range(vh):
-                            row = smp[y * tw * pch : (y * tw + vw) * pch]
-                            if planar == 2:
-                                sums[p] += sum(row)
-                            else:
-                                for c in range(ch):
-                                    sums[c] += sum(row[c::ch])
-        else:
-            offsets = tags.get(273)
-            counts = tags.get(279)
-            if not offsets or not counts or len(offsets) != len(counts):
-                raise ValueError("TIFF strip offsets/byte-counts missing")
-            if len(offsets) % planes:
-                raise ValueError("TIFF strip count not divisible by planes")
-            spp = len(offsets) // planes  # strips per plane
-            need = width * height * pch
-            for p in range(planes):
-                raw = bytearray()
-                for so, sc in zip(
-                    offsets[p * spp : (p + 1) * spp],
-                    counts[p * spp : (p + 1) * spp],
-                ):
-                    raw += _segment(so, sc)
-                smp = _samples(raw)
-                if len(smp) < need:
-                    raise ValueError("TIFF pixel data length mismatch")
-                smp = _unpredict(smp[:need], width)  # strips may pad at end
-                if planar == 2:
-                    sums[p] += sum(smp)
-                else:
-                    for c in range(ch):
-                        sums[c] += sum(smp[c::ch])
-        photometric = one(262, 1)
-        if photometric not in (0, 1, 2):
-            raise NotImplementedError(
-                f"stdlib TIFF path supports gray/RGB photometric "
-                f"(got {photometric})"
-            )
-        n_px = width * height
-        maxv = float((1 << depth) - 1)
-        means = [s / (n_px * maxv) for s in sums]
-        if photometric == 0:  # WhiteIsZero: 0 is white -> invert
-            means = [1.0 - m for m in means]
-        return width, height, ch, means
-
-    return decode_tiff
-
-
-JPEG_MAGIC = b"\xff\xd8\xff"
-
-
-def _make_jpeg_decoder():
-    """Factory for the stdlib-only JPEG DC-statistics decoder (same
-    by-value pickling rationale as :func:`_make_png_decoder`)."""
-
-    def _build_huff(counts, symbols):
-        # canonical code → (max_code, val_offset) per length for a
-        # fast compare-based decoder (ITU T.81 F.2.2.3); shared by the
-        # baseline and progressive paths
-        maxcode = [-1] * 17
-        valptr = [0] * 17
-        mincode = [0] * 17
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            if counts[length - 1] == 0:
-                maxcode[length] = -1
-            else:
-                valptr[length] = k
-                mincode[length] = code
-                code += counts[length - 1]
-                k += counts[length - 1]
-                maxcode[length] = code - 1
-            code <<= 1
-        return {
-            "maxcode": maxcode,
-            "mincode": mincode,
-            "valptr": valptr,
-            "symbols": symbols,
-        }
-
-    def _make_bitreader(data: bytes):
-        """MSB-first bit reader over one scan's entropy slice: 0xFF00
-        unstuffed, restart markers left for sync_restart(), EOI/next
-        marker padded with 1-bits per spec. Same contract as the
-        baseline path's inline reader."""
-        state = {"bytepos": 0, "cur": 0, "nbits": 0}
-
-        def fill():
-            while state["nbits"] <= 24:
-                bp = state["bytepos"]
-                if bp >= len(data):
-                    raise ValueError("JPEG entropy stream truncated")
-                b = data[bp]
-                if b == 0xFF:
-                    nxt = data[bp + 1] if bp + 1 < len(data) else None
-                    if nxt == 0x00:
-                        state["bytepos"] += 2
-                    elif nxt is not None and 0xD0 <= nxt <= 0xD7:
-                        state["cur"] <<= 8
-                        state["nbits"] += 8
-                        continue
-                    else:
-                        state["cur"] = (state["cur"] << 8) | 0xFF
-                        state["nbits"] += 8
-                        continue
-                else:
-                    state["bytepos"] += 1
-                state["cur"] = (state["cur"] << 8) | b
-                state["nbits"] += 8
-
-        def read_bits(n):
-            if n == 0:
-                return 0
-            fill()
-            v = (state["cur"] >> (state["nbits"] - n)) & ((1 << n) - 1)
-            state["nbits"] -= n
-            state["cur"] &= (1 << state["nbits"]) - 1
-            return v
-
-        def sync_restart():
-            state["cur"] = 0
-            state["nbits"] = 0
-            bp = state["bytepos"]
-            while bp + 1 < len(data):
-                if data[bp] == 0xFF and 0xD0 <= data[bp + 1] <= 0xD7:
-                    state["bytepos"] = bp + 2
-                    return
-                bp += 1
-            raise ValueError("JPEG restart marker missing")
-
-        def decode_symbol(table):
-            code = 0
-            for length in range(1, 17):
-                code = (code << 1) | read_bits(1)
-                if table["maxcode"][length] >= code >= table["mincode"][length]:
-                    idx = (
-                        table["valptr"][length]
-                        + code
-                        - table["mincode"][length]
-                    )
-                    return table["symbols"][idx]
-            raise ValueError("invalid JPEG Huffman code")
-
-        return read_bits, sync_restart, decode_symbol
-
-    def _scan_data_end(content: bytes, start: int) -> int:
-        """Index one past a scan's entropy data: the first 0xFF that
-        introduces a real marker (not byte stuffing, not RSTn)."""
-        p = start
-        while p + 1 < len(content):
-            if content[p] == 0xFF and content[p + 1] != 0x00 and not (
-                0xD0 <= content[p + 1] <= 0xD7
-            ):
-                return p
-            p += 1
-        return len(content)
-
-    def _progressive(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Progressive-JPEG (SOF2) statistics with the stdlib only —
-        the channel-mean contract needs DC coefficients alone (AC
-        terms integrate to zero across a block), and progressive
-        streams carry DC in dedicated scans: the FIRST DC scan codes
-        ``DC >> Al`` with baseline-style Huffman diffs, and each DC
-        REFINEMENT scan appends one raw bit per block. This decoder
-        entropy-decodes exactly those scans (so the reconstructed DCs
-        are EXACT once the stream refines to Al=0, as encoder outputs
-        do) and SKIPS every AC scan at the byte level — no Huffman
-        work at all for the ~95% of the stream that can't move a
-        block mean. Memory is one int per 8×8 block per component
-        (refinement needs per-block state; the baseline path's
-        running sums don't suffice) — ~2 MB per 64-megapixel image.
-        Restart markers, byte stuffing, subsampling, non-interleaved
-        DC scans, and between-scan DHT/DQT redefinition are honored.
-        Arithmetic coding raises NotImplementedError (the PIL gate);
-        malformed structures raise ValueError.
-
-        Reference parity: the reference repo ships decoded media
-        features from a codec library; this keeps the same FEATURE
-        contract (dims + channel means) stdlib-only for the dominant
-        web-crawl JPEG flavor (progressive outnumbers baseline in
-        large crawls)."""
-        import struct
-
-        pos = 2
-        qt: dict[int, list[int]] = {}
-        huff: dict[tuple[int, int], dict] = {}
-        comps = None
-        width = height = None
-        restart_interval = 0
-        dcarr: dict[int, list[int]] = {}  # cid -> padded block grid
-        stride: dict[int, int] = {}  # cid -> padded blocks per row
-        hmax = vmax = mcu_cols = mcu_rows = 0
-        saw_dc_first: set[int] = set()
-
-        while pos + 2 <= len(content):
-            if content[pos] != 0xFF:
-                raise ValueError(f"JPEG marker expected at {pos}")
-            marker = content[pos + 1]
-            pos += 2
-            if marker == 0xFF:
-                pos -= 1
-                continue
-            if marker == 0xD8:
-                continue
-            if marker == 0xD9:  # EOI
-                break
-            if pos + 2 > len(content):
-                raise ValueError("JPEG truncated in segment header")
-            (seg_len,) = struct.unpack_from(">H", content, pos)
-            seg = content[pos + 2 : pos + seg_len]
-            if len(seg) != seg_len - 2:
-                raise ValueError("JPEG segment truncated")
-            if marker == 0xDB:  # DQT
-                p = 0
-                while p < len(seg):
-                    pq, tq_id = seg[p] >> 4, seg[p] & 0x0F
-                    p += 1
-                    n = 64 * (2 if pq else 1)
-                    raw = seg[p : p + n]
-                    if len(raw) < n:
-                        raise ValueError("DQT truncated")
-                    qt[tq_id] = (
-                        list(struct.unpack(">64H", raw)) if pq else list(raw)
-                    )
-                    p += n
-            elif marker == 0xC4:  # DHT (may be redefined between scans)
-                p = 0
-                while p < len(seg):
-                    tc, th = seg[p] >> 4, seg[p] & 0x0F
-                    counts = list(seg[p + 1 : p + 17])
-                    if len(counts) < 16:
-                        raise ValueError("DHT truncated")
-                    n = sum(counts)
-                    symbols = list(seg[p + 17 : p + 17 + n])
-                    if len(symbols) < n:
-                        raise ValueError("DHT truncated")
-                    huff[(tc, th)] = _build_huff(counts, symbols)
-                    p += 17 + n
-            elif marker == 0xC2:  # SOF2
-                if comps is not None:
-                    raise ValueError("duplicate SOF in JPEG")
-                _prec, height, width, nc = struct.unpack_from(">BHHB", seg, 0)
-                if not width or not height or not nc:
-                    raise ValueError("bad JPEG dimensions")
-                comps = []
-                for i in range(nc):
-                    cid, hv, tq_id = seg[6 + 3 * i : 9 + 3 * i]
-                    h, v = hv >> 4, hv & 0x0F
-                    if not h or not v:
-                        raise ValueError("bad JPEG sampling factors")
-                    comps.append((cid, h, v, tq_id))
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcu_cols = -(-width // (8 * hmax))
-                mcu_rows = -(-height // (8 * vmax))
-                # refinement needs one int per block; cap the total so
-                # a corrupt/hostile header (65535×65535, h=v=4) can't
-                # force a multi-GB allocation in a mapInPandas worker.
-                # 2^23 blocks ≈ 500 MP of luma — far past web crawls.
-                total_blocks = sum(
-                    mcu_cols * h * mcu_rows * v for _c, h, v, _t in comps
-                )
-                if total_blocks > (1 << 23):
-                    raise NotImplementedError(
-                        "progressive JPEG too large for the stdlib "
-                        "DC-stats path (needs PIL)"
-                    )
-                for cid, h, v, _tq in comps:
-                    stride[cid] = mcu_cols * h
-                    dcarr[cid] = [0] * (mcu_cols * h * mcu_rows * v)
-            elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9,
-                            0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                raise ValueError(
-                    "unexpected second frame type in progressive path"
-                )
-            elif marker == 0xDD:  # DRI
-                (restart_interval,) = struct.unpack_from(">H", seg, 0)
-            elif marker == 0xDA:  # SOS
-                if comps is None:
-                    raise ValueError("JPEG SOS before SOF")
-                by_id = {c[0]: c for c in comps}
-                ns = seg[0]
-                if len(seg) < 1 + 2 * ns + 3:
-                    raise ValueError("JPEG SOS truncated")
-                scomps = []
-                for i in range(ns):
-                    cid, tables = seg[1 + 2 * i], seg[2 + 2 * i]
-                    if cid not in by_id:
-                        raise ValueError("SOS references unknown component")
-                    scomps.append((cid, tables >> 4))
-                ss = seg[1 + 2 * ns]
-                se = seg[2 + 2 * ns]
-                ah_al = seg[3 + 2 * ns]
-                ah, al = ah_al >> 4, ah_al & 0x0F
-                if ss == 0 and se != 0:
-                    # T.81 G.1.1.1.1: a DC scan has Se=0 — this also
-                    # rejects a baseline stream re-marked as SOF2
-                    # (its interleaved Ss=0/Se=63 scan is neither a
-                    # valid DC nor a valid AC progressive scan)
-                    raise ValueError(
-                        "bad progressive spectral selection (Ss=0, Se!=0)"
-                    )
-                start = pos + seg_len
-                end = _scan_data_end(content, start)
-                if ss != 0:
-                    pos = end  # AC scan: bytes can't move a block mean
-                    continue
-                # the slice includes the terminating marker bytes so the
-                # reader pads trailing reads with 1-bits per spec (same
-                # contract as the baseline path, where EOI follows the
-                # entropy data) instead of raising at the scan boundary
-                read_bits, sync_restart, decode_symbol = _make_bitreader(
-                    content[start : min(end + 2, len(content))]
-                )
-                interleaved = ns > 1
-                if interleaved:
-                    units = mcu_rows * mcu_cols
-                else:
-                    cid, _ = scomps[0]
-                    _, h, v, _tq = by_id[cid]
-                    cw = -(-width * h // (8 * hmax))  # blocks per row
-                    chh = -(-height * v // (8 * vmax))
-                    units = cw * chh
-                pred = {cid: 0 for cid, _t in scomps}
-                seen = 0
-                for u in range(units):
-                    if (
-                        restart_interval
-                        and seen
-                        and seen % restart_interval == 0
-                    ):
-                        sync_restart()
-                        pred = {cid: 0 for cid, _t in scomps}
-                    if interleaved:
-                        my, mx = divmod(u, mcu_cols)
-                        blocks = []
-                        for cid, tdc in scomps:
-                            _, h, v, _tq = by_id[cid]
-                            for bi in range(h * v):
-                                by_, bx = divmod(bi, h)
-                                blocks.append(
-                                    (cid, tdc,
-                                     (my * v + by_) * stride[cid]
-                                     + mx * h + bx)
-                                )
-                    else:
-                        cid, tdc = scomps[0]
-                        r, c = divmod(u, cw)
-                        blocks = [(cid, tdc, r * stride[cid] + c)]
-                    for cid, tdc, idx in blocks:
-                        if ah == 0:  # first DC pass: Huffman diffs
-                            if (0, tdc) not in huff:
-                                raise ValueError(
-                                    "JPEG scan references missing DHT"
-                                )
-                            t = decode_symbol(huff[(0, tdc)])
-                            if t > 11:
-                                raise ValueError("bad JPEG DC category")
-                            diff = read_bits(t)
-                            if t and diff < (1 << (t - 1)):
-                                diff -= (1 << t) - 1
-                            pred[cid] += diff
-                            dcarr[cid][idx] = pred[cid] << al
-                            saw_dc_first.add(cid)
-                        else:  # refinement: one raw bit per block
-                            if cid not in saw_dc_first:
-                                raise ValueError(
-                                    "DC refinement before first DC scan"
-                                )
-                            if read_bits(1):
-                                dcarr[cid][idx] |= 1 << al
-                    seen += 1
-                pos = end
-                continue
-            elif marker in (0xC8, 0xF7):  # JPG / SOF55 (JPEG-LS)
-                raise NotImplementedError("JPEG-LS needs PIL")
-            pos += seg_len
-
-        if comps is None:
-            raise ValueError("JPEG missing SOF")
-        if not saw_dc_first or len(saw_dc_first) < len(comps):
-            raise ValueError("progressive JPEG missing a DC scan")
-        means_comp = []
-        for cid, h, v, tq_id in comps:
-            if tq_id not in qt:
-                raise ValueError("JPEG scan references missing DQT")
-            q0 = qt[tq_id][0]
-            cw = -(-width * h // hmax)  # visible pixels per comp plane
-            chh = -(-height * v // vmax)
-            s = w = 0
-            arr = dcarr[cid]
-            bw = stride[cid]
-            for idx, dc in enumerate(arr):
-                r, c = divmod(idx, bw)
-                vis = max(0, min(8, cw - 8 * c)) * max(
-                    0, min(8, chh - 8 * r)
-                )
-                if vis:
-                    s += dc * vis
-                    w += vis
-            if not w:
-                raise ValueError("progressive JPEG has no visible blocks")
-            m = s / w * q0 / 8.0 + 128.0
-            means_comp.append(min(255.0, max(0.0, m)) / 255.0)
-        if len(comps) == 3:
-            y, cb, cr = means_comp
-            off = 128.0 / 255.0
-            r = y + 1.402 * (cr - off)
-            g = y - 0.344136 * (cb - off) - 0.714136 * (cr - off)
-            b = y + 1.772 * (cb - off)
-            means = [min(1.0, max(0.0, x)) for x in (r, g, b)]
-            return width, height, 3, means
-        return width, height, len(comps), means_comp
-
-    def _stats(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Baseline-JPEG statistics with the stdlib only: returns
-        ``(width, height, channels, per_channel_means)`` — means in
-        [0, 1], RGB-converted for 3-component YCbCr images. Block
-        means are weighted by each block's VISIBLE pixel count, so
-        images whose dimensions are not MCU-aligned don't count the
-        encoder's edge-padding pixels (exact for flat edge blocks,
-        the best DC-only estimator otherwise).
-
-        A full pixel decode (Huffman + dequant + IDCT + upsampling)
-        is out of scope without a codec library, but the FEATURE
-        contract only needs dimensions and channel means, and those
-        come from the DC coefficients alone: the mean of an 8×8
-        block is ``DC·Q[0]/8 + 128`` (all AC terms integrate to zero
-        across a block), and YCbCr→RGB is linear, so component-plane
-        means convert to RGB means. EXACT for grayscale and for
-        MCU-aligned images with no clamped pixels; a close DC-only
-        APPROXIMATION otherwise — for subsampled (4:2:0/4:2:2)
-        non-aligned images the chroma-plane mean weights edge pixels
-        differently than the upsampled full-res plane would, and the
-        final per-mean [0,1] clamp is not the same as clamping each
-        pixel before averaging when values saturate. The
-        scan is entropy-decoded start to finish (AC coefficients are
-        Huffman-skipped, never dequantized), honoring restart
-        markers, byte stuffing, and 4:2:0/4:2:2 sampling — this is
-        the classic "DC thumbnail" pass at 1/64 of full decode cost.
-        Progressive (SOF2) streams route to the dedicated
-        ``_progressive`` path (DC scans decoded, AC scans byte-
-        skipped); arithmetic/hierarchical JPEGs raise
-        NotImplementedError (the PIL gate); malformed streams raise
-        ValueError."""
-        import struct
-
-        if content[:3] != JPEG_MAGIC:
-            raise ValueError("not a JPEG (bad signature)")
-        pos = 2
-        qt: dict[int, list[int]] = {}
-        huff: dict[tuple[int, int], dict] = {}  # (class, id) -> decode maps
-        comps = None  # list of (comp_id, h, v, tq)
-        width = height = None
-        restart_interval = 0
-        scan = None
-
-        while True:
-            if pos + 4 > len(content):
-                raise ValueError("JPEG truncated before SOS")
-            if content[pos] != 0xFF:
-                raise ValueError(f"JPEG marker expected at {pos}")
-            marker = content[pos + 1]
-            pos += 2
-            if marker == 0xFF:  # optional 0xFF fill byte before a marker
-                pos -= 1
-                continue
-            if marker == 0xD8:  # stray SOI
-                continue
-            if marker == 0xD9:
-                raise ValueError("JPEG EOI before any scan")
-            (seg_len,) = struct.unpack_from(">H", content, pos)
-            seg = content[pos + 2 : pos + seg_len]
-            if len(seg) != seg_len - 2:
-                raise ValueError("JPEG segment truncated")
-            if marker == 0xDB:  # DQT
-                p = 0
-                while p < len(seg):
-                    pq, tq_id = seg[p] >> 4, seg[p] & 0x0F
-                    p += 1
-                    n = 64 * (2 if pq else 1)
-                    raw = seg[p : p + n]
-                    if len(raw) < n:
-                        raise ValueError("DQT truncated")
-                    if pq:
-                        table = list(struct.unpack(f">{64}H", raw))
-                    else:
-                        table = list(raw)
-                    qt[tq_id] = table
-                    p += n
-            elif marker == 0xC4:  # DHT
-                p = 0
-                while p < len(seg):
-                    tc, th = seg[p] >> 4, seg[p] & 0x0F
-                    counts = list(seg[p + 1 : p + 17])
-                    n = sum(counts)
-                    symbols = list(seg[p + 17 : p + 17 + n])
-                    if len(symbols) < n:
-                        raise ValueError("DHT truncated")
-                    huff[(tc, th)] = _build_huff(counts, symbols)
-                    p += 17 + n
-            elif marker in (0xC0, 0xC1):  # SOF0/1: baseline sequential
-                _prec, height, width, nc = struct.unpack_from(">BHHB", seg, 0)
-                comps = []
-                for i in range(nc):  # per-component triples start at 6
-                    cid, hv, tq_id = seg[6 + 3 * i : 9 + 3 * i]
-                    comps.append((cid, hv >> 4, hv & 0x0F, tq_id))
-            elif marker == 0xC2:  # SOF2: progressive — dedicated path
-                return _progressive(content)
-            elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                            0xCD, 0xCE, 0xCF):
-                raise NotImplementedError(
-                    f"JPEG SOF 0x{marker:02x} (hierarchical/arithmetic) needs PIL"
-                )
-            elif marker == 0xDD:  # DRI
-                (restart_interval,) = struct.unpack_from(">H", seg, 0)
-            elif marker == 0xDA:  # SOS
-                ns = seg[0]
-                scan = []
-                for i in range(ns):
-                    cid, tables = seg[1 + 2 * i], seg[2 + 2 * i]
-                    scan.append((cid, tables >> 4, tables & 0x0F))
-                pos += seg_len
-                break
-            # APPn/COM/others: skipped
-            pos += seg_len
-
-        if comps is None or width is None or not width or not height:
-            raise ValueError("JPEG missing SOF before SOS")
-        if scan is None or len(scan) != len(comps):
-            raise NotImplementedError(
-                "multi-scan JPEG (non-interleaved) needs PIL"
-            )
-        by_id = {c[0]: c for c in comps}
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcu_cols = -(-width // (8 * hmax))
-        mcu_rows = -(-height // (8 * vmax))
-
-        data = content[pos:]
-        # bit reader over the entropy stream: MSB-first, 0xFF00
-        # unstuffed, RSTn handled by the MCU loop
-        bytepos = 0
-        cur = 0
-        nbits = 0
-
-        def fill():
-            nonlocal bytepos, cur, nbits
-            while nbits <= 24:
-                if bytepos >= len(data):
-                    raise ValueError("JPEG entropy stream truncated")
-                b = data[bytepos]
-                if b == 0xFF:
-                    nxt = data[bytepos + 1] if bytepos + 1 < len(data) else None
-                    if nxt == 0x00:
-                        bytepos += 2
-                    elif nxt is not None and 0xD0 <= nxt <= 0xD7:
-                        # restart marker: left in place for
-                        # sync_restart(); pad with 0-bits meanwhile
-                        cur = cur << 8
-                        nbits += 8
-                        continue
-                    else:
-                        # EOI or next marker: pad with 1-bits per spec
-                        cur = (cur << 8) | 0xFF
-                        nbits += 8
-                        continue
-                else:
-                    bytepos += 1
-                cur = (cur << 8) | b
-                nbits += 8
-
-        def read_bits(n):
-            nonlocal cur, nbits
-            if n == 0:
-                return 0
-            fill()
-            v = (cur >> (nbits - n)) & ((1 << n) - 1)
-            nbits -= n
-            cur &= (1 << nbits) - 1
-            return v
-
-        def decode_symbol(table):
-            code = 0
-            for length in range(1, 17):
-                code = (code << 1) | read_bits(1)
-                if table["maxcode"][length] >= code >= table["mincode"][length]:
-                    idx = table["valptr"][length] + code - table["mincode"][length]
-                    return table["symbols"][idx]
-            raise ValueError("invalid JPEG Huffman code")
-
-        def sync_restart():
-            nonlocal bytepos, cur, nbits
-            # discard partial bits, expect FFDn in the raw byte stream
-            cur = 0
-            nbits = 0
-            while bytepos + 1 < len(data):
-                if data[bytepos] == 0xFF and 0xD0 <= data[bytepos + 1] <= 0xD7:
-                    bytepos += 2
-                    return
-                bytepos += 1
-            raise ValueError("JPEG restart marker missing")
-
-        dc_pred = {cid: 0 for cid, _, _ in scan}
-        dc_sum = {cid: 0 for cid, _, _ in scan}
-        dc_w = {cid: 0 for cid, _, _ in scan}
-        # component-plane pixel dims: blocks overhanging these edges
-        # are encoder padding — weight every block's DC by its VISIBLE
-        # pixel count so non-MCU-aligned images don't count padding
-        comp_dims = {
-            cid: (-(-width * h // hmax), -(-height * v // vmax))
-            for cid, h, v, _tq in comps
-        }
-        mcu_seen = 0
-        for my in range(mcu_rows):
-            for mx in range(mcu_cols):
-                if (
-                    restart_interval
-                    and mcu_seen
-                    and mcu_seen % restart_interval == 0
-                ):
-                    sync_restart()
-                    for cid in dc_pred:
-                        dc_pred[cid] = 0
-                for cid, tdc, tac in scan:
-                    _, h, v, _tq = by_id[cid]
-                    cw, chh = comp_dims[cid]
-                    for bi in range(h * v):
-                        by_, bx = divmod(bi, h)
-                        if (0, tdc) not in huff or (1, tac) not in huff:
-                            raise ValueError("JPEG scan references missing DHT")
-                        t = decode_symbol(huff[(0, tdc)])
-                        if t > 11:
-                            raise ValueError("bad JPEG DC category")
-                        diff = read_bits(t)
-                        if t and diff < (1 << (t - 1)):
-                            diff -= (1 << t) - 1
-                        dc_pred[cid] += diff
-                        vis = max(0, min(8, cw - 8 * (mx * h + bx))) * max(
-                            0, min(8, chh - 8 * (my * v + by_))
-                        )
-                        dc_sum[cid] += dc_pred[cid] * vis
-                        dc_w[cid] += vis
-                        k = 1
-                        while k <= 63:  # Huffman-skip the AC run
-                            rs = decode_symbol(huff[(1, tac)])
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r + 1
-                            read_bits(s)
-                mcu_seen += 1
-
-        means_comp = []
-        for cid, _h, _v, tq_id in comps:
-            if tq_id not in qt:
-                raise ValueError("JPEG scan references missing DQT")
-            q0 = qt[tq_id][0]
-            m = dc_sum[cid] / dc_w[cid] * q0 / 8.0 + 128.0
-            means_comp.append(min(255.0, max(0.0, m)) / 255.0)
-        if len(comps) == 3:
-            y, cb, cr = means_comp
-            # JFIF YCbCr -> RGB is affine, and the mean is linear, so
-            # plane means convert exactly (modulo per-pixel clamping);
-            # arithmetic stays in [0,1] space, offsets are 128/255
-            off = 128.0 / 255.0
-            r = y + 1.402 * (cr - off)
-            g = y - 0.344136 * (cb - off) - 0.714136 * (cr - off)
-            b = y + 1.772 * (cb - off)
-            means = [min(1.0, max(0.0, v)) for v in (r, g, b)]
-            return width, height, 3, means
-        return width, height, len(comps), means_comp
-
-    def decode_jpeg_stats(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Public wrapper: any malformed-stream failure mode the parser
-        doesn't already name (short segments → struct.error/IndexError,
-        zero sampling factors → ZeroDivisionError, SOS referencing a
-        missing SOF component → KeyError) is normalized to ValueError
-        so the extract_features dispatch routes corrupt JPEGs to the
-        PIL fallback instead of aborting the whole mapInPandas pass."""
-        import struct
-
-        try:
-            return _stats(content)
-        except (struct.error, IndexError, KeyError, ZeroDivisionError) as e:
-            raise ValueError(f"malformed JPEG: {e!r}") from e
-
-    return decode_jpeg_stats
-
-
-decode_jpeg_stats = _make_jpeg_decoder()
-
-# constructed here (not next to the factory) so the closure can carry
-# the JPEG decoder BY VALUE for the compression=7 JPEG-in-TIFF path —
-# workers unpickle it without needing this package on their path
-decode_tiff = _make_tiff_decoder(decode_jpeg_stats)
-
-
-WEBP_RIFF = b"RIFF"  # + b"WEBP" at offset 8; lossless chunk tag b"VP8L"
-
-
-def _make_webp_decoder():
-    """Factory for the stdlib-only WebP-LOSSLESS (VP8L) decoder (same
-    by-value pickling rationale as :func:`_make_png_decoder`).
-
-    Implements the public "WebP Lossless Bitstream Specification":
-    LSB-first bit reader, simple and code-length-coded canonical
-    Huffman codes, the green/red/blue/alpha/distance code groups with
-    optional meta-Huffman (Huffman image), LZ77 backward references
-    (prefix-coded lengths, the 120-entry 2D neighborhood distance map,
-    plus linear distances past it), the hashed color cache, and all
-    four transforms in inverse order: predictor (modes 0-13 incl. the
-    Select and clamped add/subtract forms), cross-color, subtract-
-    green, and color indexing with sub-byte packing. Lossy WebP (VP8
-    chunk) and animations route to the PIL gate."""
-
-    def _dist_table():
-        # spec §4.2.2 neighborhood map: the 120 closest (dx, dy>=0)
-        # offsets, ordered by squared distance, then LARGER dy first,
-        # then positive dx before negative — generated from that rule
-        # rather than transcribed; the encoder twin round-trips
-        # table-coded distances against this same ordering
-        cand = [
-            (x, y)
-            for y in range(0, 12)
-            for x in range(-11, 12)
-            if y > 0 or x > 0
-        ]
-        cand.sort(key=lambda p: (p[0] * p[0] + p[1] * p[1], -p[1], p[0] < 0))
-        return cand[:120]
-
-    DIST = _dist_table()
-    CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12,
-                 13, 14, 15)
-
-    class _Br:
-        __slots__ = ("d", "pos")
-
-        def __init__(self, data, pos=0):
-            self.d = data
-            self.pos = pos  # bit offset; LSB-first within each byte
-
-        def bits(self, n):
-            d, p = self.d, self.pos
-            end = p + n
-            if end > len(d) * 8:
-                raise ValueError("VP8L bitstream truncated")
-            v = 0
-            got = 0
-            while p < end:
-                take = min(8 - (p & 7), end - p)
-                v |= ((d[p >> 3] >> (p & 7)) & ((1 << take) - 1)) << got
-                got += take
-                p += take
-            self.pos = end
-            return v
-
-    def _from_lengths(lengths):
-        """Canonical prefix code -> decoder tuple. One used symbol
-        decodes with zero bits; otherwise the code must be complete."""
-        used = [(s, l) for s, l in enumerate(lengths) if l]
-        if not used:
-            raise ValueError("VP8L empty huffman code")
-        if len(used) == 1:
-            return ("single", used[0][0], 0)
-        max_len = max(l for _s, l in used)
-        if sum(1 << (max_len - l) for _s, l in used) != 1 << max_len:
-            raise ValueError("VP8L incomplete huffman code")
-        bl_count = [0] * (max_len + 1)
-        for _s, l in used:
-            bl_count[l] += 1
-        next_code = [0] * (max_len + 1)
-        code = 0
-        for l in range(1, max_len + 1):
-            code = (code + bl_count[l - 1]) << 1
-            next_code[l] = code
-        table = {}
-        for s, l in sorted(used, key=lambda t: (t[1], t[0])):
-            table[(l, next_code[l])] = s
-            next_code[l] += 1
-        return ("table", table, max_len)
-
-    def _sym(br, dec):
-        if dec[0] == "single":
-            return dec[1]
-        table, max_len = dec[1], dec[2]
-        code = 0
-        for l in range(1, max_len + 1):
-            code = (code << 1) | br.bits(1)
-            s = table.get((l, code))
-            if s is not None:
-                return s
-        raise ValueError("VP8L invalid huffman code")
-
-    def _read_code(br, alphabet):
-        if br.bits(1):  # simple code: 1 or 2 symbols
-            n = br.bits(1) + 1
-            s0 = br.bits(8) if br.bits(1) else br.bits(1)
-            syms = [s0] + ([br.bits(8)] if n == 2 else [])
-            if any(s >= alphabet for s in syms) or len(set(syms)) != n:
-                raise ValueError("VP8L bad simple code symbols")
-            if n == 1:
-                return ("single", s0, 0)
-            lengths = [0] * alphabet
-            lengths[syms[0]] = lengths[syms[1]] = 1
-            return _from_lengths(lengths)
-        clc = [0] * 19
-        for i in range(br.bits(4) + 4):
-            clc[CLC_ORDER[i]] = br.bits(3)
-        clc_dec = _from_lengths(clc)
-        if br.bits(1):  # bounded number of coded lengths
-            max_symbol = 2 + br.bits(2 * br.bits(3) + 2)
-        else:
-            max_symbol = alphabet
-        lengths = [0] * alphabet
-        sym = 0
-        prev = 8
-        while sym < alphabet and max_symbol > 0:
-            max_symbol -= 1
-            cl = _sym(br, clc_dec)
-            if cl < 16:
-                lengths[sym] = cl
-                sym += 1
-                if cl:
-                    prev = cl
-                continue
-            if cl == 16:
-                rep, val = br.bits(2) + 3, prev
-            elif cl == 17:
-                rep, val = br.bits(3) + 3, 0
-            else:
-                rep, val = br.bits(7) + 11, 0
-            if sym + rep > alphabet:
-                raise ValueError("VP8L code length repeat overruns")
-            for _ in range(rep):
-                lengths[sym] = val
-                sym += 1
-        return _from_lengths(lengths)
-
-    def _sub(size, bits):
-        return (size + (1 << bits) - 1) >> bits
-
-    def _lz_val(br, code):
-        if code < 4:
-            return code + 1
-        extra = (code - 2) >> 1
-        return ((2 + (code & 1)) << extra) + br.bits(extra) + 1
-
-    def _p2d(code, w):
-        if code > 120:
-            return code - 120
-        dx, dy = DIST[code - 1]
-        d = dy * w + dx
-        return d if d >= 1 else 1
-
-    def _entropy_image(br, w, h, is_level0):
-        """One entropy-coded ARGB image (recursively used for
-        transform sub-images and the Huffman image)."""
-        cache_bits = 0
-        if br.bits(1):
-            cache_bits = br.bits(4)
-            if not 1 <= cache_bits <= 11:
-                raise ValueError("VP8L bad color cache size")
-        meta = None
-        n_groups = 1
-        if is_level0 and br.bits(1):
-            mbits = br.bits(3) + 2
-            mw, mh = _sub(w, mbits), _sub(h, mbits)
-            mimg = _entropy_image(br, mw, mh, False)
-            idx = [(p >> 8) & 0xFFFF for p in mimg]
-            n_groups = max(idx) + 1
-            meta = (mbits, mw, idx)
-        g_alpha = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-        groups = [
-            tuple(
-                _read_code(br, a)
-                for a in (g_alpha, 256, 256, 256, 40)
-            )
-            for _ in range(n_groups)
-        ]
-        cache = [0] * (1 << cache_bits) if cache_bits else None
-        npx = w * h
-        pix = [0] * npx
-        pos = 0
-        G, R, B, A, D = groups[0]
-        while pos < npx:
-            if meta:
-                mbits, mw, idx = meta
-                x, y = pos % w, pos // w
-                G, R, B, A, D = groups[idx[(y >> mbits) * mw + (x >> mbits)]]
-            s = _sym(br, G)
-            if s < 256:
-                red = _sym(br, R)  # stream order: green,red,blue,alpha
-                blue = _sym(br, B)
-                p = (_sym(br, A) << 24) | (red << 16) | (s << 8) | blue
-                pix[pos] = p
-                pos += 1
-                if cache is not None:
-                    cache[(0x1E35A7BD * p & 0xFFFFFFFF) >> (32 - cache_bits)] = p
-            elif s < 280:
-                length = _lz_val(br, s - 256)
-                dist = _p2d(_lz_val(br, _sym(br, D)), w)
-                if dist > pos or pos + length > npx:
-                    raise ValueError("VP8L backward reference out of range")
-                for _ in range(length):
-                    p = pix[pos - dist]
-                    pix[pos] = p
-                    pos += 1
-                    if cache is not None:
-                        cache[(0x1E35A7BD * p & 0xFFFFFFFF)
-                              >> (32 - cache_bits)] = p
-            else:  # s only reaches here when cache_bits > 0
-                pix[pos] = cache[s - 280]
-                pos += 1
-        return pix
-
-    def _avg2(a, b):
-        return ((((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b)) & 0xFFFFFFFF
-
-    def _addpx(a, b):
-        lo = ((a & 0x00FF00FF) + (b & 0x00FF00FF)) & 0x00FF00FF
-        hi = ((a & 0xFF00FF00) + (b & 0xFF00FF00)) & 0xFF00FF00
-        return lo | hi
-
-    def _chans(p):
-        return ((p >> 24) & 0xFF, (p >> 16) & 0xFF, (p >> 8) & 0xFF,
-                p & 0xFF)
-
-    def _select(l, t, tl):
-        pl = pt = 0
-        for cl, ct, ctl in zip(_chans(l), _chans(t), _chans(tl)):
-            pr = cl + ct - ctl
-            pl += abs(pr - cl)
-            pt += abs(pr - ct)
-        return l if pl <= pt else t
-
-    def _clamp_full(l, t, tl):
-        out = 0
-        for shift in (24, 16, 8, 0):
-            v = ((l >> shift) & 0xFF) + ((t >> shift) & 0xFF) \
-                - ((tl >> shift) & 0xFF)
-            out |= (0 if v < 0 else 255 if v > 255 else v) << shift
-        return out
-
-    def _clamp_half(ave, tl):
-        out = 0
-        for shift in (24, 16, 8, 0):
-            a = (ave >> shift) & 0xFF
-            b = (tl >> shift) & 0xFF
-            v = a + int((a - b) / 2)  # C-style trunc-toward-zero
-            out |= (0 if v < 0 else 255 if v > 255 else v) << shift
-        return out
-
-    def _inv_predictor(pix, w, h, size_bits, modes_img):
-        mw = _sub(w, size_bits)
-        for pos in range(w * h):
-            x, y = pos % w, pos // w
-            if pos == 0:
-                pred = 0xFF000000
-            elif y == 0:
-                pred = pix[pos - 1]
-            elif x == 0:
-                pred = pix[pos - w]
-            else:
-                mode = (modes_img[(y >> size_bits) * mw
-                                  + (x >> size_bits)] >> 8) & 0xFF
-                L, T = pix[pos - 1], pix[pos - w]
-                TL = pix[pos - w - 1]
-                TR = pix[pos - w + 1]  # x==w-1 wraps to this row's
-                # first pixel — the spec's contiguous-buffer rule
-                if mode == 0:
-                    pred = 0xFF000000
-                elif mode == 1:
-                    pred = L
-                elif mode == 2:
-                    pred = T
-                elif mode == 3:
-                    pred = TR
-                elif mode == 4:
-                    pred = TL
-                elif mode == 5:
-                    pred = _avg2(_avg2(L, TR), T)
-                elif mode == 6:
-                    pred = _avg2(L, TL)
-                elif mode == 7:
-                    pred = _avg2(L, T)
-                elif mode == 8:
-                    pred = _avg2(TL, T)
-                elif mode == 9:
-                    pred = _avg2(T, TR)
-                elif mode == 10:
-                    pred = _avg2(_avg2(L, TL), _avg2(T, TR))
-                elif mode == 11:
-                    pred = _select(L, T, TL)
-                elif mode == 12:
-                    pred = _clamp_full(L, T, TL)
-                elif mode == 13:
-                    pred = _clamp_half(_avg2(L, T), TL)
-                else:
-                    raise ValueError(f"VP8L bad predictor mode {mode}")
-            pix[pos] = _addpx(pix[pos], pred)
-        return pix
-
-    def _s8(v):
-        return v - 256 if v >= 128 else v
-
-    def _inv_color(pix, w, h, size_bits, cte_img):
-        mw = _sub(w, size_bits)
-        for pos in range(w * h):
-            x, y = pos % w, pos // w
-            cte = cte_img[(y >> size_bits) * mw + (x >> size_bits)]
-            g2r, g2b, r2b = _s8(cte & 0xFF), _s8((cte >> 8) & 0xFF), \
-                _s8((cte >> 16) & 0xFF)
-            p = pix[pos]
-            g = _s8((p >> 8) & 0xFF)
-            red = (((p >> 16) & 0xFF) + ((g2r * g) >> 5)) & 0xFF
-            blue = ((p & 0xFF) + ((g2b * g) >> 5)
-                    + ((r2b * _s8(red)) >> 5)) & 0xFF
-            pix[pos] = (p & 0xFF00FF00) | (red << 16) | blue
-        return pix
-
-    def _inv_subgreen(pix):
-        for pos, p in enumerate(pix):
-            g = (p >> 8) & 0xFF
-            red = (((p >> 16) & 0xFF) + g) & 0xFF
-            blue = ((p & 0xFF) + g) & 0xFF
-            pix[pos] = (p & 0xFF00FF00) | (red << 16) | blue
-        return pix
-
-    def _inv_palette(pix, packed_w, h, full_w, pal, wbits):
-        if not wbits:
-            out = []
-            for p in pix:
-                i = (p >> 8) & 0xFF
-                out.append(pal[i] if i < len(pal) else 0)
-            return out
-        bpp = 8 >> wbits
-        mask = (1 << bpp) - 1
-        out = [0] * (full_w * h)
-        for y in range(h):
-            for px in range(packed_w):
-                g = (pix[y * packed_w + px] >> 8) & 0xFF
-                base = px << wbits
-                for i in range(1 << wbits):
-                    x = base + i
-                    if x >= full_w:
-                        break
-                    idx = (g >> (i * bpp)) & mask
-                    out[y * full_w + x] = pal[idx] if idx < len(pal) else 0
-        return out
-
-    def decode_webp(content: bytes) -> tuple[int, int, int, list[float]]:
-        """Decode a LOSSLESS WebP (VP8L chunk, standalone or inside a
-        VP8X extended container) with the stdlib only: returns
-        ``(width, height, channels, per_channel_means)``, channels 4
-        (RGBA means) when the header's alpha hint is set else 3.
-        Lossy WebP (VP8 chunk) and animation frames raise
-        NotImplementedError (the PIL gate); malformed structures raise
-        ValueError."""
-        if content[:4] != b"RIFF" or content[8:12] != b"WEBP":
-            raise ValueError("not a WebP (bad RIFF/WEBP header)")
-        off = 12
-        vp8l = None
-        while off + 8 <= len(content):
-            tag = content[off : off + 4]
-            ln = int.from_bytes(content[off + 4 : off + 8], "little")
-            if tag == b"VP8L":
-                vp8l = content[off + 8 : off + 8 + ln]
-                break
-            if tag == b"VP8 ":
-                raise NotImplementedError("lossy WebP (VP8) needs PIL")
-            if tag == b"ANIM" or tag == b"ANMF":
-                raise NotImplementedError("animated WebP needs PIL")
-            off += 8 + ln + (ln & 1)
-        if vp8l is None:
-            raise ValueError("WebP without an image chunk")
-        if not vp8l or vp8l[0] != 0x2F:
-            raise ValueError("bad VP8L signature")
-        br = _Br(vp8l, 8)
-        w = br.bits(14) + 1
-        h = br.bits(14) + 1
-        alpha_hint = br.bits(1)
-        if br.bits(3):
-            raise ValueError("bad VP8L version")
-        if w * h > 1 << 26:  # hostile-header guard, same as JPEG path
-            raise ValueError("VP8L dimensions implausibly large")
-
-        # transforms, in stream order; color indexing shrinks the
-        # entropy image's width for everything read after it
-        transforms = []
-        seen = set()
-        ew = w
-        while br.bits(1):
-            t = br.bits(2)
-            if t in seen:
-                raise ValueError("duplicate VP8L transform")
-            seen.add(t)
-            if t == 2:
-                transforms.append(("subgreen",))
-            elif t in (0, 1):
-                size_bits = br.bits(3) + 2
-                sub = _entropy_image(
-                    br, _sub(ew, size_bits), _sub(h, size_bits), False
-                )
-                transforms.append(
-                    ("pred" if t == 0 else "color", size_bits, sub)
-                )
-            else:  # color indexing
-                n = br.bits(8) + 1
-                raw_pal = _entropy_image(br, n, 1, False)
-                pal = []
-                prev = 0
-                for p in raw_pal:  # palette entries are delta-coded
-                    prev = _addpx(prev, p)
-                    pal.append(prev)
-                wbits = 3 if n <= 2 else 2 if n <= 4 else 1 if n <= 16 \
-                    else 0
-                transforms.append(("palette", ew, pal, wbits))
-                if wbits:
-                    ew = _sub(ew, wbits)
-        pix = _entropy_image(br, ew, h, True)
-
-        for t in reversed(transforms):
-            if t[0] == "palette":
-                _full_w, pal, wbits = t[1], t[2], t[3]
-                pix = _inv_palette(pix, ew, h, _full_w, pal, wbits)
-                ew = _full_w
-            elif t[0] == "subgreen":
-                pix = _inv_subgreen(pix)
-            elif t[0] == "pred":
-                pix = _inv_predictor(pix, ew, h, t[1], t[2])
-            else:
-                pix = _inv_color(pix, ew, h, t[1], t[2])
-
-        n_px = w * h
-        if len(pix) != n_px:
-            raise ValueError("VP8L pixel count mismatch")
-        sr = sg = sb = sa = 0
-        for p in pix:
-            sa += (p >> 24) & 0xFF
-            sr += (p >> 16) & 0xFF
-            sg += (p >> 8) & 0xFF
-            sb += p & 0xFF
-        d = n_px * 255.0
-        means = [sr / d, sg / d, sb / d]
-        ch = 3
-        if alpha_hint:
-            means.append(sa / d)
-            ch = 4
-        return w, h, ch, means
-
-    return decode_webp
-
-
-decode_webp = _make_webp_decoder()
-
-
-WAV_MAGIC = b"RIFF"
 
 
 def _make_wav_decoder():
@@ -2017,6 +238,29 @@ def _make_wav_decoder():
 decode_wav = _make_wav_decoder()
 
 
+def _make_png_featurizer():
+    """Factory (same by-value pickling rationale as the decoders) for
+    the ONE feature-assembly implementation shared by the driver-side
+    helper and the mapInPandas worker closure — no drift possible."""
+    decode = decode_png
+
+    def png_features(content: bytes, n_feats: int = N_FAKE_FEATURES) -> list[float]:
+        """Real image feature vector matching :data:`FEATURE_SCHEMA`'s
+        width: [width, height, channels, mean_ch0..mean_ch3 (0.0 when
+        absent), overall mean] — dims + channel statistics, the
+        metadata/quality signals a multimodal curation pass filters
+        on."""
+        w, h, ch, means = decode(content)
+        padded = (means + [0.0] * 4)[:4]
+        overall = sum(means) / len(means)
+        return [float(w), float(h), float(ch), *padded, overall][:n_feats]
+
+    return png_features
+
+
+png_features = _make_png_featurizer()
+
+
 def _make_wav_featurizer():
     """Factory twin of :func:`_make_png_featurizer` for WAV."""
     decode = decode_wav
@@ -2039,44 +283,6 @@ def _make_wav_featurizer():
 wav_features = _make_wav_featurizer()
 
 
-def _make_image_featurizer(decode):
-    """Factory (same by-value pickling rationale as the decoders) for
-    the ONE feature-assembly implementation shared by the driver-side
-    helper and the mapInPandas worker closure — no drift possible. All
-    image decoders share the ``(w, h, ch, means)`` contract, so one
-    assembly serves PNG, BMP, and netpbm alike."""
-
-    def image_features(content: bytes, n_feats: int = N_FAKE_FEATURES) -> list[float]:
-        """Real image feature vector matching :data:`FEATURE_SCHEMA`'s
-        width: [width, height, channels, mean_ch0..mean_ch3 (0.0 when
-        absent), overall mean] — dims + channel statistics, the
-        metadata/quality signals a multimodal curation pass filters
-        on."""
-        w, h, ch, means = decode(content)
-        padded = (means + [0.0] * 4)[:4]
-        overall = sum(means) / len(means)
-        return [float(w), float(h), float(ch), *padded, overall][:n_feats]
-
-    return image_features
-
-
-png_features = _make_image_featurizer(decode_png)
-bmp_features = _make_image_featurizer(decode_bmp)
-pnm_features = _make_image_featurizer(decode_pnm)
-gif_features = _make_image_featurizer(decode_gif)
-jpeg_features = _make_image_featurizer(decode_jpeg_stats)
-tiff_features = _make_image_featurizer(decode_tiff)
-webp_features = _make_image_featurizer(decode_webp)
-
-
-def _fake_features(content: bytes) -> list[float]:
-    """Deterministic fake 'embedding': md5 digest bytes 8..15 scaled to
-    [0, 1]. Matches DuckDB ``(md5_number_lower(x) >> 8j) & 255 / 255.0``
-    so the whole mapInPandas pipeline is oracle-checkable."""
-    digest = hashlib.md5(content).digest()
-    return [digest[8 + j] / 255.0 for j in range(N_FAKE_FEATURES)]
-
-
 FEATURE_SCHEMA = StructType(
     [StructField("media_id", LongType())]
     + [StructField(f"f{j}", DoubleType()) for j in range(N_FAKE_FEATURES)]
@@ -2093,40 +299,23 @@ def extract_features(
     ``mapInPandas``.
 
     The batch loop is the production shape (decode → featurize per
-    item, vectorized emit per batch). ``fake=False`` is REAL for PNG
-    (:func:`decode_png`), BMP (:func:`decode_bmp`), binary netpbm
-    (:func:`decode_pnm`), GIF (:func:`decode_gif`), baseline AND
-    progressive JPEG (:func:`decode_jpeg_stats` — DC-exact dims/means,
-    the curation signals, at a fraction of a pixel decode), TIFF
-    (:func:`decode_tiff` — both byte orders, strip AND tile layouts,
-    8/16-bit, chunky and planar-separate, PackBits + LZW compression,
-    horizontal predictor, new-style JPEG-in-TIFF), LOSSLESS WebP
-    (:func:`decode_webp` — the full VP8L bitstream: Huffman groups,
-    LZ77, color cache, and all four transforms), and RIFF/WAVE PCM
-    (:func:`decode_wav`) content — all dependency-free; the remaining
-    formats (arithmetic-coded JPEG and lossy/animated WebP) route to
-    the PIL-gated decoder (raises :class:`NotImplementedError` without
-    PIL — the documented stub).
+    item, vectorized emit per batch). ``fake=False`` dispatches each
+    payload by its magic bytes: PNG (:func:`decode_png`) and RIFF/WAVE
+    PCM (:func:`decode_wav`) decode with the stdlib only; every other
+    format, and a PNG the stdlib decoder rejects (16-bit, interlaced,
+    palette, corrupt or truncated), routes to the PIL-gated decoder,
+    which raises :class:`NotImplementedError` when PIL is absent.
 
     The worker function is deliberately self-contained (stdlib +
     pandas only): Python workers are fresh processes that may not have
     this package on their path, and cloudpickle serializes references
-    to module globals by name. ``decode_png`` is factory-built so it
-    pickles by value into the closure.
+    to module globals by name. The featurizers are factory-built so
+    they pickle by value into the closure.
     """
     n_feats = N_FAKE_FEATURES
-    pngf = png_features  # factory-built: pickles by value into workers
-    bmpf = bmp_features
-    pnmf = pnm_features
-    giff = gif_features
-    jpgf = jpeg_features
-    tiff = tiff_features
-    webpf = webp_features
+    pngf = png_features
     wavf = wav_features
     magic = PNG_MAGIC
-    gif_magics = GIF_MAGICS
-    jpeg_magic = JPEG_MAGIC
-    tiff_magics = TIFF_MAGICS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -2139,32 +328,16 @@ def extract_features(
 
         def real_features(content: bytes) -> list[float]:
             content = bytes(content)
-            # stdlib decoders first; a variant they don't cover (16-bit
-            # PNG, RLE BMP, maxval>255 netpbm, ...) falls THROUGH to
-            # the PIL block below rather than failing the job — magic
-            # dispatch must not forfeit a decode PIL could do.
-            # ValueError too, not just NotImplementedError: a corrupt
-            # or truncated 'BM'/'P6' payload makes the strict stdlib
-            # decoders raise ValueError, and one bad blob must route to
-            # PIL (or its loud NotImplementedError) rather than abort
-            # the whole mapInPandas pass
-            try:
-                if content[:8] == magic:
+            # a PNG variant the stdlib decoder does not cover falls
+            # THROUGH to the PIL block below rather than failing the
+            # job; ValueError too, not just NotImplementedError, so one
+            # corrupt or truncated blob routes to PIL (or its loud
+            # NotImplementedError) rather than abort the whole pass
+            if content[:8] == magic:
+                try:
                     return pngf(content, n_feats)
-                if content[:2] == b"BM":
-                    return bmpf(content, n_feats)
-                if content[:2] in (b"P5", b"P6"):
-                    return pnmf(content, n_feats)
-                if content[:6] in gif_magics:
-                    return giff(content, n_feats)
-                if content[:3] == jpeg_magic:
-                    return jpgf(content, n_feats)
-                if content[:4] in tiff_magics:
-                    return tiff(content, n_feats)
-                if content[:4] == b"RIFF" and content[8:12] == b"WEBP":
-                    return webpf(content, n_feats)
-            except (NotImplementedError, ValueError):
-                pass
+                except (NotImplementedError, ValueError):
+                    pass
             if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
                 return wavf(content, n_feats)
             try:
@@ -2182,7 +355,7 @@ def extract_features(
                 ][:n_feats]
             except ImportError as e:
                 raise NotImplementedError(
-                    "non-PNG decode requires PIL; install pillow or use fake=True"
+                    "non-PNG/WAV decode requires PIL; install pillow or use fake=True"
                 ) from e
 
         for pdf in batches:

@@ -51,20 +51,52 @@ def count_rows(df: DataFrame) -> int:
     return df.count()
 
 
+_EPOCH_WALL = datetime(1970, 1, 1)
+
+
+def _timestamp_kind(df: DataFrame, time_col: str) -> str | None:
+    """``"timestamp"`` (an instant), ``"timestamp_ntz"`` (a wall clock)
+    or None: the one place that decides how a watermark on ``time_col``
+    travels as epoch microseconds.
+
+    An instant maps through ``unix_micros``/``timestamp_micros``. A wall
+    clock maps as if it were UTC — what DuckDB's ``epoch_us`` gives for
+    a naive TIMESTAMP — and is converted on the driver, so neither kind
+    passes through the session time zone."""
+    kind = dict(df.dtypes).get(time_col)
+    return kind if kind in ("timestamp", "timestamp_ntz") else None
+
+
 def watermark_literal(df: DataFrame, time_col: str, last_value) -> Column:
     """Timezone-safe literal for a watermark comparison.
 
     Timestamp watermarks should travel as **epoch microseconds** (int):
     collected datetimes render in the driver-OS timezone while string
     literals parse in the *session* timezone, so an ISO-string round trip
-    silently shifts the bound by the tz offset. An int →
-    ``timestamp_micros`` literal is immune. Strings/datetimes still work
-    for callers that control both sides.
+    silently shifts the bound by the tz offset. An int literal is immune
+    (see :func:`_timestamp_kind`). Strings/datetimes still work for
+    callers that control both sides.
     """
-    is_ts = dict(df.dtypes).get(time_col, "").startswith("timestamp")
-    if is_ts and isinstance(last_value, int):
+    kind = _timestamp_kind(df, time_col)
+    if kind == "timestamp" and isinstance(last_value, int):
         return F.timestamp_micros(F.lit(last_value))
+    if kind == "timestamp_ntz" and isinstance(last_value, int):
+        wall = _EPOCH_WALL + timedelta(microseconds=last_value)
+        return F.lit(wall.isoformat(" ")).cast("timestamp_ntz")
     return F.lit(last_value)
+
+
+def collect_watermark(df: DataFrame, time_col: str):
+    """MAX(time_col) as a JSON-storable, timezone-proof value: epoch
+    microseconds for timestamp columns (see :func:`watermark_literal`
+    for why strings/datetimes are unsafe), the raw value otherwise."""
+    kind = _timestamp_kind(df, time_col)
+    if kind == "timestamp":
+        return df.agg(F.unix_micros(F.max(time_col))).first()[0]
+    top = df.agg(F.max(time_col)).first()[0]
+    if kind == "timestamp_ntz" and top is not None:
+        return (top - _EPOCH_WALL) // timedelta(microseconds=1)
+    return top
 
 
 def watermark_read(

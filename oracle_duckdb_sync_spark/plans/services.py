@@ -153,7 +153,6 @@ class EnhancedQueryService:
                 selected_conversions=applied,
             ),
         )
-        res.df.unpersist()
         return QueryServiceResult(
             True, df=converted, row_count=res.row_count, conversions=applied
         )
@@ -180,7 +179,6 @@ class EnhancedQueryService:
                 selected_conversions=meta.selected_conversions,
             ),
         )
-        res.df.unpersist()
         return QueryServiceResult(
             True, df=merged, row_count=new_count, is_incremental=True,
             conversions=meta.selected_conversions,

@@ -325,16 +325,3 @@ class Catalog:
         """Row count per table — one distributed count per table."""
         return {n: self.row_count(n) for n in self.list_tables()}
 
-
-def load_sf_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> dict[str, DataFrame]:
-    """Load the driver's test tables from an ``sf*`` directory as DataFrames."""
-    names = names or (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    out: dict[str, DataFrame] = {}
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(p):
-            out[n] = spark.read.parquet(p)
-    return out

@@ -10,8 +10,8 @@ replaces all of it:
   numPartitions`` — N concurrent range-partitioned cursors, where the
   reference is a single serial cursor
 - watermark predicate  → plain ``WHERE`` pushed into the dbtable subquery
-- schema introspection → JDBC metadata (A5); :func:`oracle_schema_to_spark`
-  keeps the reference's 4-rule type mapping for declared-schema flows
+- schema introspection → JDBC metadata (A5), mapped to Spark types by
+  the connector's dialect
 
 No Oracle server exists in the test environment; the read path is
 standard ``spark.read.format("jdbc")`` wiring and is exercised
@@ -32,13 +32,6 @@ from typing import Any
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..config import SYNC_BATCH_SIZE
 
@@ -54,30 +47,6 @@ def validate_identifier(name: str) -> str:
     if not _IDENT_RE.match(name or ""):
         raise ValueError(f"invalid SQL identifier: {name!r}")
     return name
-
-
-def map_oracle_type(oracle_type: str):
-    """Oracle type name → Spark type (J10, database/sync_engine.py:19-43).
-
-    NUMBER* → DOUBLE (deliberately drops decimal exactness, SURVEY
-    §4.3-4), VARCHAR*/CHAR* → STRING, DATE/TIMESTAMP* → TIMESTAMP,
-    anything else → STRING fallback.
-    """
-    t = (oracle_type or "").upper()
-    if t.startswith("NUMBER"):
-        return DoubleType()
-    if "VARCHAR" in t or t.startswith("CHAR"):
-        return StringType()
-    if t == "DATE" or t.startswith("TIMESTAMP"):
-        return TimestampType()
-    return StringType()
-
-
-def oracle_schema_to_spark(columns: list[tuple[str, str]]) -> StructType:
-    """``[(col, oracle_type)]`` (A5 dictionary order) → StructType."""
-    return StructType(
-        [StructField(name, map_oracle_type(t), nullable=True) for name, t in columns]
-    )
 
 
 @dataclass
@@ -115,7 +84,7 @@ class JdbcSourceConfig:
         """Dialect hook: watermark value → SQL timestamp literal.
 
         The engine persists timestamp watermarks as epoch-microsecond
-        ints (sync/engine.py ``_collect_watermark``); the DB stores
+        ints (operators/query.py ``collect_watermark``); the DB stores
         naive wall-clock TIMESTAMPs, so an int is rendered in
         ``db_timezone`` before formatting. A str is taken as an
         already-formatted ``YYYY-MM-DD HH24:MI:SS.FF6`` wall clock.

@@ -50,6 +50,10 @@ class JsonStateStore:
         tmp = f"{path}.tmp.{os.getpid()}"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(data, f, ensure_ascii=False, indent=2, default=_iso)
+            # on disk before the rename: a crash must leave the old file
+            # or the whole new one, never a truncated watermark
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, path)  # atomic commit
 
     def load_json(self, name: str, default: Any = None) -> Any:

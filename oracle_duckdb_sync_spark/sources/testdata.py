@@ -222,14 +222,6 @@ def ensure_ivf_base_index(
     return path
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {
-        n: load_table(spark, sf_dir, n)
-        for n in TABLES
-        if os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))
-    }
-
-
 def ensure_minhash_store(
     spark: SparkSession,
     sf_dir: str,
@@ -367,53 +359,6 @@ def ensure_pq_codes(
         json.dump(books, f)
     os.replace(tmp, books_path)
     return path, books
-
-
-def ensure_opq_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = 8,
-    k: int = 16,
-    base_dir: str | None = None,
-) -> tuple[str, list[list[list[float]]], list[list[float]]]:
-    """Materialize (once per testdata generation) the OPQ-rotated PQ
-    code table — :func:`ensure_pq_codes` with the parametric rotation
-    (:func:`operators.similarity.opq_rotation`) learned first and
-    applied through training and encoding. Returns
-    ``(codes_path, codebooks, rotation)``; both model artifacts are
-    deterministic refits, persisted as one JSON beside the codes."""
-    from ..operators.similarity import (
-        opq_rotation,
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = base_dir or os.path.join(repo_root, ".opq")
-    sf_name = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(base, sf_name, "codes")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    marker = os.path.join(path, "_SUCCESS")
-    model_path = os.path.join(base, sf_name, "model.json")
-    if (
-        os.path.exists(marker)
-        and os.path.exists(model_path)
-        and os.path.getmtime(marker) >= os.path.getmtime(src)
-    ):
-        with open(model_path, encoding="utf-8") as f:
-            model = json.load(f)
-        return path, model["codebooks"], model["rotation"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    rot = opq_rotation(emb, m=m)
-    books = train_pq_codebooks(emb, m=m, k=k, rotation=rot)
-    pq_encode(emb, books, rotation=rot).write.mode("overwrite").parquet(path)
-    tmp = f"{model_path}.tmp-{os.getpid()}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"codebooks": books, "rotation": rot}, f)
-    os.replace(tmp, model_path)
-    return path, books, rot
 
 
 def ensure_pq_codes_seeded(

@@ -31,21 +31,10 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..errors import SyncError
-from ..operators.query import watermark_literal
+from ..operators.query import collect_watermark, watermark_literal
 from ..sources import sinks
 from ..sources.catalog import Catalog
 from ..sources.state import SyncStateStore
-
-
-def _collect_watermark(df: DataFrame, time_col: str):
-    """MAX(time_col) as a JSON-storable, timezone-proof value: epoch
-    microseconds for timestamp columns (see operators.query
-    .watermark_literal for why strings/datetimes are unsafe), the raw
-    value otherwise."""
-    is_ts = dict(df.dtypes).get(time_col, "").startswith("timestamp")
-    if is_ts:
-        return df.agg(F.unix_micros(F.max(time_col))).first()[0]
-    return df.agg(F.max(time_col)).first()[0]
 
 
 class SyncSource(Protocol):
@@ -163,7 +152,7 @@ class SyncEngine:
             try:
                 n = df.count()
                 if time_column:
-                    wm_holder["wm"] = _collect_watermark(df, time_column)
+                    wm_holder["wm"] = collect_watermark(df, time_column)
                 if primary_key and self.catalog.table_exists(table):
                     sinks.upsert(
                         self.spark, df, path, [primary_key], partition_cols=partition_cols
@@ -229,7 +218,7 @@ class SyncEngine:
             try:
                 n = delta.count()
                 if n > 0:
-                    new_wm_holder["wm"] = _collect_watermark(delta, time_column)
+                    new_wm_holder["wm"] = collect_watermark(delta, time_column)
                     sinks.append(delta, path)
                 return n
             finally:

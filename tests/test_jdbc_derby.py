@@ -119,10 +119,10 @@ def test_incremental_string_watermark(spark, derby, cfg):
 def test_incremental_epoch_micros_watermark(spark, derby, cfg):
     """The engine's persisted epoch-micros int round-trips through the
     dialect literal and lands on the exact row boundary."""
-    from oracle_duckdb_sync_spark.sync.engine import _collect_watermark
+    from oracle_duckdb_sync_spark.operators.query import collect_watermark
 
     full = J.read_table(spark, cfg, "EVENTS")
-    wm = _collect_watermark(full.filter("ID <= 3"), "TS")
+    wm = collect_watermark(full.filter("ID <= 3"), "TS")
     assert isinstance(wm, int)
     df = J.read_incremental(spark, cfg, "EVENTS", "TS", wm)
     assert [r["ID"] for r in df.collect()] == [4, 5, 6]

@@ -133,6 +133,10 @@ def test_cached_incremental_flow(spark, tmp_path):
     r3 = svc.query_with_caching("inc", "ts")
     assert r3.success and r3.is_incremental and r3.row_count == 65
     assert dict(r3.df.dtypes)["v"] == "double"  # conversions reapplied to delta
+    # the cached entry is a snapshot of the first read: after the repeat
+    # read and the append, the merged result holds each row once
+    assert r3.df.count() == 65
+    assert r3.df.select("ID").distinct().count() == 65
 
 
 def test_stale_serve_on_error(spark, tmp_path):

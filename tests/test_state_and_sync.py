@@ -52,6 +52,29 @@ def test_state_corruption_returns_default(tmp_path):
     assert st.load_json("sync_state.json", {"d": 1}) == {"d": 1}
 
 
+def test_state_write_fsyncs_before_replace(tmp_path, monkeypatch):
+    """The temp file's bytes reach the disk before the rename commits
+    it, so a crash cannot leave a truncated state file behind."""
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        calls.append(("fsync", os.fstat(fd).st_size))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        calls.append(("replace", os.path.basename(dst)))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    store = SyncStateStore(str(tmp_path / "s"))
+    store.save_state("t", 123)
+    assert [c[0] for c in calls] == ["fsync", "replace"]
+    assert calls[0][1] > 0 and calls[1][1] == SyncStateStore.STATE_FILE
+    assert store.load_state("t") == 123
+
+
 def test_state_checkpoint_rollback(tmp_path):
     st = SyncStateStore(str(tmp_path))
     st.save_state("t1", "2024-01-01T00:00:00")
@@ -143,6 +166,55 @@ def test_full_then_incremental_sync(spark, env, tmp_path):
     r3 = engine.incremental_sync(src, "sync_target", "TIMESTAMP_COL")
     assert r3.success and r3.rows == 0
     assert catalog.row_count("sync_target") == 1500
+
+
+def test_ntz_watermark_full_then_incremental_sync(spark, env, tmp_path):
+    """A parquet source with tz-less timestamps reads as TIMESTAMP_NTZ.
+    Its watermark is the wall clock read as UTC (DuckDB's ``epoch_us``
+    of the naive max), and the incremental bound compares without the
+    session time zone (America/New_York here), also across the
+    fall-back hour whose wall clocks repeat."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cfg, catalog, state, engine = env
+    src_dir = tmp_path / "ntz_src"
+    src_dir.mkdir()
+    base = dt.datetime(2024, 11, 3, 0, 30)  # New York falls back at 02:00
+
+    def write(name, lo, hi):
+        ts = [base + dt.timedelta(minutes=7 * i, microseconds=i) for i in range(lo, hi)]
+        pq.write_table(
+            pa.table({"ID": list(range(lo, hi)), "ts": pa.array(ts, pa.timestamp("us"))}),
+            str(src_dir / name),
+        )
+
+    write("part-0.parquet", 0, 20)
+    src = ParquetSyncSource(str(src_dir))
+    # testdata.load_table turns NTZ inference off on the shared session;
+    # Spark's default, and build_session's, is on
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        assert dict(src.read_full(spark).dtypes)["ts"] == "timestamp_ntz"
+        r = engine.full_sync(src, "ntz_target", time_column="ts")
+        assert r.success and r.rows == 20 and r.attempts == 1
+        want = duckdb.sql(
+            f"SELECT epoch_us(max(ts)) FROM read_parquet('{src_dir}/*.parquet')"
+        ).fetchone()[0]
+        assert r.new_watermark == want == state.load_state("ntz_target")
+
+        write("part-1.parquet", 20, 26)
+        r2 = engine.incremental_sync(src, "ntz_target", "ts")
+        assert r2.success and r2.rows == 6
+        got = sorted(x.ID for x in catalog.table("ntz_target").select("ID").collect())
+        assert got == list(range(26))
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_test_sync_row_limit(spark, env, tmp_path):

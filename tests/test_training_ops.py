@@ -3028,2049 +3028,6 @@ def _write_png(width, height, pixels, color_type, filters=None):
     )
 
 
-def _write_bmp(width, height, pixels_rgb, bpp=24, top_down=False):
-    """Minimal stdlib BMP writer for decoder tests. ``pixels_rgb`` is a
-    row-major (top row first) list of (r, g, b[, a]) tuples; rows are
-    stored BGR(A) with 4-byte padding, bottom-up unless ``top_down``."""
-    import struct
-
-    ch = bpp // 8
-    row_bytes = width * ch
-    stride = (row_bytes + 3) & ~3
-    hdr_h = -height if top_down else height
-    rows = []
-    for y in range(height):
-        row = bytearray()
-        for x in range(width):
-            px = pixels_rgb[y * width + x]
-            row += bytes([px[2], px[1], px[0]])  # BGR
-            if ch == 4:
-                row += bytes([px[3]])
-        row += bytes(stride - row_bytes)
-        rows.append(bytes(row))
-    if not top_down:
-        rows.reverse()  # bottom-up storage
-    pixel_data = b"".join(rows)
-    pixel_off = 14 + 40
-    file_size = pixel_off + len(pixel_data)
-    file_hdr = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, pixel_off)
-    info_hdr = struct.pack(
-        "<IiiHHIIiiII", 40, width, hdr_h, 1, bpp, 0, len(pixel_data),
-        2835, 2835, 0, 0,
-    )
-    return file_hdr + info_hdr + pixel_data
-
-
-def _write_gif(width, height, pixels_rgb, interlace_flag=False,
-               use_local_table=False, with_gce=False):
-    """Minimal stdlib GIF89a writer (real GIF-LZW, variable code width)
-    for decoder tests. ``pixels_rgb`` is a row-major list of (r, g, b)
-    tuples with ≤256 distinct colors. The encoder emits codes while
-    simulating the decoder's table/width schedule exactly ("late
-    change"), so any conformant decoder reads it back. Set
-    ``interlace_flag`` to mark the image interlaced WITHOUT reordering
-    rows — decode_gif computes order-independent means, so the flag
-    must be a no-op for it. ``with_gce`` prepends a Graphic Control
-    Extension block (exercises the extension skipper)."""
-    import struct
-
-    colors = sorted(set(pixels_rgb))
-    assert len(colors) <= 256
-    size_field = max(0, (max(2, len(colors)) - 1).bit_length() - 1)
-    n_pal = 2 ** (size_field + 1)
-    cmap = {c: i for i, c in enumerate(colors)}
-    idx = [cmap[p] for p in pixels_rgb]
-    pal = b"".join(bytes(c) for c in colors) + b"\x00\x00\x00" * (
-        n_pal - len(colors)
-    )
-
-    out = bytearray(b"GIF89a")
-    gct_flag = 0 if use_local_table else 0x80
-    out += struct.pack("<HHBBB", width, height, gct_flag | size_field, 0, 0)
-    if not use_local_table:
-        out += pal
-    if with_gce:
-        out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE + terminator
-    ipacked = (0x80 | size_field if use_local_table else 0) | (
-        0x40 if interlace_flag else 0
-    )
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, ipacked)
-    if use_local_table:
-        out += pal
-
-    min_code = max(2, size_field + 1)
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    out.append(min_code)
-
-    # LZW compress
-    codes = [clear]
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    s = b""
-    for i in idx:
-        s2 = s + bytes([i])
-        if s2 in table:
-            s = s2
-        else:
-            codes.append(table[s])
-            if next_code < 4096:
-                table[s2] = next_code
-                next_code += 1
-            else:  # table full: reset (decoders also accept deferred)
-                codes.append(clear)
-                table = {bytes([j]): j for j in range(clear)}
-                next_code = end + 1
-            s = bytes([i])
-    if s:
-        codes.append(table[s])
-    codes.append(end)
-
-    # pack LSB-first, simulating the DECODER's width schedule
-    bits = bytearray()
-    acc = nacc = 0
-    width_bits = min_code + 1
-    dec_entries = end + 1
-    prev_literal = False
-    for c in codes:
-        acc |= c << nacc
-        nacc += width_bits
-        while nacc >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-        if c == clear:
-            width_bits = min_code + 1
-            dec_entries = end + 1
-            prev_literal = False
-        elif c != end:
-            if prev_literal and dec_entries < 4096:
-                dec_entries += 1
-                if dec_entries == (1 << width_bits) and width_bits < 12:
-                    width_bits += 1
-            prev_literal = True
-    if nacc:
-        bits.append(acc & 0xFF)
-
-    for off in range(0, len(bits), 255):
-        chunk = bits[off : off + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-_JPEG_DC_BITS = [0, 0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_DC_VALS = list(range(12))  # Annex K.3.1 luminance DC table
-_JPEG_AC_BITS = [0, 0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_JPEG_AC_VALS = [  # Annex K.3.2 luminance AC table (EOB is symbol 0x00)
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-    0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-    0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-    0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-    0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-    0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-    0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-    0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-    0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-    0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-    0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-    0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-    0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-
-def _jpeg_codes(bits, vals):
-    """Canonical Huffman codes (code, length) per symbol from a JPEG
-    (BITS, HUFFVAL) table pair."""
-    codes = {}
-    code = 0
-    for length in range(1, 17):
-        for _ in range(bits[length]):
-            codes[vals[len(codes)]] = (code, length)
-            code += 1
-        code <<= 1
-    return codes
-
-
-def _write_jpeg_dc(comp_blocks, q0=16, restart_interval=0, ac_noise=None,
-                   width=None, height=None):
-    """Minimal baseline-JPEG encoder for decoder tests: every 8×8
-    block's MEAN comes from its DC alone, so the DC-statistics decoder
-    recovers the encoded means exactly. ``comp_blocks`` is a list of
-    (h, v, grid) per component where ``grid`` is a 2D list of block
-    values in [0, 255] with dimensions (mcu_rows·v, mcu_cols·h) —
-    consistent across components. ``ac_noise`` (a random.Random)
-    sprinkles real AC coefficients — runs, ZRL escapes, full-to-63
-    blocks with no EOB — which shift no block mean (AC basis functions
-    integrate to zero) but force the decoder through every AC-skip
-    branch. Returns (blob, expected_means) with expected means in
-    [0, 1] per COMPONENT (pre color conversion), computed from the
-    quantized DCs the stream actually carries."""
-    import struct
-
-    hmax = max(h for h, _v, _g in comp_blocks)
-    vmax = max(v for _h, v, _g in comp_blocks)
-    h0, v0, g0 = comp_blocks[0]
-    mcu_rows = len(g0) // v0
-    mcu_cols = len(g0[0]) // h0
-    # declared dims may be smaller than the MCU canvas (real JPEGs:
-    # edge MCUs carry encoder padding) — the decoder must weight edge
-    # blocks by their visible pixels, and expected means follow suit
-    width = width or mcu_cols * 8 * hmax
-    height = height or mcu_rows * 8 * vmax
-    assert mcu_cols * 8 * hmax - 8 * hmax < width <= mcu_cols * 8 * hmax
-    assert mcu_rows * 8 * vmax - 8 * vmax < height <= mcu_rows * 8 * vmax
-
-    out = bytearray(b"\xff\xd8")
-    qtable = [q0] + [16] * 63
-    out += b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0) + bytes(qtable)
-    nc = len(comp_blocks)
-    sof = struct.pack(">BHHB", 8, height, width, nc)
-    for i, (h, v, _grid) in enumerate(comp_blocks):
-        sof += bytes([i + 1, (h << 4) | v, 0])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    for tc, bits, vals in (
-        (0, _JPEG_DC_BITS, _JPEG_DC_VALS),
-        (1, _JPEG_AC_BITS, _JPEG_AC_VALS),
-    ):
-        seg = bytes([tc << 4]) + bytes(bits[1:17]) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00])  # DC table 0, AC table 0
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    eob_code = ac_codes[0x00]
-
-    bitbuf = []  # (value, nbits)
-
-    def put(v, n):
-        if n:
-            bitbuf.append((v, n))
-
-    dc_pred = [0] * nc
-    dc_sums = [0] * nc
-    dc_ns = [0] * nc
-    mcu_seen = 0
-    chunks = []  # entropy segments split at restart points
-
-    def flush_entropy():
-        acc = n = 0
-        by = bytearray()
-        for v, nb in bitbuf:
-            acc = (acc << nb) | v
-            n += nb
-            while n >= 8:
-                byte = (acc >> (n - 8)) & 0xFF
-                by.append(byte)
-                n -= 8
-                acc &= (1 << n) - 1
-        if n:
-            by.append(((acc << (8 - n)) | ((1 << (8 - n)) - 1)) & 0xFF)
-        return bytes(by).replace(b"\xff", b"\xff\x00")
-
-    for my in range(mcu_rows):
-        for mx in range(mcu_cols):
-            if (
-                restart_interval
-                and mcu_seen
-                and mcu_seen % restart_interval == 0
-            ):
-                chunks.append(flush_entropy())
-                bitbuf.clear()
-                dc_pred = [0] * nc
-            for ci, (h, v, grid) in enumerate(comp_blocks):
-                cw = -(-width * h // hmax)
-                chh = -(-height * v // vmax)
-                for by_ in range(v):
-                    for bx in range(h):
-                        val = grid[my * v + by_][mx * h + bx]
-                        dcq = round((val - 128) * 8 / q0)
-                        vis = max(0, min(8, cw - 8 * (mx * h + bx))) * max(
-                            0, min(8, chh - 8 * (my * v + by_))
-                        )
-                        dc_sums[ci] += dcq * vis
-                        dc_ns[ci] += vis
-                        diff = dcq - dc_pred[ci]
-                        dc_pred[ci] = dcq
-                        mag = abs(diff)
-                        t = mag.bit_length()
-                        code, ln = dc_codes[t]
-                        put(code, ln)
-                        if t:
-                            put(diff if diff > 0 else diff + (1 << t) - 1, t)
-                        k = 1
-                        if ac_noise is not None:
-                            while k <= 63 and ac_noise.random() < 0.7:
-                                if 63 - k >= 16 and ac_noise.random() < 0.2:
-                                    put(*ac_codes[0xF0])  # ZRL: 16 zeros
-                                    k += 16
-                                    continue
-                                r = ac_noise.randint(0, min(15, 63 - k))
-                                s = ac_noise.randint(1, 10)
-                                put(*ac_codes[(r << 4) | s])
-                                put(ac_noise.getrandbits(s), s)
-                                k += r + 1
-                        if k <= 63:
-                            put(*eob_code)
-            mcu_seen += 1
-    chunks.append(flush_entropy())
-    rst = 0
-    for i, ch in enumerate(chunks):
-        out += ch
-        if i < len(chunks) - 1:
-            out += bytes([0xFF, 0xD0 + (rst % 8)])
-            rst += 1
-    out += b"\xff\xd9"
-    expected = [
-        min(255.0, max(0.0, s / n * q0 / 8.0 + 128.0)) / 255.0
-        for s, n in zip(dc_sums, dc_ns)
-    ]
-    return bytes(out), expected
-
-
-def _write_jpeg_prog(comp_blocks, q0=16, al=1, restart_interval=0,
-                     ac_noise=None, width=None, height=None,
-                     dc_single_scans=False, refine=True):
-    """Minimal progressive-JPEG (SOF2) encoder twin for decoder tests.
-    Emits the standard scan script shape: a first DC scan at successive
-    approximation ``Al=al`` (interleaved, or one non-interleaved scan
-    per component with ``dc_single_scans``), per-component AC scans
-    whose entropy bytes are arbitrary (``ac_noise``) — the decoder must
-    SKIP them at the byte level — and, with ``refine``, DC refinement
-    scans stepping Al down to 0 one bit at a time. Expected means come
-    from the DC precision the stream actually reaches: exact ``dcq``
-    when refined to 0, the truncated ``(dcq>>al)<<al`` otherwise."""
-    import struct
-
-    hmax = max(h for h, _v, _g in comp_blocks)
-    vmax = max(v for _h, v, _g in comp_blocks)
-    h0, v0, g0 = comp_blocks[0]
-    mcu_rows = len(g0) // v0
-    mcu_cols = len(g0[0]) // h0
-    width = width or mcu_cols * 8 * hmax
-    height = height or mcu_rows * 8 * vmax
-    nc = len(comp_blocks)
-
-    dcq = []  # per comp: padded block grid of quantized DCs
-    for h, v, grid in comp_blocks:
-        dcq.append(
-            [
-                [round((grid[r][c] - 128) * 8 / q0)
-                 for c in range(mcu_cols * h)]
-                for r in range(mcu_rows * v)
-            ]
-        )
-
-    out = bytearray(b"\xff\xd8")
-    out += (
-        b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0)
-        + bytes([q0] + [16] * 63)
-    )
-    sof = struct.pack(">BHHB", 8, height, width, nc)
-    for i, (h, v, _grid) in enumerate(comp_blocks):
-        sof += bytes([i + 1, (h << 4) | v, 0])
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof
-    seg = bytes([0]) + bytes(_JPEG_DC_BITS[1:17]) + bytes(_JPEG_DC_VALS)
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    dc_codes = _jpeg_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-
-    def _flush(bitbuf):
-        acc = n = 0
-        by = bytearray()
-        for v, nb in bitbuf:
-            acc = (acc << nb) | v
-            n += nb
-            while n >= 8:
-                by.append((acc >> (n - 8)) & 0xFF)
-                n -= 8
-                acc &= (1 << n) - 1
-        if n:
-            by.append(((acc << (8 - n)) | ((1 << (8 - n)) - 1)) & 0xFF)
-        return bytes(by).replace(b"\xff", b"\xff\x00")
-
-    def _scan(header_comps, ss, se, ah, al_s, units, unit_bits):
-        # header_comps: list of (comp_index, dc_table_id)
-        sos = bytes([len(header_comps)])
-        for ci, tbl in header_comps:
-            sos += bytes([ci + 1, tbl << 4])
-        sos += bytes([ss, se, (ah << 4) | al_s])
-        out.extend(b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos)
-        bitbuf = []
-        chunks = []
-        for u in range(units):
-            if restart_interval and u and u % restart_interval == 0:
-                chunks.append(_flush(bitbuf))
-                bitbuf = []
-                unit_bits(None, bitbuf)  # predictor reset signal
-            unit_bits(u, bitbuf)
-        chunks.append(_flush(bitbuf))
-        rst = 0
-        for i, chk in enumerate(chunks):
-            out.extend(chk)
-            if i < len(chunks) - 1:
-                out.extend(bytes([0xFF, 0xD0 + (rst % 8)]))
-                rst += 1
-
-    def _put_dc_diff(bb, diff):
-        mag = abs(diff)
-        t = mag.bit_length()
-        code, ln = dc_codes[t]
-        bb.append((code, ln))
-        if t:
-            bb.append(((diff if diff > 0 else diff + (1 << t) - 1), t))
-
-    if dc_single_scans:
-        for ci, (h, v, _grid) in enumerate(comp_blocks):
-            cw_px = -(-width * h // hmax)  # component plane pixels
-            ch_px = -(-height * v // vmax)
-            cwb = -(-cw_px // 8)  # unpadded blocks per row/col: the
-            chb = -(-ch_px // 8)  # non-interleaved scan's block grid
-            pred = [0]
-
-            def dc_bits(u, bb, _ci=ci, _cwb=cwb, _pred=pred):
-                if u is None:
-                    _pred[0] = 0
-                    return
-                r, c = divmod(u, _cwb)
-                val = dcq[_ci][r][c] >> al
-                _put_dc_diff(bb, val - _pred[0])
-                _pred[0] = val
-
-            _scan([(ci, 0)], 0, 0, 0, al, cwb * chb, dc_bits)
-    else:
-        pred = [0] * nc
-
-        def dc_bits(u, bb):
-            if u is None:
-                pred[:] = [0] * nc
-                return
-            my, mx = divmod(u, mcu_cols)
-            for ci, (h, v, _grid) in enumerate(comp_blocks):
-                for bi in range(h * v):
-                    by_, bx = divmod(bi, h)
-                    val = dcq[ci][my * v + by_][mx * h + bx] >> al
-                    _put_dc_diff(bb, val - pred[ci])
-                    pred[ci] = val
-
-        _scan([(i, 0) for i in range(nc)], 0, 0, 0, al,
-              mcu_rows * mcu_cols, dc_bits)
-
-    # AC scans: entropy bytes are arbitrary (the decoder skips them
-    # without Huffman work) — stuffed so no false marker appears
-    rnd = ac_noise
-    for ci in range(nc):
-        sos = bytes([1, ci + 1, 0x00, 1, 63, 0x00])
-        out.extend(b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos)
-        n_bytes = (rnd.randint(8, 80) if rnd is not None else 24)
-        payload = bytes(
-            (rnd.randrange(256) if rnd is not None else (i * 37 + ci) % 256)
-            for i in range(n_bytes)
-        )
-        out.extend(payload.replace(b"\xff", b"\xff\x00"))
-
-    if refine:
-        for a in range(al, 0, -1):
-            def refine_bits(u, bb, _a=a):
-                if u is None:
-                    return
-                my, mx = divmod(u, mcu_cols)
-                for ci, (h, v, _grid) in enumerate(comp_blocks):
-                    for bi in range(h * v):
-                        by_, bx = divmod(bi, h)
-                        bb.append(
-                            ((dcq[ci][my * v + by_][mx * h + bx]
-                              >> (_a - 1)) & 1, 1)
-                        )
-
-            _scan([(i, 0) for i in range(nc)], 0, 0, a, a - 1,
-                  mcu_rows * mcu_cols, refine_bits)
-
-    out += b"\xff\xd9"
-
-    exp = []
-    for ci, (h, v, _grid) in enumerate(comp_blocks):
-        cw = -(-width * h // hmax)
-        chh = -(-height * v // vmax)
-        s = n = 0
-        for r in range(mcu_rows * v):
-            for c in range(mcu_cols * h):
-                vis = max(0, min(8, cw - 8 * c)) * max(
-                    0, min(8, chh - 8 * r)
-                )
-                d = dcq[ci][r][c]
-                if not refine:
-                    d = (d >> al) << al
-                s += d * vis
-                n += vis
-        exp.append(min(255.0, max(0.0, s / n * q0 / 8.0 + 128.0)) / 255.0)
-    return bytes(out), exp
-
-
-def _packbits(data: bytes) -> bytes:
-    """PackBits (RLE) encoder for the TIFF twin: repeat runs of >= 3
-    collapse to (257-n, byte); everything else goes out literal."""
-    out = bytearray()
-    i = 0
-    while i < len(data):
-        run = 1
-        while (
-            i + run < len(data) and data[i + run] == data[i] and run < 128
-        ):
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        start = i
-        i += run
-        while i < len(data) and i - start < 128:
-            nxt = 1
-            while (
-                i + nxt < len(data) and data[i + nxt] == data[i] and nxt < 3
-            ):
-                nxt += 1
-            if nxt >= 3:
-                break
-            i += nxt
-        lit = data[start:i]
-        out += bytes([len(lit) - 1]) + lit
-    return bytes(out)
-
-
-def _tiff_lzw_encode(data):
-    """TIFF6 §13 LZW encoder — the encoder twin of the decoder inside
-    ``multimodal.decode_tiff``: MSB-first codes, Clear=256, EOI=257,
-    width 9→12 with the spec's EARLY-CHANGE bump (width grows when the
-    next free code reaches 511/1022... one code before the table
-    fills), Clear emitted when the table nears the 12-bit ceiling."""
-    out = bytearray()
-    acc, nacc = 0, 0
-    nbits = 9
-
-    def emit(code):
-        nonlocal acc, nacc
-        acc = (acc << nbits) | code
-        nacc += nbits
-        while nacc >= 8:
-            out.append((acc >> (nacc - 8)) & 0xFF)
-            nacc -= 8
-            acc &= (1 << nacc) - 1
-
-    table = {bytes((i,)): i for i in range(256)}
-    next_code = 258
-    emit(256)  # spec: streams start with Clear
-    w = b""
-    for b in data:
-        wk = w + bytes((b,))
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        table[wk] = next_code
-        next_code += 1
-        if next_code == (1 << nbits) - 1 and nbits < 12:
-            nbits += 1  # early change
-        elif next_code == 4094:  # table nearly full: reset
-            emit(256)
-            table = {bytes((i,)): i for i in range(256)}
-            next_code, nbits = 258, 9
-        w = bytes((b,))
-    if w:
-        emit(table[w])
-    emit(257)  # EOI
-    if nacc:
-        out.append((acc << (8 - nacc)) & 0xFF)
-    return bytes(out)
-
-
-def _write_tiff(width, height, pixels, channels, big_endian=False,
-                packbits=False, rows_per_strip=None, white_is_zero=False,
-                lzw=False, predictor=1, tile=None, bits=8, planar=1):
-    """Minimal stdlib TIFF writer (8/16-bit; chunky or planar-separate;
-    strip or tile layout; none/PackBits/LZW compression; optional
-    horizontal predictor) for decoder tests."""
-    import struct
-
-    bo = ">" if big_endian else "<"
-    pch = 1 if planar == 2 else channels  # components per plane
-    pad = 0x9E if bits == 8 else 0x9E7C  # NON-zero: counted padding shows
-
-    def _plane_samples(p):
-        if planar == 2:
-            return [px[p] for px in pixels]
-        return [v for px in pixels for v in px]
-
-    def _diff_rows(seg, row_px):
-        # forward horizontal differencing (predictor 2), per row
-        if predictor != 2:
-            return seg
-        seg = list(seg)
-        stride = row_px * pch
-        mask = (1 << bits) - 1
-        for r0 in range(0, len(seg), stride):
-            for i in range(min(r0 + stride, len(seg)) - 1,
-                           r0 + pch - 1, -1):
-                seg[i] = (seg[i] - seg[i - pch]) & mask
-        return seg
-
-    def _pack(samples):
-        if bits == 8:
-            return bytes(samples)
-        return struct.pack(bo + f"{len(samples)}H", *samples)
-
-    def _compress(seg):
-        if lzw:
-            return _tiff_lzw_encode(seg)
-        return _packbits(seg) if packbits else bytes(seg)
-
-    segments = []
-    for p in range(channels if planar == 2 else 1):
-        flat = _plane_samples(p)
-        if tile:
-            tw, th = tile
-            for ty in range((height + th - 1) // th):
-                for tx in range((width + tw - 1) // tw):
-                    buf = []
-                    for y in range(th):
-                        for x in range(tw):
-                            sx, sy = tx * tw + x, ty * th + y
-                            if sx < width and sy < height:
-                                o = (sy * width + sx) * pch
-                                buf += flat[o : o + pch]
-                            else:  # edge tiles pad full (TIFF6 §15)
-                                buf += [pad] * pch
-                    segments.append(_compress(_pack(_diff_rows(buf, tw))))
-        else:
-            rps = rows_per_strip or height
-            for y0 in range(0, height, rps):
-                rows = flat[
-                    y0 * width * pch
-                    : (y0 + min(rps, height - y0)) * width * pch
-                ]
-                segments.append(_compress(_pack(_diff_rows(rows, width))))
-
-    photometric = 0 if white_is_zero else (1 if channels == 1 else 2)
-    compression = 5 if lzw else (32773 if packbits else 1)
-
-    def tag(t, typ, count, value):
-        return struct.pack(bo + "HHI", t, typ, count) + value
-
-    def ival(v, typ=4):
-        return struct.pack(bo + ("I" if typ == 4 else "HH"),
-                           *((v,) if typ == 4 else (v, 0)))
-
-    # tag ids present, in ascending order (spec requires sorted IFDs)
-    layout_ids = [322, 323, 324, 325] if tile else [273, 278, 279]
-    tag_ids = sorted(
-        [256, 257, 258, 259, 262, 277]
-        + layout_ids
-        + ([317] if predictor == 2 else [])
-        + ([284] if planar == 2 else [])
-    )
-    n_tags = len(tag_ids)
-    ifd_off = 8
-    ifd_size = 2 + 12 * n_tags + 4
-    ext = ifd_off + ifd_size
-    bits_off = ext
-    if channels > 2:
-        ext += 2 * channels
-    so_off, sc_off = ext, ext + 4 * len(segments)
-    data_off = sc_off + 4 * len(segments)
-    offs = []
-    pos = data_off
-    for s in segments:
-        offs.append(pos)
-        pos += len(s)
-
-    one_seg = len(segments) == 1
-    values = {
-        256: tag(256, 4, 1, ival(width)),
-        257: tag(257, 4, 1, ival(height)),
-        258: tag(258, 3, channels,
-                 ival(bits, 3) if channels <= 2 else ival(bits_off)),
-        259: tag(259, 3, 1, ival(compression, 3)),
-        262: tag(262, 3, 1, ival(photometric, 3)),
-        273: tag(273, 4, len(segments),
-                 ival(offs[0]) if one_seg else ival(so_off)),
-        277: tag(277, 3, 1, ival(channels, 3)),
-        278: tag(278, 4, 1, ival(rows_per_strip or height)),
-        279: tag(279, 4, len(segments),
-                 ival(len(segments[0])) if one_seg else ival(sc_off)),
-        284: tag(284, 3, 1, ival(planar, 3)),
-        317: tag(317, 3, 1, ival(predictor, 3)),
-        322: tag(322, 4, 1, ival(tile[0] if tile else 0)),
-        323: tag(323, 4, 1, ival(tile[1] if tile else 0)),
-        324: tag(324, 4, len(segments),
-                 ival(offs[0]) if one_seg else ival(so_off)),
-        325: tag(325, 4, len(segments),
-                 ival(len(segments[0])) if one_seg else ival(sc_off)),
-    }
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00")
-    out += struct.pack(bo + "I", ifd_off)
-    out += struct.pack(bo + "H", n_tags)
-    out += b"".join(values[t] for t in tag_ids)
-    out += struct.pack(bo + "I", 0)  # next-IFD pointer
-    if channels > 2:
-        out += struct.pack(bo + f"{channels}H", *([bits] * channels))
-    out += b"".join(struct.pack(bo + "I", o) for o in offs)
-    out += b"".join(struct.pack(bo + "I", len(s)) for s in segments)
-    for s in segments:
-        out += s
-    return bytes(out)
-
-
-def _split_jpeg_tables(blob):
-    """Split a JPEG stream into (JPEGTables stream, abbreviated stream)
-    per TIFF Tech Note 2: DQT/DHT segments move into an SOI..EOI tables
-    stream; everything else (SOF, DRI, SOS + entropy data) stays."""
-    import struct
-
-    assert blob[:2] == b"\xff\xd8"
-    tables, rest = bytearray(b"\xff\xd8"), bytearray(b"\xff\xd8")
-    i = 2
-    while i < len(blob):
-        assert blob[i] == 0xFF
-        m = blob[i + 1]
-        if m == 0xDA:  # SOS: the entropy-coded tail stays whole
-            rest += blob[i:]
-            break
-        ln = struct.unpack(">H", blob[i + 2 : i + 4])[0]
-        seg = blob[i : i + 2 + ln]
-        (tables if m in (0xDB, 0xC4) else rest).extend(seg)
-        i += 2 + ln
-    tables += b"\xff\xd9"
-    return bytes(tables), bytes(rest)
-
-
-def _write_tiff_jpeg(width, height, segments, channels=1,
-                     big_endian=False, tile=None, rows_per_strip=None,
-                     jpegtables=None):
-    """TIFF container with Compression=7 (new-style JPEG-in-TIFF):
-    ``segments`` are ready-made JPEG streams, one per strip (or per
-    tile when ``tile=(tw, th)``); ``jpegtables`` is an optional
-    SOI..EOI tables stream for tag 347."""
-    import struct
-
-    bo = ">" if big_endian else "<"
-
-    def tag(t, typ, count, value):
-        return struct.pack(bo + "HHI", t, typ, count) + value
-
-    def ival(v, typ=4):
-        return struct.pack(bo + ("I" if typ == 4 else "HH"),
-                           *((v,) if typ == 4 else (v, 0)))
-
-    layout_ids = [322, 323, 324, 325] if tile else [273, 278, 279]
-    tag_ids = sorted([256, 257, 258, 259, 262, 277] + layout_ids
-                     + ([347] if jpegtables else []))
-    n_tags = len(tag_ids)
-    ifd_off = 8
-    ext = ifd_off + 2 + 12 * n_tags + 4
-    bits_off = ext
-    if channels > 2:
-        ext += 2 * channels
-    so_off, sc_off = ext, ext + 4 * len(segments)
-    jt_off = sc_off + 4 * len(segments)
-    data_off = jt_off + (len(jpegtables) if jpegtables else 0)
-    offs = []
-    pos = data_off
-    for s in segments:
-        offs.append(pos)
-        pos += len(s)
-    one_seg = len(segments) == 1
-    values = {
-        256: tag(256, 4, 1, ival(width)),
-        257: tag(257, 4, 1, ival(height)),
-        258: tag(258, 3, channels,
-                 ival(8, 3) if channels <= 2 else ival(bits_off)),
-        259: tag(259, 3, 1, ival(7, 3)),
-        262: tag(262, 3, 1, ival(6 if channels == 3 else 1, 3)),
-        273: tag(273, 4, len(segments),
-                 ival(offs[0]) if one_seg else ival(so_off)),
-        277: tag(277, 3, 1, ival(channels, 3)),
-        278: tag(278, 4, 1, ival(rows_per_strip or height)),
-        279: tag(279, 4, len(segments),
-                 ival(len(segments[0])) if one_seg else ival(sc_off)),
-        322: tag(322, 4, 1, ival(tile[0] if tile else 0)),
-        323: tag(323, 4, 1, ival(tile[1] if tile else 0)),
-        324: tag(324, 4, len(segments),
-                 ival(offs[0]) if one_seg else ival(so_off)),
-        325: tag(325, 4, len(segments),
-                 ival(len(segments[0])) if one_seg else ival(sc_off)),
-        347: tag(347, 7, len(jpegtables or b""), ival(jt_off)),
-    }
-    out = bytearray()
-    out += (b"MM\x00*" if big_endian else b"II*\x00")
-    out += struct.pack(bo + "I", ifd_off)
-    out += struct.pack(bo + "H", n_tags)
-    out += b"".join(values[t] for t in tag_ids)
-    out += struct.pack(bo + "I", 0)
-    if channels > 2:
-        out += struct.pack(bo + f"{channels}H", *([8] * channels))
-    out += b"".join(struct.pack(bo + "I", o) for o in offs)
-    out += b"".join(struct.pack(bo + "I", len(s)) for s in segments)
-    if jpegtables:
-        out += jpegtables
-    for s in segments:
-        out += s
-    return bytes(out)
-
-
-class _Vp8lBits:
-    """LSB-first bit writer (the VP8L stream convention)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, v, nbits):
-        self.acc |= (v & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def put_code(self, code, nbits):
-        # huffman codes are walked MSB-first by the decoder
-        for i in range(nbits - 1, -1, -1):
-            self.put((code >> i) & 1, 1)
-
-    def done(self):
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = self.n = 0
-        return bytes(self.out)
-
-
-def _vp8l_canon(lengths):
-    """{symbol: (code, len)} — canonical assignment, the decoder twin's
-    ordering (by length, then symbol)."""
-    used = sorted(
-        ((l, s) for s, l in lengths.items() if l), key=lambda t: t
-    )
-    max_len = used[-1][0]
-    bl = [0] * (max_len + 1)
-    for l, _s in used:
-        bl[l] += 1
-    nxt = [0] * (max_len + 1)
-    code = 0
-    for l in range(1, max_len + 1):
-        code = (code + bl[l - 1]) << 1
-        nxt[l] = code
-    out = {}
-    for l, s in used:
-        out[s] = (nxt[l], l)
-        nxt[l] += 1
-    return out
-
-
-def _vp8l_hufflens(freqs):
-    """{symbol: code length} via plain Huffman merging (>=2 symbols)."""
-    import heapq
-
-    heap = [(f, i, {s: 0}) for i, (s, f) in enumerate(sorted(freqs.items()))]
-    heapq.heapify(heap)
-    tie = len(heap)
-    while len(heap) > 1:
-        fa, _ta, da = heapq.heappop(heap)
-        fb, _tb, db = heapq.heappop(heap)
-        merged = {s: d + 1 for s, d in da.items()}
-        merged.update({s: d + 1 for s, d in db.items()})
-        heapq.heappush(heap, (fa + fb, tie, merged))
-        tie += 1
-    lens = heap[0][2]
-    assert max(lens.values()) <= 15, "test image too skewed for VP8L"
-    return lens
-
-
-def _vp8l_emit_code(bw, lengths, alphabet):
-    """Emit one prefix code: the simple form for 1-2 symbols < 256,
-    else the normal code-length-coded form."""
-    syms = sorted(s for s, l in lengths.items() if l)
-    if 1 <= len(syms) <= 2 and all(s < 256 for s in syms):
-        bw.put(1, 1)  # simple
-        bw.put(len(syms) - 1, 1)
-        if syms[0] > 1:
-            bw.put(1, 1)
-            bw.put(syms[0], 8)
-        else:
-            bw.put(0, 1)
-            bw.put(syms[0], 1)
-        if len(syms) == 2:
-            bw.put(syms[1], 8)
-        return
-    bw.put(0, 1)  # normal
-    order = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13,
-             14, 15)
-    full = [lengths.get(s, 0) for s in range(alphabet)]
-    distinct = sorted(set(full))
-    k = len(distinct)
-    if k == 1:  # all symbols share one length — impossible to be
-        raise AssertionError("degenerate length set")  # complete here
-    L = max(1, (k - 1).bit_length())
-    nshort = (1 << L) - k
-    clc_lens = {
-        s: (L - 1 if i < nshort and L > 1 else L)
-        for i, s in enumerate(distinct)
-    }
-    pos = {s: i for i, s in enumerate(order)}
-    num = max(4, max(pos[s] for s in clc_lens) + 1)
-    bw.put(num - 4, 4)
-    for i in range(num):
-        bw.put(clc_lens.get(order[i], 0), 3)
-    bw.put(0, 1)  # no explicit max-symbol bound
-    codes = _vp8l_canon(clc_lens)
-    for l in full:
-        c, n = codes[l]
-        bw.put_code(c, n)
-
-
-def _vp8l_prefix(v):
-    """Inverse of the decoder's LZ77 prefix mapping: value ->
-    (code, extra_bits_value, extra_bits_count)."""
-    if v <= 4:
-        return v - 1, 0, 0
-    code = 4
-    while True:
-        extra = (code - 2) >> 1
-        off = (2 + (code & 1)) << extra
-        if off + 1 <= v <= off + (1 << extra):
-            return code, v - off - 1, extra
-        code += 1
-
-
-def _vp8l_dist_table():
-    # same generative rule as the decoder's closure table
-    cand = [(x, y) for y in range(0, 12) for x in range(-11, 12)
-            if y > 0 or x > 0]
-    cand.sort(key=lambda p: (p[0] * p[0] + p[1] * p[1], -p[1], p[0] < 0))
-    return cand[:120]
-
-
-_VP8L_DIST = _vp8l_dist_table()
-
-
-def _vp8l_emit_entropy_image(bw, width, pixels_argb, cache_bits=0,
-                             use_lz77=False, meta=None, level0=True):
-    """Emit one VP8L entropy-coded image (after any transform bits the
-    caller already wrote). ``pixels_argb`` is a flat list of 32-bit
-    ARGB ints. ``meta=(mbits, group_of_block)`` turns on the Huffman
-    image (2D group map, emitted recursively). Only level-0 images
-    carry the Huffman-image bit — sub-images pass ``level0=False``."""
-    if cache_bits:
-        bw.put(1, 1)
-        bw.put(cache_bits, 4)
-    else:
-        bw.put(0, 1)
-    groups_idx = [0] * len(pixels_argb)
-    n_groups = 1
-    if meta is not None:
-        mbits, gmap = meta  # gmap: flat group id per meta-block
-        bw.put(1, 1)
-        bw.put(mbits - 2, 3)
-        mw = (width + (1 << mbits) - 1) >> mbits
-        # group id lives in (red << 8) | green of the meta pixel
-        meta_px = [(((g >> 8) & 0xFF) << 16) | ((g & 0xFF) << 8)
-                   for g in gmap]
-        _vp8l_emit_entropy_image(bw, mw, meta_px, level0=False)
-        n_groups = max(gmap) + 1
-        for pos in range(len(pixels_argb)):
-            x, y = pos % width, pos // width
-            groups_idx[pos] = gmap[(y >> mbits) * mw + (x >> mbits)]
-    elif level0:
-        bw.put(0, 1)  # no huffman image
-    ops = []  # ("lit", argb) / ("copy", length, dist) / ("cache", idx)
-    cache = [None] * (1 << cache_bits) if cache_bits else None
-    pos = 0
-    npx = len(pixels_argb)
-    while pos < npx:
-        p = pixels_argb[pos]
-        run = 0
-        if use_lz77 and pos:
-            for dist in (1, width):
-                if dist > pos:
-                    continue
-                r = 0
-                while pos + r < npx and pixels_argb[pos + r] == \
-                        pixels_argb[pos + r - dist]:
-                    r += 1
-                if r >= 3:
-                    ops.append(("copy", r, dist))
-                    for i in range(pos, pos + r):
-                        if cache is not None:
-                            cache[(0x1E35A7BD * pixels_argb[i]
-                                   & 0xFFFFFFFF) >> (32 - cache_bits)] = \
-                                pixels_argb[i]
-                    pos += r
-                    run = r
-                    break
-        if run:
-            continue
-        if cache is not None:
-            h = (0x1E35A7BD * p & 0xFFFFFFFF) >> (32 - cache_bits)
-            if cache[h] == p:
-                ops.append(("cache", h))
-                pos += 1
-                continue
-            cache[h] = p
-        ops.append(("lit", p))
-        pos += 1
-    # frequencies per group (this twin uses group 0 for all unless meta)
-    galpha = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    per_group = [
-        {"g": {}, "r": {}, "b": {}, "a": {}, "d": {}}
-        for _ in range(n_groups)
-    ]
-
-    def _bump(d, k):
-        d[k] = d.get(k, 0) + 1
-
-    opos = 0
-    op_group = []
-    for op in ops:
-        f = per_group[groups_idx[opos]]
-        op_group.append(groups_idx[opos])
-        if op[0] == "lit":
-            p = op[1]
-            _bump(f["g"], (p >> 8) & 0xFF)
-            _bump(f["r"], (p >> 16) & 0xFF)
-            _bump(f["b"], p & 0xFF)
-            _bump(f["a"], (p >> 24) & 0xFF)
-            opos += 1
-        elif op[0] == "copy":
-            lcode, _lv, _ln = _vp8l_prefix(op[1])
-            _bump(f["g"], 256 + lcode)
-            dist = op[2]
-            pcode = dist + 120
-            for i, (dx, dy) in enumerate(_VP8L_DIST):
-                if dy * width + dx == dist:
-                    pcode = i + 1
-                    break
-            dcode, _dv, _dn = _vp8l_prefix(pcode)
-            _bump(f["d"], dcode)
-            opos += op[1]
-        else:
-            _bump(f["g"], 280 + op[1])
-            opos += 1
-    all_codes = []
-    for f in per_group:
-        codes = {}
-        for key, alphabet in (("g", galpha), ("r", 256), ("b", 256),
-                              ("a", 256), ("d", 40)):
-            freqs = f[key] or {0: 1}
-            if len(freqs) == 1:
-                s = next(iter(freqs))
-                lens = {s: 1, (s + 1) % min(alphabet, 256): 1}
-                # keep it a valid 2-symbol code; decoder never reads
-                # the filler symbol
-                if key == "g" and s >= 256:
-                    lens = {s: 1, 0: 1}
-                codes[key] = (lens, _vp8l_canon(lens))
-            else:
-                lens = _vp8l_hufflens(freqs)
-                codes[key] = (lens, _vp8l_canon(lens))
-        all_codes.append(codes)
-    for codes in all_codes:
-        for key, alphabet in (("g", galpha), ("r", 256), ("b", 256),
-                              ("a", 256), ("d", 40)):
-            _vp8l_emit_code(bw, codes[key][0], alphabet)
-    gi = 0
-    for op in ops:
-        codes = all_codes[op_group[gi]]
-        gi += 1
-        cg = codes["g"][1]
-        if op[0] == "lit":
-            p = op[1]
-            bw.put_code(*cg[(p >> 8) & 0xFF])
-            bw.put_code(*codes["r"][1][(p >> 16) & 0xFF])
-            bw.put_code(*codes["b"][1][p & 0xFF])
-            bw.put_code(*codes["a"][1][(p >> 24) & 0xFF])
-        elif op[0] == "copy":
-            lcode, lv, ln = _vp8l_prefix(op[1])
-            bw.put_code(*cg[256 + lcode])
-            bw.put(lv, ln)
-            dist = op[2]
-            pcode = dist + 120
-            for i, (dx, dy) in enumerate(_VP8L_DIST):
-                if dy * width + dx == dist:
-                    pcode = i + 1
-                    break
-            dcode, dv, dn = _vp8l_prefix(pcode)
-            bw.put_code(*codes["d"][1][dcode])
-            bw.put(dv, dn)
-        else:
-            bw.put_code(*cg[280 + op[1]])
-
-
-def _vp8l_s8(v):
-    return v - 256 if v >= 128 else v
-
-
-def _vp8l_avg2(a, b):
-    return ((((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b)) & 0xFFFFFFFF
-
-
-def _vp8l_subpx(a, b):
-    """Per-channel (a - b) & 0xff."""
-    out = 0
-    for shift in (24, 16, 8, 0):
-        out |= ((((a >> shift) & 0xFF) - ((b >> shift) & 0xFF)) & 0xFF) \
-            << shift
-    return out
-
-
-def _vp8l_predict(mode, L, T, TL, TR):
-    """Forward twin of the decoder's predictor modes."""
-    def chans(p):
-        return ((p >> 24) & 0xFF, (p >> 16) & 0xFF, (p >> 8) & 0xFF,
-                p & 0xFF)
-
-    if mode == 0:
-        return 0xFF000000
-    if mode == 1:
-        return L
-    if mode == 2:
-        return T
-    if mode == 3:
-        return TR
-    if mode == 4:
-        return TL
-    if mode == 5:
-        return _vp8l_avg2(_vp8l_avg2(L, TR), T)
-    if mode == 6:
-        return _vp8l_avg2(L, TL)
-    if mode == 7:
-        return _vp8l_avg2(L, T)
-    if mode == 8:
-        return _vp8l_avg2(TL, T)
-    if mode == 9:
-        return _vp8l_avg2(T, TR)
-    if mode == 10:
-        return _vp8l_avg2(_vp8l_avg2(L, TL), _vp8l_avg2(T, TR))
-    if mode == 11:
-        pl = pt = 0
-        for cl, ct, ctl in zip(chans(L), chans(T), chans(TL)):
-            pr = cl + ct - ctl
-            pl += abs(pr - cl)
-            pt += abs(pr - ct)
-        return L if pl <= pt else T
-    if mode == 12:
-        out = 0
-        for shift in (24, 16, 8, 0):
-            v = ((L >> shift) & 0xFF) + ((T >> shift) & 0xFF) \
-                - ((TL >> shift) & 0xFF)
-            out |= (0 if v < 0 else 255 if v > 255 else v) << shift
-        return out
-    ave = _vp8l_avg2(L, T)
-    out = 0
-    for shift in (24, 16, 8, 0):
-        a = (ave >> shift) & 0xFF
-        b = (TL >> shift) & 0xFF
-        v = a + int((a - b) / 2)
-        out |= (0 if v < 0 else 255 if v > 255 else v) << shift
-    return out
-
-
-def _write_vp8l(width, height, pixels, alpha=False, cache_bits=0,
-                use_lz77=False, subtract_green=False, meta=None,
-                predictor=None, color=None, palette=False):
-    """Minimal VP8L (lossless WebP) encoder twin for decoder tests.
-    ``pixels``: list of (r, g, b) or (r, g, b, a) tuples.
-    ``predictor=(size_bits, modes)`` / ``color=(size_bits, ctes)``
-    enable those transforms with per-block parameters (ctes are
-    (g2r, g2b, r2b) signed ints); ``palette=True`` color-indexes the
-    image (sub-byte packed when <= 16 colors). Forward transforms are
-    applied in stream order; the decoder inverts them in reverse."""
-    assert not (palette and (subtract_green or predictor or color))
-    bw = _Vp8lBits()
-    bw.put(0x2F, 8)
-    bw.put(width - 1, 14)
-    bw.put(height - 1, 14)
-    bw.put(1 if alpha else 0, 1)
-    bw.put(0, 3)
-    argb = []
-    for px in pixels:
-        r, g, b = px[0], px[1], px[2]
-        a = px[3] if len(px) > 3 else 0xFF
-        argb.append((a << 24) | (r << 16) | (g << 8) | b)
-    ew = width
-    if subtract_green:
-        bw.put(1, 1)
-        bw.put(2, 2)
-        argb = [
-            (p & 0xFF00FF00)
-            | ((((p >> 16) & 0xFF) - ((p >> 8) & 0xFF)) & 0xFF) << 16
-            | ((p & 0xFF) - ((p >> 8) & 0xFF)) & 0xFF
-            for p in argb
-        ]
-    if color is not None:
-        size_bits, ctes = color
-        bw.put(1, 1)
-        bw.put(1, 2)
-        bw.put(size_bits - 2, 3)
-        mw = (ew + (1 << size_bits) - 1) >> size_bits
-        cte_px = [
-            ((r2b & 0xFF) << 16) | ((g2b & 0xFF) << 8) | (g2r & 0xFF)
-            for (g2r, g2b, r2b) in ctes
-        ]
-        _vp8l_emit_entropy_image(bw, mw, cte_px, level0=False)
-        out = []
-        for pos, p in enumerate(argb):
-            x, y = pos % ew, pos // ew
-            g2r, g2b, r2b = ctes[(y >> size_bits) * mw + (x >> size_bits)]
-            g = _vp8l_s8((p >> 8) & 0xFF)
-            r = (p >> 16) & 0xFF
-            b = p & 0xFF
-            nr = (r - ((g2r * g) >> 5)) & 0xFF
-            nb = (b - ((g2b * g) >> 5) - ((r2b * _vp8l_s8(r)) >> 5)) & 0xFF
-            out.append((p & 0xFF00FF00) | (nr << 16) | nb)
-        argb = out
-    if predictor is not None:
-        size_bits, modes = predictor
-        bw.put(1, 1)
-        bw.put(0, 2)
-        bw.put(size_bits - 2, 3)
-        mw = (ew + (1 << size_bits) - 1) >> size_bits
-        _vp8l_emit_entropy_image(bw, mw, [m << 8 for m in modes],
-                                 level0=False)
-        out = [0] * len(argb)
-        for pos, p in enumerate(argb):
-            x, y = pos % ew, pos // ew
-            if pos == 0:
-                pred = 0xFF000000
-            elif y == 0:
-                pred = argb[pos - 1]
-            elif x == 0:
-                pred = argb[pos - ew]
-            else:
-                mode = modes[(y >> size_bits) * mw + (x >> size_bits)]
-                pred = _vp8l_predict(
-                    mode, argb[pos - 1], argb[pos - ew],
-                    argb[pos - ew - 1], argb[pos - ew + 1],
-                )
-            out[pos] = _vp8l_subpx(p, pred)
-        argb = out
-    if palette:
-        pal = []
-        index = {}
-        for p in argb:
-            if p not in index:
-                index[p] = len(pal)
-                pal.append(p)
-        n = len(pal)
-        assert n <= 256, "palette twin needs <= 256 colors"
-        bw.put(1, 1)
-        bw.put(3, 2)
-        bw.put(n - 1, 8)
-        deltas = [pal[0]] + [
-            _vp8l_subpx(pal[i], pal[i - 1]) for i in range(1, n)
-        ]
-        _vp8l_emit_entropy_image(bw, n, deltas, level0=False)
-        wbits = 3 if n <= 2 else 2 if n <= 4 else 1 if n <= 16 else 0
-        if wbits:
-            bpp = 8 >> wbits
-            packed_w = (width + (1 << wbits) - 1) >> wbits
-            packed = []
-            for y in range(height):
-                for pxi in range(packed_w):
-                    g = 0
-                    for i in range(1 << wbits):
-                        x = (pxi << wbits) + i
-                        if x >= width:
-                            break
-                        g |= index[argb[y * width + x]] << (i * bpp)
-                    packed.append(g << 8)
-            argb = packed
-            ew = packed_w
-        else:
-            argb = [index[p] << 8 for p in argb]
-    bw.put(0, 1)  # end of transforms
-    _vp8l_emit_entropy_image(bw, ew, argb, cache_bits=cache_bits,
-                             use_lz77=use_lz77, meta=meta)
-    payload = bw.done()
-    riff = b"VP8L" + len(payload).to_bytes(4, "little") + payload
-    if len(payload) & 1:
-        riff += b"\x00"
-    return (b"RIFF" + (4 + len(riff)).to_bytes(4, "little") + b"WEBP"
-            + riff)
-
-
-def _write_pnm(width, height, pixels, channels, maxval=255, comment=False):
-    """Minimal stdlib netpbm writer (binary P5/P6) for decoder tests."""
-    magic = b"P6" if channels == 3 else b"P5"
-    hdr = magic + b"\n"
-    if comment:
-        hdr += b"# generated by the test suite\n"
-    hdr += f"{width} {height}\n{maxval}\n".encode()
-    flat = bytes(v for px in pixels for v in px)
-    return hdr + flat
-
-
-def test_decode_gif_stdlib():
-    px = [(255, 0, 10), (0, 255, 30), (1, 2, 3), (255, 0, 10)]
-    blob = _write_gif(2, 2, px)
-    w, h, ch, means = MM.decode_gif(blob)
-    assert (w, h, ch) == (2, 2, 3)
-    n = 4 * 255.0
-    assert means == [sum(p[c] for p in px) / n for c in range(3)]
-    # local color table, GCE extension block, and the interlace flag
-    # (means are order-independent) all decode identically
-    for kw in ({"use_local_table": True}, {"with_gce": True},
-               {"interlace_flag": True}):
-        assert MM.decode_gif(_write_gif(2, 2, px, **kw)) == (w, h, ch, means)
-    # single-color image: min LZW code size clamps to 2
-    assert MM.decode_gif(_write_gif(3, 1, [(7, 8, 9)] * 3))[:3] == (3, 1, 3)
-    with pytest.raises(ValueError):
-        MM.decode_gif(b"XXnot a gif")
-    with pytest.raises(ValueError):
-        MM.decode_gif(_write_gif(2, 2, px)[:20])  # truncated mid-stream
-
-
-def _strip_gct(blob: bytes) -> bytes:
-    """Remove a GIF's global color table and clear its flag — produces
-    the legal-but-tableless GIF class (GIF89a §19 leaves the palette
-    to the decoder)."""
-    packed = blob[10]
-    assert packed & 0x80, "fixture must carry a GCT"
-    n = 2 ** ((packed & 0x07) + 1)
-    out = bytearray(blob)
-    out[10] = packed & 0x7F
-    del out[13 : 13 + 3 * n]
-    return bytes(out)
-
-
-def test_decode_gif_no_color_table_default_palette():
-    """A GIF with neither global nor local color table decodes with
-    the spec-mandated decoder-supplied default — the deterministic
-    grayscale ramp over the LZW root alphabet (r14; formerly a PIL
-    NotImplementedError gate). Four distinct indices at min_code=2 →
-    ramp [0, 85, 170, 255] → every channel mean is exactly 0.5."""
-    px = [(0, 0, 0), (10, 10, 10), (20, 20, 20), (30, 30, 30)]
-    blob = _strip_gct(_write_gif(2, 2, px))
-    w, h, ch, means = MM.decode_gif(blob)
-    assert (w, h, ch) == (2, 2, 3)
-    assert means == [0.5, 0.5, 0.5]
-    # a single-index tableless GIF sits at ramp entry 0 → pure black
-    blob1 = _strip_gct(_write_gif(3, 1, [(7, 8, 9)] * 3))
-    assert MM.decode_gif(blob1) == (3, 1, 3, [0.0, 0.0, 0.0])
-
-
-def test_extract_features_real_gif_through_mapinpandas(spark):
-    """fake=False must route GIF payloads by magic bytes through the
-    stdlib LZW decoder inside the Arrow-batched mapInPandas stage."""
-    import random
-
-    rng = random.Random(23)
-    rows, want = [], {}
-    for i in range(4):
-        wd, ht = 3 + i, 2 + (i % 2)
-        px = [
-            (rng.randrange(256), rng.randrange(256), rng.randrange(256))
-            for _ in range(wd * ht)
-        ]
-        blob = _write_gif(wd, ht, px)
-        rows.append(Row(media_id=i, content=bytearray(blob)))
-        want[i] = MM.gif_features(blob)
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {
-        r.media_id: [r[f"f{j}"] for j in range(MM.N_FAKE_FEATURES)]
-        for r in MM.extract_features(df, fake=False).collect()
-    }
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i])
-    assert [got[0][0], got[0][1], got[0][2]] == [3.0, 2.0, 3.0]
-
-
-def _jpeg_rgb_means(exp):
-    """RGB means from per-component (Y, Cb, Cr) means — the same
-    affine conversion decode_jpeg_stats applies."""
-    off = 128.0 / 255.0
-    y, cb, cr = exp
-    return [
-        min(1.0, max(0.0, v))
-        for v in (
-            y + 1.402 * (cr - off),
-            y - 0.344136 * (cb - off) - 0.714136 * (cr - off),
-            y + 1.772 * (cb - off),
-        )
-    ]
-
-
-def test_decode_jpeg_stats_stdlib():
-    """The DC-statistics decoder recovers dims + channel means exactly
-    from the quantized DCs the stream carries — grayscale, 4:4:4,
-    4:2:0 with restart markers, and AC-noise blocks (which shift no
-    mean but force every AC-skip branch)."""
-    import random
-
-    rng = random.Random(41)
-    grid = [[rng.randrange(256) for _ in range(3)] for _ in range(2)]
-    blob, exp = _write_jpeg_dc([(1, 1, grid)])
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (24, 16, 1)
-    assert means == [pytest.approx(exp[0], abs=1e-12)]
-
-    g = lambda: [[rng.randrange(256) for _ in range(4)] for _ in range(3)]  # noqa: E731
-    blob, exp = _write_jpeg_dc([(1, 1, g()), (1, 1, g()), (1, 1, g())])
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (32, 24, 3)
-    assert means == pytest.approx(_jpeg_rgb_means(exp), abs=1e-12)
-
-    # 4:2:0 + restarts + AC noise
-    mc, mr = 5, 4
-    yg = [[rng.randrange(256) for _ in range(mc * 2)] for _ in range(mr * 2)]
-    cbg = [[rng.randrange(256) for _ in range(mc)] for _ in range(mr)]
-    crg = [[rng.randrange(256) for _ in range(mc)] for _ in range(mr)]
-    blob, exp = _write_jpeg_dc(
-        [(2, 2, yg), (1, 1, cbg), (1, 1, crg)],
-        q0=8, restart_interval=3, ac_noise=rng,
-    )
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (mc * 16, mr * 16, 3)
-    assert means == pytest.approx(_jpeg_rgb_means(exp), abs=1e-12)
-
-    # non-MCU-aligned dims: edge blocks weight by visible pixels only
-    blob, exp = _write_jpeg_dc(
-        [(2, 2, yg), (1, 1, cbg), (1, 1, crg)],
-        width=mc * 16 - 7, height=mr * 16 - 3, ac_noise=rng,
-    )
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (mc * 16 - 7, mr * 16 - 3, 3)
-    assert means == pytest.approx(_jpeg_rgb_means(exp), abs=1e-12)
-
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(b"\x89PNG not a jpeg")
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(blob[: len(blob) // 2])  # truncated
-    # corrupt internals (short DHT, zero sampling factors) normalize to
-    # ValueError so the dispatch can route them to the PIL gate
-    dht_at = blob.find(b"\xff\xc4")
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(blob[: dht_at + 6] + blob[dht_at + 10 :])
-    sof_at = blob.find(b"\xff\xc0")
-    zeroed = bytearray(blob)
-    zeroed[sof_at + 11] = 0x00  # first component h=v=0
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(bytes(zeroed))
-    # re-marking a BASELINE stream as SOF2 routes to the progressive
-    # path, whose scan validation rejects the baseline Ss=0/Se=63
-    # spectral selection (a real progressive DC scan has Se=0)
-    prog = bytearray(blob)
-    prog[sof_at + 1] = 0xC2
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(bytes(prog))
-
-
-def test_decode_jpeg_progressive_stdlib():
-    """Progressive (SOF2) streams: the DC scans (first pass + every
-    refinement) reconstruct exact DCs while the AC scans are skipped at
-    the byte level — grayscale, 4:2:0 color with restarts, the
-    non-interleaved-DC variant, a coarse unrefined stream (Al left at
-    1: means equal the truncated DCs), and non-MCU-aligned dims."""
-    import random
-
-    rng = random.Random(59)
-
-    # grayscale, Al=1 refined to 0 -> exact means
-    grid = [[rng.randrange(256) for _ in range(4)] for _ in range(3)]
-    blob, exp = _write_jpeg_prog([(1, 1, grid)], al=1, ac_noise=rng)
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (32, 24, 1)
-    assert means == [pytest.approx(exp[0], abs=1e-12)]
-
-    # 4:2:0 color + restart markers + two refinement steps (Al=2)
-    mc, mr = 4, 3
-    yg = [[rng.randrange(256) for _ in range(mc * 2)] for _ in range(mr * 2)]
-    cbg = [[rng.randrange(256) for _ in range(mc)] for _ in range(mr)]
-    crg = [[rng.randrange(256) for _ in range(mc)] for _ in range(mr)]
-    blob, exp = _write_jpeg_prog(
-        [(2, 2, yg), (1, 1, cbg), (1, 1, crg)],
-        q0=8, al=2, restart_interval=3, ac_noise=rng,
-    )
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (mc * 16, mr * 16, 3)
-    assert means == pytest.approx(_jpeg_rgb_means(exp), abs=1e-12)
-
-    # non-interleaved DC scans (one per component)
-    blob, exp = _write_jpeg_prog(
-        [(2, 2, yg), (1, 1, cbg), (1, 1, crg)],
-        al=1, dc_single_scans=True, ac_noise=rng,
-    )
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h, ch) == (mc * 16, mr * 16, 3)
-    assert means == pytest.approx(_jpeg_rgb_means(exp), abs=1e-12)
-
-    # unrefined stream: decoder sees DC>>1<<1 — expected follows suit
-    blob, exp = _write_jpeg_prog(
-        [(1, 1, grid)], al=1, refine=False, ac_noise=rng
-    )
-    _w, _h, _ch, means = MM.decode_jpeg_stats(blob)
-    assert means == [pytest.approx(exp[0], abs=1e-12)]
-
-    # non-MCU-aligned dims: edge blocks weighted by visible pixels
-    blob, exp = _write_jpeg_prog(
-        [(2, 2, yg), (1, 1, cbg), (1, 1, crg)],
-        al=1, width=mc * 16 - 5, height=mr * 16 - 9, ac_noise=rng,
-    )
-    w, h, ch, means = MM.decode_jpeg_stats(blob)
-    assert (w, h) == (mc * 16 - 5, mr * 16 - 9)
-    assert means == pytest.approx(_jpeg_rgb_means(exp), abs=1e-12)
-
-    # a refinement scan before any first DC scan is malformed
-    first_sos = blob.index(b"\xff\xda")
-    broken = bytearray(blob)
-    # flip the first DC scan's Ah nibble to fake a refinement
-    ns = broken[first_sos + 4]
-    ahal = first_sos + 4 + 1 + 2 * ns + 2
-    broken[ahal] = 0x21
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(bytes(broken))
-    # truncating mid-DC-scan is a typed failure, never a crash
-    with pytest.raises(ValueError):
-        MM.decode_jpeg_stats(blob[: first_sos + 20])
-
-
-def test_extract_features_real_jpeg_through_mapinpandas(spark):
-    """fake=False must route JPEG payloads by magic bytes through the
-    DC-statistics decoder inside the Arrow-batched mapInPandas stage."""
-    import random
-
-    rng = random.Random(29)
-    rows, want = [], {}
-    for i in range(3):
-        g = lambda: [[rng.randrange(256) for _ in range(2 + i)] for _ in range(2)]  # noqa: E731
-        blob, _ = _write_jpeg_dc(
-            [(1, 1, g()), (1, 1, g()), (1, 1, g())], ac_noise=rng
-        )
-        rows.append(Row(media_id=i, content=bytearray(blob)))
-        want[i] = MM.jpeg_features(blob)
-    # a progressive (SOF2) payload must route through the same magic-
-    # byte dispatch and decode inside the worker, not fall to the gate
-    g = lambda: [[rng.randrange(256) for _ in range(3)] for _ in range(2)]  # noqa: E731
-    pblob, _ = _write_jpeg_prog(
-        [(1, 1, g()), (1, 1, g()), (1, 1, g())], al=1, ac_noise=rng
-    )
-    rows.append(Row(media_id=3, content=bytearray(pblob)))
-    want[3] = MM.jpeg_features(pblob)
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {
-        r.media_id: [r[f"f{j}"] for j in range(MM.N_FAKE_FEATURES)]
-        for r in MM.extract_features(df, fake=False).collect()
-    }
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i])
-    assert [got[0][0], got[0][1], got[0][2]] == [16.0, 16.0, 3.0]
-
-
-def test_decode_tiff_stdlib():
-    px = [(255, 0, 10), (0, 255, 30), (1, 2, 3), (4, 5, 6)]
-    blob = _write_tiff(2, 2, px, 3)
-    w, h, ch, means = MM.decode_tiff(blob)
-    assert (w, h, ch) == (2, 2, 3)
-    n = 4 * 255.0
-    assert means == [sum(p[c] for p in px) / n for c in range(3)]
-    # big-endian, PackBits, multi-strip: identical means
-    for kw in ({"big_endian": True}, {"packbits": True},
-               {"rows_per_strip": 1}, {"packbits": True, "rows_per_strip": 1}):
-        assert MM.decode_tiff(_write_tiff(2, 2, px, 3, **kw)) == (
-            w, h, ch, means,
-        )
-    # WhiteIsZero grayscale inverts
-    g = [(200,), (100,), (50,), (0,)]
-    _, _, _, inv = MM.decode_tiff(_write_tiff(2, 2, g, 1, white_is_zero=True))
-    assert inv == [1.0 - (350 / (4 * 255.0))]
-    with pytest.raises(ValueError):
-        MM.decode_tiff(b"XX not a tiff")
-    with pytest.raises(NotImplementedError):
-        bad = bytearray(_write_tiff(2, 2, px, 3))
-        bad[8 + 2 + 12 * 3 + 8] = 6  # compression tag -> old-style JPEG
-        MM.decode_tiff(bytes(bad))
-    with pytest.raises(ValueError):  # new-style JPEG with garbage data
-        bad = bytearray(_write_tiff(2, 2, px, 3))
-        bad[8 + 2 + 12 * 3 + 8] = 7
-        MM.decode_tiff(bytes(bad))
-
-
-def test_decode_tiff_lzw_predictor_tiled():
-    """LZW compression (TIFF6 §13 incl. early change), the horizontal
-    predictor, and the tile layout (TIFF6 §15 incl. edge padding, which
-    the writer fills with a NON-zero byte so counted padding would shift
-    the means) all decode to exactly the plain-strip answer."""
-    import random
-
-    rng = random.Random(17)
-    w, h = 10, 7
-    px = [tuple(rng.randrange(256) for _ in range(3)) for _ in range(w * h)]
-    base = MM.decode_tiff(_write_tiff(w, h, px, 3))
-    for kw in (
-        {"lzw": True},
-        {"lzw": True, "predictor": 2},
-        {"predictor": 2},
-        {"lzw": True, "rows_per_strip": 2, "big_endian": True},
-        {"tile": (4, 4)},
-        {"tile": (16, 16)},  # one tile, padded past both image edges
-        {"tile": (4, 4), "lzw": True, "predictor": 2},
-        {"tile": (4, 4), "packbits": True},
-        {"tile": (5, 7), "big_endian": True},
-    ):
-        assert MM.decode_tiff(_write_tiff(w, h, px, 3, **kw)) == base, kw
-    # grayscale tiled + predictor, WhiteIsZero
-    g = [(v,) for v in range(40)]
-    gb = MM.decode_tiff(_write_tiff(8, 5, g, 1, white_is_zero=True))
-    assert MM.decode_tiff(
-        _write_tiff(8, 5, g, 1, white_is_zero=True, tile=(3, 2),
-                    lzw=True, predictor=2)
-    ) == gb
-    # a 12 000-sample stream crosses the 9->10->11->12 bit LZW widths
-    # on BOTH encoder and decoder (early-change convention must agree)
-    big = [(rng.randrange(256),) for _ in range(12_000)]
-    flat_mean = sum(v[0] for v in big) / (12_000 * 255.0)
-    gw, gh, gch, means = MM.decode_tiff(_write_tiff(100, 120, big, 1, lzw=True))
-    assert (gw, gh, gch) == (100, 120, 1)
-    assert means == [pytest.approx(flat_mean, abs=0)]
-    # low-entropy input (long runs) exercises the KwKwK decode branch
-    runs = [(i // 97 % 256,) for i in range(5_000)]
-    assert MM.decode_tiff(_write_tiff(100, 50, runs, 1, lzw=True)) == (
-        MM.decode_tiff(_write_tiff(100, 50, runs, 1))
-    )
-    # malformed tile structures fail typed
-    blob = _write_tiff(w, h, px, 3, tile=(4, 4))
-    with pytest.raises(ValueError):  # drop one tile: count mismatch
-        trunc = bytearray(blob)
-        # tag 324 count lives in the IFD; cheaper: truncate the file so
-        # the last tile's bytes are out of bounds
-        MM.decode_tiff(bytes(trunc[: len(trunc) - 5]))
-
-
-def _vp8l_exact_means(pixels, n, alpha):
-    ms = [sum(p[c] for p in pixels) / (n * 255.0) for c in range(3)]
-    if alpha:
-        ms.append(sum((p[3] if len(p) > 3 else 255) for p in pixels)
-                  / (n * 255.0))
-    return ms
-
-
-def test_decode_webp_vp8l_literals():
-    """VP8L stage 1: header, canonical + simple + code-length-coded
-    Huffman codes, literal pixels, RGB and RGBA, tiny and non-trivial
-    sizes — decoded means are exact."""
-    import random
-
-    rng = random.Random(41)
-    for w, h, alpha in ((1, 1, False), (3, 2, False), (16, 9, True),
-                        (40, 23, False)):
-        px = [
-            tuple(rng.randrange(256) for _ in range(4 if alpha else 3))
-            for _ in range(w * h)
-        ]
-        blob = _write_vp8l(w, h, px, alpha=alpha)
-        gw, gh, gch, means = MM.decode_webp(blob)
-        assert (gw, gh, gch) == (w, h, 4 if alpha else 3)
-        assert means == pytest.approx(
-            _vp8l_exact_means(px, w * h, alpha), abs=1e-12
-        )
-    # low-entropy image: simple 2-symbol and single-symbol codes
-    px = [(7, 200, 3)] * 12
-    gw, gh, gch, means = MM.decode_webp(_write_vp8l(4, 3, px))
-    assert (gw, gh, gch) == (4, 3, 3)
-    assert means == pytest.approx(_vp8l_exact_means(px, 12, False))
-    # VP8X extended container: the VP8L chunk found past VP8X decodes
-    px = [(9, 8, 7), (1, 2, 3)]
-    inner = _write_vp8l(2, 1, px)
-    i = inner.find(b"VP8L")
-    vp8l_chunk = inner[i:]
-    vp8x = b"VP8X" + (10).to_bytes(4, "little") + b"\x00" * 10
-    body = b"WEBP" + vp8x + vp8l_chunk
-    blob = b"RIFF" + len(body).to_bytes(4, "little") + body
-    assert MM.decode_webp(blob) == MM.decode_webp(inner)
-    # container-level contracts
-    with pytest.raises(ValueError):
-        MM.decode_webp(b"RIFFxxxxNOPE")
-    with pytest.raises(NotImplementedError):  # lossy VP8 chunk
-        MM.decode_webp(
-            b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
-            + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4
-        )
-    with pytest.raises(ValueError):  # truncated VP8L payload
-        blob = _write_vp8l(16, 9, [(1, 2, 3)] * 144)
-        MM.decode_webp(blob[: len(blob) - 6])
-
-
-def test_decode_webp_vp8l_lz77_cache_subgreen_meta():
-    """VP8L stage 2: backward references (distance 1 and row distance
-    through the 2D neighborhood table AND linear codes), the hashed
-    color cache, the subtract-green transform, and the meta-Huffman
-    (Huffman image) path — all against exact means."""
-    import random
-
-    rng = random.Random(43)
-    w, h = 24, 11
-    # runs + repeated rows exercise dist=1 and dist=w references
-    palette = [(10, 20, 30), (200, 100, 50), (0, 0, 0), (255, 255, 255)]
-    px = []
-    for y in range(h):
-        if y and y % 3 == 0:
-            px.extend(px[-w:])  # whole-row repeat -> dist == w
-            continue
-        row = []
-        while len(row) < w:
-            c = palette[rng.randrange(len(palette))]
-            row.extend([c] * min(rng.randrange(1, 7), w - len(row)))
-        px.extend(row)
-    exact = _vp8l_exact_means(px, w * h, False)
-    for kw in (
-        {"use_lz77": True},
-        {"cache_bits": 4},
-        {"use_lz77": True, "cache_bits": 6},
-        {"subtract_green": True},
-        {"subtract_green": True, "use_lz77": True, "cache_bits": 3},
-    ):
-        got = MM.decode_webp(_write_vp8l(w, h, px, **kw))
-        assert got[:3] == (w, h, 3), kw
-        assert got[3] == pytest.approx(exact, abs=1e-12), kw
-
-    # meta-huffman: 4 meta-blocks (2x2 of 16px blocks), 2 code groups
-    w2, h2 = 32, 20
-    px2 = [
-        tuple(rng.randrange(256) for _ in range(3)) for _ in range(w2 * h2)
-    ]
-    gmap = [0, 1, 1, 0]  # 2x2 huffman image (mbits=4)
-    got = MM.decode_webp(_write_vp8l(w2, h2, px2, meta=(4, gmap)))
-    assert got[:3] == (w2, h2, 3)
-    assert got[3] == pytest.approx(
-        _vp8l_exact_means(px2, w2 * h2, False), abs=1e-12
-    )
-    # meta + cache + lz77 together
-    px3 = px + px[: w * 5]
-    got = MM.decode_webp(
-        _write_vp8l(w, h + 5, px3, use_lz77=True, cache_bits=5,
-                    meta=(3, [0, 1, 2] * 2))
-    )
-    assert got[:3] == (w, h + 5, 3)
-    assert got[3] == pytest.approx(
-        _vp8l_exact_means(px3, w * (h + 5), False), abs=1e-12
-    )
-
-
-def test_decode_webp_vp8l_transforms():
-    """VP8L stage 3: color indexing (packed 1/2/4-bit and unpacked),
-    every predictor mode 0-13, per-block cross-color transforms, and
-    stacked transform combinations — exact means throughout."""
-    import random
-
-    rng = random.Random(47)
-    w, h = 21, 10
-    # ---- palette forms
-    for ncolors in (2, 4, 13, 40):
-        pool = [
-            tuple(rng.randrange(256) for _ in range(3))
-            for _ in range(ncolors)
-        ]
-        px = [pool[rng.randrange(ncolors)] for _ in range(w * h)]
-        got = MM.decode_webp(_write_vp8l(w, h, px, palette=True))
-        assert got[:3] == (w, h, 3), ncolors
-        assert got[3] == pytest.approx(
-            _vp8l_exact_means(px, w * h, False), abs=1e-12
-        ), ncolors
-    # ---- every predictor mode, 4px blocks over a smooth-ish image
-    w2, h2 = 32, 16
-    px2 = [
-        (
-            min(255, x * 7 + y * 3 + rng.randrange(24)),
-            min(255, 128 + x - y + rng.randrange(16)),
-            min(255, abs(x * 5 - y * 9) % 256),
-        )
-        for y in range(h2)
-        for x in range(w2)
-    ]
-    n_blocks = (w2 // 4) * (h2 // 4)
-    modes = [(i % 14) for i in range(n_blocks)]
-    got = MM.decode_webp(_write_vp8l(w2, h2, px2, predictor=(2, modes)))
-    assert got[:3] == (w2, h2, 3)
-    assert got[3] == pytest.approx(
-        _vp8l_exact_means(px2, w2 * h2, False), abs=1e-12
-    )
-    # ---- per-block cross-color transforms
-    mw = (w2 + 7) // 8
-    mh = (h2 + 7) // 8
-    ctes = [
-        (rng.randrange(-128, 128), rng.randrange(-128, 128),
-         rng.randrange(-128, 128))
-        for _ in range(mw * mh)
-    ]
-    got = MM.decode_webp(_write_vp8l(w2, h2, px2, color=(3, ctes)))
-    assert got[:3] == (w2, h2, 3)
-    assert got[3] == pytest.approx(
-        _vp8l_exact_means(px2, w2 * h2, False), abs=1e-12
-    )
-    # ---- the full stack: subtract-green + color + predictor (+ lz77)
-    got = MM.decode_webp(
-        _write_vp8l(w2, h2, px2, subtract_green=True, color=(3, ctes),
-                    predictor=(2, modes), use_lz77=True, cache_bits=4)
-    )
-    assert got[:3] == (w2, h2, 3)
-    assert got[3] == pytest.approx(
-        _vp8l_exact_means(px2, w2 * h2, False), abs=1e-12
-    )
-    # RGBA through a palette (alpha variation must survive indexing)
-    pxa = [
-        (10, 20, 30, 255), (10, 20, 30, 0), (200, 5, 5, 128),
-    ] * 20
-    got = MM.decode_webp(_write_vp8l(12, 5, pxa, alpha=True, palette=True))
-    assert got[:3] == (12, 5, 4)
-    assert got[3] == pytest.approx(
-        _vp8l_exact_means(pxa, 60, True), abs=1e-12
-    )
-
-
-def test_extract_features_real_webp_through_mapinpandas(spark):
-    """fake=False must route RIFF/WEBP payloads (distinct from
-    RIFF/WAVE) through the stdlib VP8L decoder in the mapInPandas
-    stage; a lossy VP8 payload falls to the PIL gate."""
-    import random
-
-    rng = random.Random(53)
-    rows, want = [], {}
-    for i in range(3):
-        w, h = 6 + i, 4
-        px = [
-            tuple(rng.randrange(256) for _ in range(3))
-            for _ in range(w * h)
-        ]
-        blob = _write_vp8l(w, h, px, use_lz77=i == 1,
-                           cache_bits=3 if i == 2 else 0)
-        rows.append(Row(media_id=i, content=bytearray(blob)))
-        want[i] = MM.webp_features(blob)
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {
-        r.media_id: [r[f"f{j}"] for j in range(MM.N_FAKE_FEATURES)]
-        for r in MM.extract_features(df, fake=False).collect()
-    }
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i])
-        assert got[i][0] == 6 + i  # width survives the trip
-
-
-def test_decode_tiff_jpeg_in_tiff():
-    """Compression=7 (new-style JPEG-in-TIFF): whole-image strips,
-    stacked strips, tiles, and the JPEGTables (tag 347) abbreviated
-    form all decode through the embedded-JPEG statistics path; padded
-    edge tiles route to the PIL gate (a mean-only decode cannot
-    exclude their padding)."""
-    grid = [[16, 240], [64, 128]]  # 16×16 gray, 4 MCU-aligned blocks
-    blob, _exp = _write_jpeg_dc([(1, 1, grid)])
-    direct = MM.decode_jpeg_stats(blob)
-    t = _write_tiff_jpeg(16, 16, [blob], channels=1)
-    assert MM.decode_tiff(t) == (16, 16) + direct[2:]
-    assert MM.decode_tiff(
-        _write_tiff_jpeg(16, 16, [blob], channels=1, big_endian=True)
-    ) == (16, 16) + direct[2:]
-
-    # two stacked strip JPEGs combine pixel-weighted (equal areas here)
-    top, _ = _write_jpeg_dc([(1, 1, [[16, 240]])])  # 16×8
-    bot, _ = _write_jpeg_dc([(1, 1, [[64, 128]])])  # 16×8
-    mt, mb = MM.decode_jpeg_stats(top), MM.decode_jpeg_stats(bot)
-    got = MM.decode_tiff(
-        _write_tiff_jpeg(16, 16, [top, bot], channels=1, rows_per_strip=8)
-    )
-    assert got[:3] == (16, 16, 1)
-    assert got[3] == [(mt[3][0] * 128 + mb[3][0] * 128) / 256]
-
-    # tile layout: two 8-wide × 16-high tiles, no padding
-    lt, _ = _write_jpeg_dc([(1, 1, [[16], [64]])])  # 8×16
-    rt, _ = _write_jpeg_dc([(1, 1, [[240], [128]])])  # 8×16
-    ml, mr = MM.decode_jpeg_stats(lt), MM.decode_jpeg_stats(rt)
-    got = MM.decode_tiff(
-        _write_tiff_jpeg(16, 16, [lt, rt], channels=1, tile=(8, 16))
-    )
-    assert got[:3] == (16, 16, 1)
-    assert got[3] == [(ml[3][0] + mr[3][0]) / 2]
-
-    # abbreviated segments + shared JPEGTables decode identically
-    tables, abbrev = _split_jpeg_tables(blob)
-    assert len(abbrev) < len(blob)
-    got = MM.decode_tiff(
-        _write_tiff_jpeg(16, 16, [abbrev], channels=1, jpegtables=tables)
-    )
-    assert got == (16, 16) + direct[2:]
-
-    # color (YCbCr) through the same path: must match the direct decode
-    cg = lambda a, b, c, d: [[a, b], [c, d]]  # noqa: E731
-    cblob, _ = _write_jpeg_dc(
-        [(1, 1, cg(90, 200, 40, 160)),
-         (1, 1, cg(128, 128, 128, 128)),
-         (1, 1, cg(128, 128, 128, 128))]
-    )
-    cdirect = MM.decode_jpeg_stats(cblob)
-    got = MM.decode_tiff(_write_tiff_jpeg(16, 16, [cblob], channels=3))
-    assert got == (16, 16) + cdirect[2:]
-
-    # padded edge segment: declared 10×12 but the JPEG covers 16×16
-    with pytest.raises(NotImplementedError):
-        MM.decode_tiff(_write_tiff_jpeg(10, 12, [blob], channels=1))
-    # corrupt JPEGTables fails typed
-    with pytest.raises(ValueError):
-        MM.decode_tiff(_write_tiff_jpeg(
-            16, 16, [abbrev], channels=1, jpegtables=b"\x00\x01\x02\x03"
-        ))
-
-
-def test_decode_tiff_16bit_and_planar_separate():
-    """Uniform 16-bit samples (normalized by 65535, both byte orders)
-    and PlanarConfiguration=2 (one plane's strips/tiles per channel)
-    decode to the exact means of the equivalent chunky 8-bit image."""
-    import random
-
-    rng = random.Random(23)
-    w, h = 9, 6
-    px16 = [
-        tuple(rng.randrange(65536) for _ in range(3)) for _ in range(w * h)
-    ]
-    exact = [
-        sum(p[c] for p in px16) / (w * h * 65535.0) for c in range(3)
-    ]
-    for kw in (
-        {},
-        {"big_endian": True},
-        {"lzw": True, "predictor": 2},
-        {"tile": (4, 4), "lzw": True},
-        {"planar": 2},
-        {"planar": 2, "lzw": True, "predictor": 2, "rows_per_strip": 2},
-        {"planar": 2, "tile": (4, 4), "big_endian": True},
-    ):
-        gw, gh, gch, means = MM.decode_tiff(
-            _write_tiff(w, h, px16, 3, bits=16, **kw)
-        )
-        assert (gw, gh, gch) == (w, h, 3), kw
-        assert means == pytest.approx(exact, abs=1e-12), kw
-    # 8-bit planar-separate equals 8-bit chunky exactly
-    px8 = [tuple(rng.randrange(256) for _ in range(3)) for _ in range(w * h)]
-    base = MM.decode_tiff(_write_tiff(w, h, px8, 3))
-    for kw in (
-        {"planar": 2},
-        {"planar": 2, "packbits": True, "rows_per_strip": 1},
-        {"planar": 2, "tile": (3, 2), "lzw": True, "predictor": 2},
-    ):
-        assert MM.decode_tiff(_write_tiff(w, h, px8, 3, **kw)) == base, kw
-    # undefined planar values fail typed; 32-bit depth hits the PIL gate
-    bad = bytearray(_write_tiff(w, h, px8, 3, planar=2))
-    import struct as _s
-    # find the 284 tag in the IFD and poke its value to 3
-    n = _s.unpack_from("<H", bad, 8)[0]
-    for i in range(n):
-        off = 10 + 12 * i
-        if _s.unpack_from("<H", bad, off)[0] == 284:
-            bad[off + 8] = 3
-    with pytest.raises(ValueError):
-        MM.decode_tiff(bytes(bad))
-    with pytest.raises(NotImplementedError):
-        blob32 = bytearray(_write_tiff(2, 2, px8[:4], 3, bits=16))
-        nn = _s.unpack_from("<H", blob32, 8)[0]
-        for i in range(nn):
-            off = 10 + 12 * i
-            if _s.unpack_from("<H", blob32, off)[0] == 258:
-                ext = _s.unpack_from("<I", blob32, off + 8)[0]
-                for c in range(3):
-                    _s.pack_into("<H", blob32, ext + 2 * c, 32)
-        MM.decode_tiff(bytes(blob32))
-
-
-def test_extract_features_real_tiff_through_mapinpandas(spark):
-    """fake=False must route TIFF payloads by magic bytes (both byte
-    orders) through the stdlib decoder in the mapInPandas stage."""
-    import random
-
-    rng = random.Random(31)
-    rows, want = [], {}
-    for i in range(4):
-        wd, ht, ch = 3 + i, 2, (3 if i % 2 else 1)
-        px = [
-            tuple(rng.randrange(256) for _ in range(ch))
-            for _ in range(wd * ht)
-        ]
-        blob = _write_tiff(wd, ht, px, ch, big_endian=bool(i % 2),
-                           packbits=bool(i // 2))
-        rows.append(Row(media_id=i, content=bytearray(blob)))
-        want[i] = MM.tiff_features(blob)
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {
-        r.media_id: [r[f"f{j}"] for j in range(MM.N_FAKE_FEATURES)]
-        for r in MM.extract_features(df, fake=False).collect()
-    }
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i])
-
-
-def test_decode_bmp_stdlib():
-    px = [(255, 0, 10), (0, 255, 30), (1, 2, 3), (4, 5, 6)]
-    blob = _write_bmp(2, 2, px)
-    w, h, ch, means = MM.decode_bmp(blob)
-    assert (w, h, ch) == (2, 2, 3)
-    n = 4 * 255.0
-    assert means == [
-        pytest.approx(sum(p[c] for p in px) / n) for c in range(3)
-    ]
-    # top-down storage decodes to identical channel means
-    assert MM.decode_bmp(_write_bmp(2, 2, px, top_down=True)) == (
-        w, h, ch, means,
-    )
-    # 32-bit BGRA
-    px4 = [(10, 20, 30, 40), (50, 60, 70, 80)]
-    w, h, ch, means4 = MM.decode_bmp(_write_bmp(2, 1, px4, bpp=32))
-    assert (w, h, ch) == (2, 1, 4)
-    assert means4 == [
-        pytest.approx(sum(p[c] for p in px4) / (2 * 255.0)) for c in range(4)
-    ]
-    # odd width exercises the row padding
-    px3 = [(9, 9, 9)] * 3
-    assert MM.decode_bmp(_write_bmp(3, 1, px3))[:3] == (3, 1, 3)
-    with pytest.raises(ValueError):
-        MM.decode_bmp(b"XX not a bmp")
-    with pytest.raises(NotImplementedError):
-        bad = bytearray(_write_bmp(1, 1, [(1, 2, 3)]))
-        bad[30] = 1  # compression = BI_RLE8
-        MM.decode_bmp(bytes(bad))
-
-
-def test_decode_pnm_stdlib():
-    px = [(255, 0, 10), (0, 255, 30)]
-    w, h, ch, means = MM.decode_pnm(_write_pnm(2, 1, px, 3))
-    assert (w, h, ch) == (2, 1, 3)
-    assert means == [
-        pytest.approx(255 / 510),
-        pytest.approx(255 / 510),
-        pytest.approx(40 / 510),
-    ]
-    # grayscale P5 with a header comment and a non-255 maxval
-    g = _write_pnm(2, 2, [(0,), (100,), (50,), (50,)], 1, maxval=100,
-                   comment=True)
-    w, h, ch, means = MM.decode_pnm(g)
-    assert (w, h, ch) == (2, 2, 1)
-    assert means == [pytest.approx(200 / (4 * 100.0))]
-    with pytest.raises(NotImplementedError):
-        MM.decode_pnm(b"P3\n1 1\n255\n1 2 3\n")  # ASCII variant
-    with pytest.raises(ValueError):
-        MM.decode_pnm(_write_pnm(4, 4, px, 3))  # truncated pixel data
-
-
 def test_decode_png_stdlib_all_color_types_and_filters():
     # gray 2x2 with known mean
     g = _write_png(2, 2, [(0,), (255,), (100,), (155,)], 0)
@@ -5136,22 +3093,22 @@ def test_extract_features_real_png_through_mapinpandas(spark):
 
 
 def test_extract_features_real_mixed_formats_through_mapinpandas(spark):
-    """One binary column carrying PNG, BMP, and netpbm payloads: the
-    fake=False dispatch routes each by magic bytes and every row comes
-    back with its own decoder's real features."""
+    """One binary column carrying PNG and WAV payloads: the fake=False
+    dispatch routes each by magic bytes and every row comes back with
+    its own decoder's real features."""
     import random
 
     rng = random.Random(11)
     px = [tuple(rng.randrange(256) for _ in range(3)) for _ in range(6)]
     blobs = {
         0: _write_png(3, 2, px, 2),
-        1: _write_bmp(3, 2, px),
-        2: _write_pnm(3, 2, px, 3),
+        1: _write_wav(8000, 1, [rng.randrange(-3000, 3000) for _ in range(50)]),
+        2: _write_png(2, 1, [(7,), (9,)], 0),
+        3: _write_wav(4000, 2, [rng.randrange(256) for _ in range(20)], sampwidth=1),
     }
     want = {
-        0: MM.png_features(blobs[0]),
-        1: MM.bmp_features(blobs[1]),
-        2: MM.pnm_features(blobs[2]),
+        i: (MM.png_features(b) if i % 2 == 0 else MM.wav_features(b))
+        for i, b in blobs.items()
     }
     df = spark.createDataFrame(
         [Row(media_id=i, content=bytearray(b)) for i, b in blobs.items()],
@@ -5161,29 +3118,49 @@ def test_extract_features_real_mixed_formats_through_mapinpandas(spark):
         r.media_id: [r[f"f{j}"] for j in range(MM.N_FAKE_FEATURES)]
         for r in MM.extract_features(df, fake=False).collect()
     }
+    assert set(got) == set(want)
     for i in want:
         assert got[i] == pytest.approx(want[i])
-    # all three encode the SAME pixels: dims and channel means agree
-    assert got[0] == pytest.approx(got[1])
-    assert got[0] == pytest.approx(got[2])
+    # dims/rate come from the right decoder, not a neighbour's
+    assert got[0][:3] == [3.0, 2.0, 3.0]
+    assert got[1][:3] == [8000.0, 50.0, 1.0]
+    assert got[2][:3] == [2.0, 1.0, 1.0]
+    assert got[3][:3] == [4000.0, 10.0, 2.0]
 
 
 def test_extract_features_corrupt_payload_routes_to_pil_gate(spark):
-    """A corrupt/truncated 'BM' or 'P6' payload makes the strict
-    stdlib decoders raise ValueError — the dispatch must route that to
-    the PIL fallback (surfacing as the documented 'requires PIL' gate
-    in this PIL-less container), not abort the mapInPandas pass with a
-    bare decode ValueError."""
+    """A truncated PNG makes the strict stdlib decoder raise ValueError
+    (a chunk cut short, or an IDAT stream zlib cannot finish) — the
+    dispatch must route that to the PIL fallback (surfacing as the
+    documented 'requires PIL' gate in a PIL-less environment), not
+    abort the mapInPandas pass with a bare decode error."""
+    import struct
+    import zlib
+
+    def chunk(ctype, data):
+        crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
+        return struct.pack(">I", len(data)) + ctype + data + struct.pack(">I", crc)
+
+    blob = _write_png(4, 3, [(i * 20, 255 - i, i) for i in range(12)], 2)
+    idat = blob.index(b"IDAT")
+    stream = zlib.compress(bytes(3 * (4 * 3 + 1)))
     corrupt = {
-        0: b"BM" + b"\x01\x02\x03" * 10,   # truncated BMP header
-        1: b"P6\n3 2\n255\n\x00",          # pixel bytes cut short
+        0: blob[: idat + 10],  # IDAT chunk cut short
+        1: blob[:20],  # IHDR cut short
+        # whole chunks, but the IDAT zlib stream stops half way
+        2: blob[:33] + chunk(b"IDAT", stream[: len(stream) // 2])
+        + chunk(b"IEND", b""),
     }
-    df = spark.createDataFrame(
-        [Row(media_id=i, content=bytearray(b)) for i, b in corrupt.items()],
-        "media_id long, content binary",
-    )
-    with pytest.raises(Exception, match="requires PIL"):
-        MM.extract_features(df, fake=False).collect()
+    for b in corrupt.values():
+        with pytest.raises(ValueError):
+            MM.decode_png(b)
+    for i, b in corrupt.items():
+        df = spark.createDataFrame(
+            [Row(media_id=i, content=bytearray(b))],
+            "media_id long, content binary",
+        )
+        with pytest.raises(Exception, match="requires PIL"):
+            MM.extract_features(df, fake=False).collect()
 
 
 def test_dup_occ_skew_safe_null_ids_match_window_form(spark):

@@ -76,7 +76,8 @@ def main() -> None:
     except Exception as e:
         print(f"# ivf warmup failed: {e}", file=sys.stderr)
 
-    warm_dir = "/root/testdata/sf0.001"
+    # warm on the smallest scale factor beside the timed one
+    warm_dir = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.001")
     for name in names:
         try:
             spark.sparkContext.setJobDescription(f"warmup:{name}")
