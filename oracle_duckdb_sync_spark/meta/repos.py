@@ -14,11 +14,13 @@ Reference parity map (all DDL/CRUD against DuckDB in the reference):
   (menu/repository.py:54) — enforced here in :meth:`UserRepository.delete`
 
 Design: metadata tables are tiny (thousands of rows) and single-writer
-(the reference is too — guarded by ``SyncLock``), so mutations are
-read-modify-overwrite of one Parquet directory via a temp-dir swap.
-That keeps the read path a plain ``spark.read.parquet`` any executor
-count can scan, while writes stay trivially atomic. At 100 TB the DATA
-tables never live here — only operational metadata.
+(the reference is too — guarded by ``SyncLock``). Each mutation is one
+:mod:`..sources.sinks` rewrite — ``insert`` through ``sinks.overwrite``,
+``update``/``delete`` through ``sinks.update_where``/``delete_where`` —
+so a failed job leaves the table as it was (the sinks' staged swap) and
+the table's rows never pass through the driver. The read path stays a
+plain ``spark.read.parquet``. At 100 TB the DATA tables never live here
+— only operational metadata.
 """
 
 from __future__ import annotations
@@ -138,51 +140,31 @@ class ParquetRepository:
     def count(self) -> int:
         return self.df().count()
 
-    # -- writes (single-writer read-modify-overwrite) ------------------------
-
-    def _overwrite(self, df: DataFrame) -> None:
-        # Materialize before overwriting the directory being read from.
-        rows = df.collect()
-        out = self.spark.createDataFrame(rows, self.schema) if rows else (
-            self.spark.createDataFrame([], self.schema)
-        )
-        sinks.overwrite(out, self.path)
+    # -- writes (single-writer, each one sinks rewrite) ----------------------
 
     def insert(self, **values: Any) -> int:
         cur = self.df()
-        max_id = cur.agg(F.max("id")).first()[0]
-        new_id = int(max_id or 0) + 1
+        new_id = int(cur.agg(F.max("id")).first()[0] or 0) + 1
         values = {"id": new_id, **values}
         row = [tuple(values.get(f.name) for f in self.schema.fields)]
         new = self.spark.createDataFrame(row, self.schema)
-        self._overwrite(cur.unionByName(new))
+        # coalesce(1): the table stays one file
+        sinks.overwrite(cur.unionByName(new).coalesce(1), self.path)
         return new_id
 
     def update(self, id_: int, **values: Any) -> bool:
-        cur = self.df()
-        if cur.filter(F.col("id") == id_).limit(1).count() == 0:
-            return False
-        upd = cur
-        for k, v in values.items():
-            upd = upd.withColumn(
-                k, F.when(F.col("id") == id_, F.lit(v)).otherwise(F.col(k))
-            )
-        self._overwrite(upd)
-        return True
+        """Set ``values`` (literals or Columns over the pre-update row)
+        on row ``id_``; each is cast to its field's type, so column types
+        never drift. False when there is no such row."""
+        sets = {k: F.lit(v).cast(self.schema[k].dataType) for k, v in values.items()}
+        return sinks.update_where(self.spark, self.path, F.col("id") == id_, sets) > 0
 
     def delete(self, id_: int) -> bool:
-        cur = self.df()
-        if cur.filter(F.col("id") == id_).limit(1).count() == 0:
-            return False
-        self._overwrite(cur.filter(F.col("id") != id_))
-        return True
+        return self.delete_where(F.col("id") == id_) > 0
 
     def delete_where(self, condition) -> int:
-        cur = self.df()
-        n = cur.filter(condition).count()
-        if n:
-            self._overwrite(cur.filter(~condition))
-        return n
+        """SQL DELETE: a row whose condition is NULL is kept."""
+        return sinks.delete_where(self.spark, self.path, condition)
 
 
 class SyncLogRepository(ParquetRepository):
@@ -207,16 +189,10 @@ class SyncLogRepository(ParquetRepository):
         total_rows: int = 0,
         error_message: str | None = None,
     ) -> bool:
-        row = self.get(id_)
-        if row is None:
-            return False
         end = _utcnow()
-        start = row["start_time"]
-        dur = (
-            (end - start.replace(tzinfo=timezone.utc)).total_seconds()
-            if start is not None
-            else None
-        )
+        # from the stored instant, not a collected start_time: that comes
+        # back as a naive datetime in the driver OS's time zone
+        dur = (F.unix_micros(F.lit(end)) - F.unix_micros("start_time")) / 1e6
         return self.update(
             id_,
             status=status,

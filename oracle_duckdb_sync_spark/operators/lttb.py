@@ -145,14 +145,18 @@ def downsample_single_series(
     """
     from pyspark.sql import functions as F
 
+    from .query import _timestamp_kind, epoch_micros, from_epoch_micros
+
     target = prefactor * threshold
     n = df.count()
     if n <= target:
         return downsample(df, x_col, y_cols, threshold)
 
+    # instants and wall clocks bucket as epoch µs (Spark casts no
+    # TIMESTAMP_NTZ to double) and come back as the same kind
+    kind = _timestamp_kind(df, x_col)
     x = F.col(x_col)
-    is_ts = dict(df.dtypes)[x_col].startswith("timestamp")
-    xv = x.cast("double")
+    xv = (epoch_micros(x, kind) if kind else x).cast("double")
     stats = df.agg(F.min(xv).alias("lo"), F.max(xv).alias("hi")).first()
     lo, hi = stats["lo"], stats["hi"]
     span = (hi - lo) or 1.0
@@ -163,8 +167,8 @@ def downsample_single_series(
         F.avg(F.col(c).cast("double")).alias(c) for c in y_cols
     ]
     reduced = df.groupBy(bucket.alias("__b")).agg(*aggs).drop("__b")
-    if is_ts:
+    if kind:
         reduced = reduced.withColumn(
-            x_col, F.timestamp_micros((F.col(x_col) * 1_000_000).cast("long"))
+            x_col, from_epoch_micros(F.col(x_col).cast("long"), kind)
         )
     return downsample(reduced, x_col, y_cols, threshold)

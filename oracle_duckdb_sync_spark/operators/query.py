@@ -99,6 +99,29 @@ def collect_watermark(df: DataFrame, time_col: str):
     return top
 
 
+def epoch_micros(col: Column, kind: str) -> Column:
+    """A ``kind`` column (see :func:`_timestamp_kind`) as epoch
+    microseconds, on the executors. A wall clock maps through an
+    interval from the NTZ epoch: ``timestampdiff`` on TIMESTAMP_NTZ goes
+    through the session time zone and is an hour off across DST."""
+    if kind == "timestamp":
+        return F.unix_micros(col)
+    since = (col - _epoch_ntz()).cast("interval second").cast("decimal(24,6)")
+    return (since * 1_000_000).cast("long")
+
+
+def from_epoch_micros(col: Column, kind: str) -> Column:
+    """Epoch microseconds back to a ``kind`` column: the inverse of
+    :func:`epoch_micros`."""
+    if kind == "timestamp":
+        return F.timestamp_micros(col)
+    return F.timestamp_add("MICROSECOND", col, _epoch_ntz())
+
+
+def _epoch_ntz() -> Column:
+    return F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
+
+
 def watermark_read(
     df: DataFrame,
     time_col: str,

@@ -1,4 +1,5 @@
-"""Parquet table sinks: append, overwrite, upsert (reference A12-A15, C1).
+"""Parquet table sinks: append, overwrite, upsert, delete, update,
+compact (reference A12-A15, C1).
 
 The reference's sink is DuckDB ``INSERT INTO t SELECT * FROM df``
 (+ ``ON CONFLICT`` upsert, database/duckdb_source.py:74-142). On a
@@ -7,16 +8,26 @@ Parquet warehouse:
 - **append** — ``df.write.mode("append")`` — Arrow-native columnar write,
   one file per task; the reference's claimed "100× faster than
   executemany" bulk path is simply how Spark always writes.
-- **upsert** — left-anti join + union rewrite (SURVEY C1). Plain Parquet
-  has no transactional MERGE, so the rewrite goes to a temp directory and
-  is swapped in atomically (SURVEY §7.4-1). With ``partition_cols`` the
-  rewrite is **partition-scoped**: only the hive-style partition
-  directories whose values appear in the new batch are read, merged, and
-  swapped — every other partition's files are left untouched on disk.
-  That matches the economics of the reference's in-place ``ON CONFLICT``
-  (database/duckdb_source.py:114-131): an incremental batch touching one
-  day of a year-partitioned 100 TB table rewrites 1/365th of it, not all
-  of it. Unpartitioned targets fall back to the full rewrite.
+- **every rewrite** goes through one staged swap, where the reference
+  has DuckDB transactions: the job writes ``<path>.__tmp-<run>`` and
+  only then is it renamed into place, so a failed job leaves the table
+  as it was. :func:`overwrite` swaps the whole table
+  (:func:`_swap_table`; every unpartitioned rewrite calls it) and
+  :func:`_rewrite_partitions` swaps only the partition directories a
+  rewrite produced or emptied (:func:`_swap_partition_dirs`); those two
+  helpers hold every rename. A process killed between two renames
+  leaves the table under its backup name.
+- **upsert** — left-anti join + union rewrite (SURVEY C1). With
+  ``partition_cols`` the rewrite is **partition-scoped**: only the
+  hive-style partition directories whose values appear in the new batch
+  are read, merged, and swapped — every other partition's files are
+  left untouched on disk. That matches the economics of the reference's
+  in-place ``ON CONFLICT`` (database/duckdb_source.py:114-131): an
+  incremental batch touching one day of a year-partitioned 100 TB table
+  rewrites 1/365th of it, not all of it.
+
+The rewrites need a driver-local path and raise ValueError on a remote
+URI; :func:`overwrite` writes one through Spark directly.
 """
 
 from __future__ import annotations
@@ -31,6 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import upsert as upsert_op
+from .fs import _looks_remote, _strip_file_scheme
+
+# swap-staging siblings ``<path><suffix><run>``: the staged rewrite, the
+# whole table it replaced, the partition dirs it replaced
+_TMP, _OLD, _BAK = ".__tmp-", ".__old-", ".__bak-"
 
 # Above this many touched partition tuples the scope predicate switches
 # from a folded literal OR-chain (static partition pruning, zero extra
@@ -115,10 +131,70 @@ def append(df: DataFrame, path: str, partition_cols: Sequence[str] | None = None
 
 
 def overwrite(df: DataFrame, path: str, partition_cols: Sequence[str] | None = None) -> None:
+    """Replace the table at ``path`` by ``df``, which may read ``path``.
+
+    Locally ``df`` is written to ``<path>.__tmp-<run>`` and
+    :func:`_swap_table` renames it into place, so a failed job leaves
+    the previous table readable (Spark's own overwrite deletes it
+    first); cached plans over ``path`` are then refreshed, as Spark's
+    own overwrite does. A remote URI is written by Spark directly."""
     w = df.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+    if _looks_remote(path):
+        w.parquet(path)
+        return
+    path, run = _strip_file_scheme(path), uuid.uuid4().hex[:8]
+    w.parquet(f"{path}{_TMP}{run}")
+    _swap_table(path, f"{path}{_TMP}{run}", f"{path}{_OLD}{run}")
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+def _swap_table(path: str, tmp: str, old: str) -> None:
+    """Rename the staged table ``tmp`` to ``path``. A table already at
+    ``path`` moves to ``old`` first and is put back if the second rename
+    fails, so an exception never leaves ``path`` missing; ``old`` is
+    removed once the swap is done."""
+    if not os.path.exists(path):
+        os.rename(tmp, path)
+        return
+    os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except BaseException:
+        os.rename(old, path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _rewrite_partitions(df: DataFrame, path: str, pcols, scope=()) -> None:
+    """Partition-scoped staged swap: write ``df`` hive-partitioned to
+    ``<path>.__tmp-<run>``, then swap every partition dir it produced
+    into the table. A dir named in ``scope`` (relative, as
+    :func:`_partition_rel` spells it) that the write did not produce —
+    every row of it deleted — is removed from the table by the same
+    swap. Partitions outside both are never touched."""
+    run = uuid.uuid4().hex[:8]
+    tmp, bak = f"{path}{_TMP}{run}", f"{path}{_BAK}{run}"
+    df.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
+    rels = sorted(set(_partition_dirs(tmp, depth=len(pcols))) | set(scope))
+    _swap_partition_dirs(path, tmp, bak, rels)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(bak, ignore_errors=True)
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+def _local_path(path: str) -> str:
+    """``path`` as the driver-local path a rewrite probes and renames
+    under (a ``file:`` scheme dropped). An ``os.path`` probe answers
+    False for a URI, which would send an upsert down the table-absent
+    branch and replace the table by the batch: a remote URI raises."""
+    if _looks_remote(path):
+        raise ValueError(
+            f"parquet rewrites swap directories by renaming them and need "
+            f"a driver-local path, not {path!r}"
+        )
+    return _strip_file_scheme(path)
 
 
 def delta_available() -> bool:
@@ -160,7 +236,7 @@ def upsert(
     merge_schema: bool = False,
     table_identifier: str | None = None,
 ) -> None:
-    """A13/C1 UPSERT sink with atomic temp-dir swap.
+    """A13/C1 UPSERT sink through the staged swap.
 
     ``table_format`` selects the storage engine behind the same
     signature:
@@ -172,22 +248,26 @@ def upsert(
       leaving a stale copy — the two documented caveats of the parquet
       swap, which the reference gets for free from DuckDB transactions
       (database/duckdb_source.py:114-131).
-    - ``"parquet"`` — the swap implementation below.
+    - ``"parquet"`` — the swap implementation below; needs a
+      driver-local path (ValueError on a remote URI).
     - ``"auto"`` (default) — ``delta`` when the package is importable
       AND the target is already a Delta table (or absent, in which case
       plain parquet is written); otherwise parquet. Existing parquet
       warehouses never silently change format.
 
-    Unpartitioned (``partition_cols=None``): reads the current table,
-    merges (old anti-join new ∪ new), writes to ``<path>.__tmp-<uuid>``,
-    then swaps directories. The swap window is the only non-atomic
-    instant and is process-local — the reference relies on DuckDB
-    transactions for the same guarantee.
+    An absent table is written by :func:`overwrite` from ``new`` alone.
+
+    Unpartitioned (``partition_cols=None``): the merge (old anti-join
+    new ∪ new) replaces the table through :func:`overwrite`'s whole-table
+    swap. The swap window is the only non-atomic instant and is
+    process-local — the reference relies on DuckDB transactions for the
+    same guarantee.
 
     Partitioned: only the partitions whose values appear in ``new`` are
     read (literal predicates on the partition columns → static partition
-    pruning at the scan), merged, and swapped directory-by-directory;
-    files of untouched partitions are never opened or rewritten.
+    pruning at the scan), merged, and swapped directory-by-directory by
+    :func:`_rewrite_partitions`; files of untouched partitions are never
+    opened or rewritten.
     Partition columns are canonicalized to their on-disk **string** form
     (Hive semantics: a partition value IS the directory-name string): the
     current table is read with partition-type inference disabled and the
@@ -243,29 +323,20 @@ def upsert(
     ):
         _upsert_delta(spark, new, path, keys, partition_cols)
         return
+    path = _local_path(path)
     if not os.path.isdir(path):
-        w = new.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(path)
+        overwrite(new, path, partition_cols)
         return
     if not partition_cols:
         old = spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(path)
-        merged = upsert_op(
-            old, new, keys,
-            broadcast_new=broadcast_new,
-            allow_missing_columns=merge_schema,
+        overwrite(
+            upsert_op(
+                old, new, keys,
+                broadcast_new=broadcast_new,
+                allow_missing_columns=merge_schema,
+            ),
+            path,
         )
-        tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        backup = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-        os.rename(path, backup)
-        try:
-            os.rename(tmp, path)
-        except BaseException:
-            os.rename(backup, path)  # restore — never leave the table gone
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
         return
 
     pcols = list(partition_cols)
@@ -281,29 +352,27 @@ def upsert(
     touched = new.select(*pcols).distinct().collect()
     if not touched:
         return
-    merged = upsert_op(
-        _scope_to_partitions(spark, old, touched, pcols), new, keys,
-        broadcast_new=broadcast_new,
-        allow_missing_columns=merge_schema,
+    _rewrite_partitions(
+        upsert_op(
+            _scope_to_partitions(spark, old, touched, pcols), new, keys,
+            broadcast_new=broadcast_new,
+            allow_missing_columns=merge_schema,
+        ),
+        path,
+        pcols,
     )
-    run = uuid.uuid4().hex[:8]
-    tmp = f"{path}.__tmp-{run}"
-    bak = f"{path}.__bak-{run}"  # sibling of path: outside the table root
-    merged.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
-    _swap_partition_dirs(path, tmp, bak, _partition_dirs(tmp, depth=len(pcols)))
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
 
 
 def _swap_partition_dirs(path: str, tmp: str, bak: str, rels: list[str]) -> None:
     """Swap the given hive-style partition dirs from ``tmp`` into the
     table at ``path``, staging replaced originals in the sibling backup
     dir ``bak`` (outside the table root, so concurrent partition
-    discovery never sees them). On any failure every completed swap is
-    rolled back (newest first) and ``tmp`` is left on disk — the table
-    is never missing a partition. Listing-relative paths sidestep
-    value-escaping: names like ``day=2024-01-01`` or
-    ``lang=__HIVE_DEFAULT_PARTITION__`` are taken as written."""
+    discovery never sees them); a dir absent from ``tmp`` is only staged
+    out. On any failure every completed swap is rolled back (newest
+    first) and ``tmp`` is left on disk — the table is never missing a
+    partition. Listing-relative paths sidestep value-escaping: names
+    like ``day=2024-01-01`` or ``lang=__HIVE_DEFAULT_PARTITION__`` are
+    taken as written."""
     staged: list[tuple[str, str | None]] = []  # (dst, backup-or-None)
     try:
         for rel in rels:
@@ -314,10 +383,10 @@ def _swap_partition_dirs(path: str, tmp: str, bak: str, rels: list[str]) -> None
                 backup = os.path.join(bak, rel)
                 os.makedirs(os.path.dirname(backup), exist_ok=True)
                 os.rename(dst, backup)
-            else:
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
             staged.append((dst, backup))
-            os.rename(src, dst)
+            if os.path.isdir(src):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
     except BaseException:
         # roll back every staged swap (newest first): drop whatever landed
         # at dst, put the original partition back; tmp is kept on disk so
@@ -429,20 +498,28 @@ def _upsert_iceberg(
 
 
 def _read_partition_strings(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    dirs: Sequence[str] = (),
 ) -> DataFrame:
     """Read a hive-partitioned parquet table with partition-column type
     inference disabled, so partition values stay the exact strings written
-    in the directory names (``DAY=01`` → ``'01'``, not int ``1``)."""
+    in the directory names (``DAY=01`` → ``'01'``, not int ``1``). With
+    ``dirs`` (relative partition dirs) only those are read; ``basePath``
+    keeps their partition columns."""
     key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "false")
     try:
         # partition discovery (and thus the inference conf) is resolved
         # eagerly here, at DataFrame creation
-        return (
-            spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(path)
-        )
+        reader = spark.read.option("mergeSchema", str(merge_schema).lower())
+        if dirs:
+            return reader.option("basePath", path).parquet(
+                *[os.path.join(path, rel) for rel in dirs]
+            )
+        return reader.parquet(path)
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -507,10 +584,10 @@ def compact(
     job — the scan reads only flagged directories (everything else is
     never opened), rows shuffle once keyed on (partition values, chunk)
     where chunk spreads a partition across its per-partition file
-    budget, and the results swap in via the same staged
-    sibling-backup/rollback protocol as :func:`upsert`
-    (:func:`_swap_partition_dirs`), so readers never see a partition
-    missing and a failure rolls back cleanly.
+    budget, and the results swap in through the same staged swap as
+    :func:`upsert` (:func:`_rewrite_partitions`; :func:`overwrite` when
+    unpartitioned), so readers never see a partition missing and a
+    failure rolls back cleanly.
 
     The driver-side work is one file listing per partition (O(dirs),
     the same scale as partition discovery itself); at metastore scale
@@ -531,6 +608,7 @@ def compact(
     ``zorder_bounds`` as in :func:`..operators.layout.zorder_layout`
     (default: 1%/99% quantile probe over the flagged rows).
     """
+    path = _local_path(path)
     if not os.path.isdir(path):
         return {"partitions_compacted": 0, "files_before": 0, "files_after": 0}
     pcols = list(partition_cols or [])
@@ -549,17 +627,7 @@ def compact(
                 "files_after": len(files),
             }
         df = spark.read.parquet(path)
-        df = _cluster_rewrite(df, want, [], zorder_cols, zorder_bounds)
-        tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        backup = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-        os.rename(path, backup)
-        try:
-            os.rename(tmp, path)
-        except BaseException:
-            os.rename(backup, path)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
+        overwrite(_cluster_rewrite(df, want, zorder_cols, zorder_bounds), path)
         return {
             "partitions_compacted": 1,
             "files_before": len(files),
@@ -580,18 +648,7 @@ def compact(
     # one job over exactly the flagged directories: basePath keeps the
     # partition columns (as their on-disk strings) while the explicit dir
     # list prunes everything else from ever being opened
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        df = spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, rel) for rel in flagged]
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    df = _read_partition_strings(spark, path, dirs=list(flagged))
     n_files_total = sum(flagged.values())
     # per-partition file budget as one broadcastable literal lookup; map
     # keys are built from the dir names with the on-disk escaping undone
@@ -685,17 +742,10 @@ def compact(
         out = chunked.repartition(
             n_files_total, *pcols, F.col("__chunk")
         ).drop("__chunk")
-    run = uuid.uuid4().hex[:8]
-    tmp = f"{path}.__tmp-{run}"
-    bak = f"{path}.__bak-{run}"
-    out.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
-    # a flagged partition whose files held zero rows produces no dir in
-    # tmp (dynamic writes skip empty partitions) — leave it untouched
-    # rather than failing the swap
-    present = [rel for rel in sorted(flagged) if os.path.isdir(os.path.join(tmp, rel))]
-    _swap_partition_dirs(path, tmp, bak, present)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
+    # scoped to the flagged dirs: one whose files held zero rows produces
+    # no dir (the dynamic write skips empty partitions) and goes, and so
+    # does one whose name the writer re-escapes differently
+    _rewrite_partitions(out, path, pcols, scope=list(flagged))
     files_after = sum(
         len(_data_files(os.path.join(path, rel))) for rel in flagged
     )
@@ -709,13 +759,12 @@ def compact(
 def _cluster_rewrite(
     df: DataFrame,
     n_files: int,
-    pcols: Sequence[str],
     zorder_cols: Sequence[str] | None,
     zorder_bounds: Sequence[tuple[float, float]] | None,
 ) -> DataFrame:
-    """Compaction rewrite shape: plain ``coalesce`` without clustering
-    (narrow, no shuffle); with ``zorder_cols`` a range repartition on
-    (partition values…, Morton key) + in-task sort, so files land as
+    """Unpartitioned compaction rewrite shape: plain ``coalesce``
+    without clustering (narrow, no shuffle); with ``zorder_cols`` a range
+    repartition on the Morton key + in-task sort, so files land as
     contiguous curve segments."""
     if not zorder_cols:
         return df.coalesce(n_files)
@@ -727,11 +776,10 @@ def _cluster_rewrite(
         else LAY.column_bounds(df, zorder_cols)
     )
     zkey = LAY.zorder_key_expr(list(zorder_cols), bounds)
-    cols = [F.col(c) for c in pcols]
     return (
         df.withColumn("__zkey", zkey)
-        .repartitionByRange(max(1, n_files), *cols, F.col("__zkey"))
-        .sortWithinPartitions(*pcols, "__zkey")
+        .repartitionByRange(max(1, n_files), F.col("__zkey"))
+        .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
 
@@ -742,8 +790,9 @@ def vacuum_orphans(
 ) -> list[str]:
     """Remove orphaned swap-staging siblings of a table —
     ``<path>.__tmp-*`` / ``.__bak-*`` / ``.__old-*`` directories left
-    behind when an upsert/compact crashed BETWEEN staging and cleanup
-    (the rollback deliberately keeps tmp on disk for inspection).
+    behind when a rewrite's job failed mid-write, or a rewrite crashed
+    BETWEEN staging and cleanup (the rollback deliberately keeps tmp on
+    disk for inspection).
 
     Age-gated (mtime older than ``min_age_seconds``) so a concurrently
     running swap's live staging dirs are never touched; the default
@@ -762,7 +811,7 @@ def vacuum_orphans(
     except FileNotFoundError:
         return removed
     for name in names:
-        if not name.startswith((f"{base}.__tmp-", f"{base}.__bak-", f"{base}.__old-")):
+        if not name.startswith(tuple(base + s for s in (_TMP, _BAK, _OLD))):
             continue
         full = os.path.join(parent, name)
         try:
@@ -777,6 +826,15 @@ def vacuum_orphans(
     return removed
 
 
+def _matched_partitions(old: DataFrame, matches, pcols: Sequence[str]) -> list:
+    """The partition tuples holding rows where ``matches`` is TRUE, each
+    with its matched-row count in ``__n`` (one row, maybe 0, when
+    ``pcols`` is empty) — one job."""
+    return (
+        old.filter(matches).groupBy(*pcols).agg(F.count(F.lit(1)).alias("__n")).collect()
+    )
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -789,77 +847,43 @@ def delete_where(
     (repository/sync_log_repo.py:280-303); on a parquet warehouse a
     delete is a rewrite, so the job is shaped like :func:`upsert`:
 
-    - Unpartitioned: one filtered rewrite + atomic directory swap.
-    - Partitioned: ONE scan finds the distinct partition tuples that
-      contain matching rows (when the condition references the
-      partition columns, Catalyst prunes that scan to the candidate
-      directories), then ONLY those partitions are rewritten and
-      swapped via the staged sibling-backup protocol; untouched
-      partitions' files are never opened. A partition whose every row
-      matches is removed entirely (its directory staged to backup,
-      GC'd with the run's staging dirs).
+    - Unpartitioned: one counting job, then the kept rows replace the
+      table through :func:`overwrite`.
+    - Partitioned: ONE job finds and counts the matching rows per
+      partition tuple (when the condition references the partition
+      columns, Catalyst prunes that scan to the candidate directories),
+      then ONLY those partitions are rewritten and swapped by
+      :func:`_rewrite_partitions`; untouched partitions' files are never
+      opened. A partition whose every row matches is removed entirely
+      (its directory staged to backup, GC'd with the run's staging
+      dirs).
 
     GDPR/retention economics at 100 TB: deleting one user or one
     expired day touches the partitions holding those rows, not the
     table. Re-running after a mid-run failure is safe — deletion is
     idempotent (remaining matches are simply deleted then).
     """
+    path = _local_path(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     matches = F.coalesce(cond.cast("boolean"), F.lit(False))
     if not os.path.isdir(path):
         return 0
-    if not partition_cols:
-        old = spark.read.parquet(path)
-        total = old.count()
-        kept = old.filter(~matches)
-        n_kept = kept.count()
-        if n_kept == total:
-            return 0
-        tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
-        kept.write.mode("overwrite").parquet(tmp)
-        backup = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-        os.rename(path, backup)
-        try:
-            os.rename(tmp, path)
-        except BaseException:
-            os.rename(backup, path)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
-        return total - n_kept
-
-    pcols = list(partition_cols)
-    old = _read_partition_strings(spark, path)
-    touched = old.filter(matches).select(*pcols).distinct().collect()
-    if not touched:
-        return 0
-    scoped = _scope_to_partitions(spark, old, touched, pcols)
-    n_before = scoped.count()
-    kept = scoped.filter(~matches)
-    n_kept = kept.count()
-    run = uuid.uuid4().hex[:8]
-    tmp = f"{path}.__tmp-{run}"
-    bak = f"{path}.__bak-{run}"
-    kept.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
-    # directory names from the touched values (null → Hive default
-    # partition), with values escaped exactly as Spark's writer escapes
-    # them, so a ``source=a/b`` partition addresses ``source=a%2Fb``
-    rels = sorted(_partition_rel(row, pcols) for row in touched)
-    present = [rel for rel in rels if os.path.isdir(os.path.join(tmp, rel))]
-    emptied = [rel for rel in rels if rel not in set(present)]
-    _swap_partition_dirs(path, tmp, bak, present)
-    # fully-deleted partitions: stage their dirs out (same backup root);
-    # each rename is individually atomic and a failure leaves remaining
-    # matches in place — the delete re-runs idempotently
-    for rel in emptied:
-        dst = os.path.join(path, rel)
-        if not os.path.isdir(dst):
-            continue
-        backup = os.path.join(bak, rel)
-        os.makedirs(os.path.dirname(backup), exist_ok=True)
-        os.rename(dst, backup)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
-    return n_before - n_kept
+    pcols = list(partition_cols or [])
+    old = _read_partition_strings(spark, path) if pcols else spark.read.parquet(path)
+    touched = _matched_partitions(old, matches, pcols)
+    n = sum(row["__n"] for row in touched)
+    if n and not pcols:
+        overwrite(old.filter(~matches), path)
+    elif n:
+        _rewrite_partitions(
+            _scope_to_partitions(spark, old, touched, pcols).filter(~matches),
+            path,
+            pcols,
+            # directory names from the touched values, escaped as Spark's
+            # writer escapes them: the ones no kept row fills are removed
+            scope=[_partition_rel(row, pcols) for row in touched],
+        )
+    return n
 
 
 def update_where(
@@ -874,13 +898,14 @@ def update_where(
     ``condition`` is TRUE; returns the updated count. SQL semantics:
     NULL condition leaves the row unchanged.
 
-    Same partition economics as :func:`delete_where`: one scan finds
-    the partitions holding matching rows, only those rewrite through
-    the staged-swap protocol, untouched partitions' files are never
+    Same partition economics as :func:`delete_where`: one job finds and
+    counts the partitions holding matching rows, only those rewrite
+    through the staged swap, untouched partitions' files are never
     opened. Updating a partition column is rejected — that is a
     row MOVE between directories; express it as delete+append (or use
     the Delta path, where MERGE handles it transactionally).
     """
+    path = _local_path(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     matches = F.coalesce(cond.cast("boolean"), F.lit(False))
     pcols = list(partition_cols or [])
@@ -892,17 +917,16 @@ def update_where(
         )
     if not os.path.isdir(path):
         return 0
-
-    def check_columns(df: DataFrame) -> None:
-        # SQL UPDATE errors on an unknown column; silently skipping a
-        # typo'd assignment would rewrite the touched partitions with no
-        # change yet report a positive updated count
-        unknown = sorted(set(assignments) - set(df.columns))
-        if unknown:
-            raise ValueError(
-                f"unknown column(s) in UPDATE assignments: {unknown}; "
-                f"table columns: {df.columns}"
-            )
+    old = _read_partition_strings(spark, path) if pcols else spark.read.parquet(path)
+    # SQL UPDATE errors on an unknown column; silently skipping a typo'd
+    # assignment would rewrite the touched partitions with no change yet
+    # report a positive updated count
+    unknown = sorted(set(assignments) - set(old.columns))
+    if unknown:
+        raise ValueError(
+            f"unknown column(s) in UPDATE assignments: {unknown}; "
+            f"table columns: {old.columns}"
+        )
 
     def apply_set(df: DataFrame) -> DataFrame:
         # ONE select, not chained withColumn: every assignment (and the
@@ -918,36 +942,11 @@ def update_where(
                 cols.append(F.col(c))
         return df.select(*cols)
 
-    if not pcols:
-        old = spark.read.parquet(path)
-        check_columns(old)
-        n = old.filter(matches).count()
-        if n == 0:
-            return 0
-        tmp = f"{path}.__tmp-{uuid.uuid4().hex[:8]}"
-        apply_set(old).write.mode("overwrite").parquet(tmp)
-        backup = f"{path}.__old-{uuid.uuid4().hex[:8]}"
-        os.rename(path, backup)
-        try:
-            os.rename(tmp, path)
-        except BaseException:
-            os.rename(backup, path)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
-        return n
-
-    old = _read_partition_strings(spark, path)
-    check_columns(old)
-    touched = old.filter(matches).select(*pcols).distinct().collect()
-    if not touched:
-        return 0
-    scoped = _scope_to_partitions(spark, old, touched, pcols)
-    n = scoped.filter(matches).count()
-    run = uuid.uuid4().hex[:8]
-    tmp = f"{path}.__tmp-{run}"
-    bak = f"{path}.__bak-{run}"
-    apply_set(scoped).write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
-    _swap_partition_dirs(path, tmp, bak, _partition_dirs(tmp, depth=len(pcols)))
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
+    touched = _matched_partitions(old, matches, pcols)
+    n = sum(row["__n"] for row in touched)
+    if n and not pcols:
+        overwrite(apply_set(old), path)
+    elif n:
+        scoped = _scope_to_partitions(spark, old, touched, pcols)
+        _rewrite_partitions(apply_set(scoped), path, pcols)
     return n

@@ -95,3 +95,36 @@ def test_spark_single_series_scale_path(spark):
     assert len(res) == 500
     corr = np.corrcoef(res["time"].astype("int64"), res["sensor2"])[0, 1]
     assert corr > 0.95
+
+
+def test_single_series_scale_path_timestamp_ntz(spark):
+    """The pre-reduction buckets a TIMESTAMP_NTZ series as its wall clock
+    taken as UTC, never through the session time zone (New York here, so
+    the fall-back hour 1971-10-31 01:00-02:00 would shift it): first and
+    last points equal those of the TIMESTAMP twin at the same UTC
+    instants."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import functions as F
+
+    n = 3000
+    base = int((datetime(1971, 10, 30) - datetime(1970, 1, 1)).total_seconds())
+    us = (base + 60 * np.arange(n)) * 1_000_000
+    y = np.sin(np.arange(n) / 50.0)
+    ntz = spark.createDataFrame(
+        pd.DataFrame({"x": pd.to_datetime(us, unit="us"), "y": y}),
+        "x timestamp_ntz, y double",
+    )
+    ts = spark.createDataFrame(
+        pd.DataFrame({"x": pd.to_datetime(us, unit="us", utc=True), "y": y}),
+        "x timestamp, y double",
+    )
+    out_ntz = lttb.downsample_single_series(ntz, "x", ["y"], threshold=100, prefactor=4)
+    out_ts = lttb.downsample_single_series(ts, "x", ["y"], threshold=100, prefactor=4)
+    assert dict(out_ntz.dtypes)["x"] == "timestamp_ntz"
+    wall = sorted(
+        (r.x - datetime(1970, 1, 1)) // timedelta(microseconds=1) for r in out_ntz.collect()
+    )
+    inst = sorted(r.us for r in out_ts.select(F.unix_micros("x").alias("us")).collect())
+    assert len(wall) == len(inst) == 100
+    assert (wall[0], wall[-1]) == (inst[0], inst[-1])

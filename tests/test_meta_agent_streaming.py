@@ -56,6 +56,24 @@ def test_sync_log_lifecycle_and_stats(spark, tmp_path):
     assert repo.count() == 3
 
 
+def test_log_end_duration_under_non_utc_driver_zone(spark, tmp_path, monkeypatch):
+    """The duration comes from the stored instants, whatever the driver
+    OS's time zone: a collected start_time is a naive local datetime."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        repo = SyncLogRepository(spark, str(tmp_path))
+        i = repo.log_start("s1", "orders", "full")
+        assert repo.log_end(i, "completed", total_rows=3)
+        row = repo.get(i)
+        assert row["status"] == "completed" and row["total_rows"] == 3
+        assert 0 <= row["duration_seconds"] < 60
+        assert not repo.log_end(i + 1, "completed")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_auto_increment_ids(spark, tmp_path):
     repo = TableConfigRepository(spark, str(tmp_path))
     a = repo.insert(table_name="t1", sync_enabled=True)
@@ -82,8 +100,11 @@ def test_user_auth_and_menu_cascade(spark, tmp_path):
     menus.insert(user_id=uid, name="Admin", path="/admin", order=1, is_active=True)
     assert [m["name"] for m in menus.for_user(uid)] == ["Admin", "Home"]
 
+    # an ownerless menu: its NULL user_id never equals a deleted id
+    public = menus.insert(user_id=None, name="Public", path="/p", order=3, is_active=True)
+
     users.delete(uid)  # FK ON DELETE CASCADE parity
-    assert menus.count() == 0 and users.count() == 0
+    assert [m["id"] for m in menus.all()] == [public] and users.count() == 0
 
 
 # -- worker / scheduler ------------------------------------------------------

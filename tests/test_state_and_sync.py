@@ -751,6 +751,70 @@ def test_compact_swap_failure_restores_table(spark, tmp_path, monkeypatch):
     assert [d for d in os.listdir(tmp_path) if d.startswith("cft.__tmp-")]
 
 
+
+def test_overwrite_failed_job_keeps_previous_table(spark, tmp_path):
+    """A job that fails mid-write must leave the previous table readable
+    with all its rows: overwrite stages its write beside the table."""
+    from oracle_duckdb_sync_spark.sources import sinks
+
+    path = str(tmp_path / "ow")
+    sinks.overwrite(spark.range(20).withColumn("v", F.col("id") * 2), path)
+    failing = spark.range(100).select(
+        F.when(F.col("id") == 57, F.raise_error(F.lit("injected write failure")))
+        .otherwise(F.col("id")).alias("id"),
+        F.lit(0).cast("long").alias("v"),
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        sinks.overwrite(failing, path)
+    got = spark.read.parquet(path)
+    assert sorted((r.id, r.v) for r in got.collect()) == [(i, 2 * i) for i in range(20)]
+
+
+def test_overwrite_refreshes_persisted_reader(spark, tmp_path):
+    """A persisted DataFrame over a path counts the new rows after an
+    overwrite of that path, as after Spark's own overwrite."""
+    from oracle_duckdb_sync_spark.sources import sinks
+
+    path = str(tmp_path / "ow")
+    sinks.overwrite(spark.range(5), path)
+    reader = spark.read.parquet(path).persist()
+    try:
+        assert reader.count() == 5
+        sinks.overwrite(spark.range(9), path)
+        assert reader.count() == 9
+    finally:
+        reader.unpersist()
+
+
+def test_rewrite_sinks_reject_remote_path(spark):
+    """The rewrites swap with os.rename: a remote URI is refused before
+    any job runs, instead of an upsert replacing the table by its batch."""
+    from oracle_duckdb_sync_spark.sources import sinks
+
+    path = "s3a://bucket/t"
+    batch = spark.createDataFrame([Row(id=1, v=1)])
+    with pytest.raises(ValueError, match="driver-local"):
+        sinks.upsert(spark, batch, path, ["id"], table_format="parquet")
+    with pytest.raises(ValueError, match="driver-local"):
+        sinks.delete_where(spark, path, "id = 1")
+    with pytest.raises(ValueError, match="driver-local"):
+        sinks.update_where(spark, path, "id = 1", {"v": F.lit(2)})
+    with pytest.raises(ValueError, match="driver-local"):
+        sinks.compact(spark, path)
+
+
+def test_upsert_file_uri_merges_into_table(spark, tmp_path):
+    """A ``file:`` URI names the local table: the upsert merges into it
+    instead of taking the table-absent branch."""
+    from oracle_duckdb_sync_spark.sources import sinks
+
+    path = str(tmp_path / "fu")
+    sinks.overwrite(spark.createDataFrame([Row(id=i, v=i) for i in range(10)]), path)
+    batch = spark.createDataFrame([Row(id=3, v=33), Row(id=10, v=10)])
+    sinks.upsert(spark, batch, "file:" + path, ["id"], table_format="parquet")
+    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {**{i: i for i in range(10)}, 3: 33, 10: 10}
+
 def test_delete_where_partition_scoped(spark, tmp_path):
     """Partitioned DELETE: only partitions holding matching rows are
     rewritten (untouched dirs byte/mtime-identical), a fully-matching
