@@ -7,15 +7,23 @@ threshold (data/converter.py:19-111), then converts per column on a
 thread pool (data/converter.py:254-355).
 
 Spark-first redesign:
-- **One job for all columns**: every candidate column's numeric vote AND
-  datetime vote are aggregate expressions in a single ``agg(...)`` over
-  one sampled DataFrame — Spark parallelizes columns inside the stage, so
-  the reference's 4-worker ThreadPool disappears.
+- **One job for all columns**: the candidate columns' first
+  ≤``sample_size`` rows are collected once through ``CollectLimit``
+  (one job), and every column's numeric AND datetime vote flags are one
+  projection over that driver-local sample — Spark folds a projection
+  over a local relation on the driver, so it runs no job, and the
+  reference's 4-worker ThreadPool disappears. Averaging the flags on the
+  driver, not in ``df.limit(n).agg(...)``, also keeps the generated code
+  stable: Spark 4.1 names the limit counter of a codegen'd limit
+  ``_limit_counter_<n>`` with a process-wide ``n``, so that aggregate
+  compiled new generated classes on every call and never hit the
+  codegen cache.
 - **Conversion is one select**: per-column cast expressions in a single
   projection — no data moves twice, whole-stage codegen handles all
   columns at once.
 - Votes use ``try_cast`` / ``try_to_timestamp`` (null on failure), the
-  engine-side equivalent of ``pd.to_numeric(errors='coerce')``.
+  engine-side equivalent of ``pd.to_numeric(errors='coerce')``; the
+  conversion uses the same expressions, so detect ≡ convert.
 
 Precedence parity with ``detect_column_type`` (data/converter.py:202-230):
 existing numeric/datetime dtype wins; then datetime probe; then numeric
@@ -38,26 +46,29 @@ DATETIME = "datetime"
 STRING = "string"
 
 
-def numeric_vote_expr(col: str) -> Column:
-    """Fraction of non-null values parseable as DOUBLE (J1).
+def numeric_flag(col: str) -> Column:
+    """1 if a value parses as DOUBLE, 0 if not, null for a null (J1).
 
-    ``avg`` skips nulls, so the fraction is over non-null values only —
-    parity with the reference's ``series.dropna()`` sampling.
+    Null flags stay out of the vote, so the fraction is over non-null
+    values only — parity with the reference's ``series.dropna()``
+    sampling.
     """
     c = F.col(col).cast("string")
-    return F.avg(
-        F.when(c.isNotNull(), c.try_cast("double").isNotNull().cast("int"))
-    )
+    return F.when(c.isNotNull(), c.try_cast("double").isNotNull().cast("int"))
 
 
-def datetime_vote_expr(col: str) -> Column:
-    """Fraction of non-null values parseable in an accepted datetime
-    format (J2): 14-digit, 8-digit, ISO, slash-date — via the same
-    expression the conversion uses, so detect ≡ convert."""
+def datetime_flag(col: str) -> Column:
+    """1 if a value parses in an accepted datetime format (J2): 14-digit,
+    8-digit, ISO, slash-date — via the same expression the conversion
+    uses, so detect ≡ convert. 0 if not, null for a null."""
     c = F.col(col).cast("string")
-    return F.avg(
-        F.when(c.isNotNull(), parse_compact_timestamp(c).isNotNull().cast("int"))
-    )
+    return F.when(c.isNotNull(), parse_compact_timestamp(c).isNotNull().cast("int"))
+
+
+def _fraction(flags) -> float:
+    """Mean of the non-null flags; 0.0 when every value was null."""
+    seen = [f for f in flags if f is not None]
+    return sum(seen) / len(seen) if seen else 0.0
 
 
 @dataclass
@@ -76,8 +87,9 @@ def vote_string_columns(
     columns: list[str] | None = None,
     sample_size: int = SAMPLE_SIZE_FOR_TYPE_DETECTION,
 ) -> dict[str, dict[str, float]]:
-    """Compute numeric+datetime vote fractions for all candidate string
-    columns in ONE aggregation job over one ≤``sample_size``-row sample.
+    """Numeric+datetime vote fractions for all candidate string columns
+    from ONE job: the ≤``sample_size``-row sample is collected once, and
+    the flags are evaluated over it on the driver.
     """
     if columns is None:
         columns = [
@@ -85,19 +97,20 @@ def vote_string_columns(
         ]
     if not columns:
         return {}
-    sample = df.limit(sample_size)
-    aggs: list[Column] = []
-    for c in columns:
-        aggs.append(numeric_vote_expr(c).alias(f"__num__{c}"))
-        aggs.append(datetime_vote_expr(c).alias(f"__dt__{c}"))
-    row = sample.agg(*aggs).first()
-    out: dict[str, dict[str, float]] = {}
-    for c in columns:
-        out[c] = {
-            "numeric_fraction": row[f"__num__{c}"] or 0.0,
-            "datetime_fraction": row[f"__dt__{c}"] or 0.0,
+    cols = df.select(*columns)
+    sample = df.sparkSession.createDataFrame(
+        cols.limit(sample_size).toArrow(), schema=cols.schema
+    )
+    rows = sample.select(
+        *[flag(c) for c in columns for flag in (numeric_flag, datetime_flag)]
+    ).collect()
+    return {
+        c: {
+            "numeric_fraction": _fraction(r[2 * i] for r in rows),
+            "datetime_fraction": _fraction(r[2 * i + 1] for r in rows),
         }
-    return out
+        for i, c in enumerate(columns)
+    }
 
 
 def detect_convertible_columns(

@@ -5,18 +5,20 @@
 initial load. Merge/dedup helpers live in operators/merge.py (F1-F2).
 
 Spark shape: the watermark predicate is one filter pushed to the scan
-(Parquet row-group pruning / JDBC WHERE), and the count + max(tc) +
-result rows come from one locally checkpointed delta. The checkpoint
-is a snapshot: a result built on it never re-reads the live table, so
-a cache of it cannot pick up rows appended after the read (Spark drops
-and lazily rebuilds every cached plan over a path it appends to).
+(Parquet row-group pruning / JDBC WHERE), and the delta is locally
+checkpointed in one pass. Its row count and max(tc) are observed on that
+same pass (``Dataset.observe``), so no second job reads the checkpoint.
+The checkpoint is a snapshot: a result built on it never re-reads the
+live table, so a cache of it cannot pick up rows appended after the read
+(Spark drops and lazily rebuilds every cached plan over a path it
+appends to). The delta comes back sorted by ``tc``.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..plans.contracts import NO_DATA_ERROR, IncrementalLoadResult
@@ -37,10 +39,16 @@ class IncrementalLoader:
         tiebreaker: str | None = None,
     ) -> IncrementalLoadResult:
         df = self.df_provider()
-        delta: DataFrame = watermark_read(
-            df, self.time_col, last_timestamp, limit=limit, tiebreaker=tiebreaker
-        ).localCheckpoint()
-        row_count, max_ts = delta.agg(F.count(F.lit(1)), F.max(self.time_col)).first()
+        seen = Observation()
+        delta: DataFrame = (
+            watermark_read(
+                df, self.time_col, last_timestamp, limit=limit, tiebreaker=tiebreaker
+            )
+            .observe(seen, F.count(F.lit(1)).alias("n"), F.max(self.time_col).alias("top"))
+            .localCheckpoint()
+        )
+        observed = seen.get
+        row_count, max_ts = observed["n"], observed["top"]
         if row_count == 0:
             return IncrementalLoadResult(
                 success=False,

@@ -99,6 +99,12 @@ def lttb_pandas(
     return pdf.iloc[idx].reset_index(drop=True)
 
 
+def _lttb_collected(slim, pdf: pd.DataFrame, x_col, y_cols, threshold):
+    """Exact LTTB over ``slim``'s rows, already collected as ``pdf``."""
+    out = lttb_pandas(pdf, x_col, y_cols, threshold)
+    return slim.sparkSession.createDataFrame(out, schema=slim.schema)
+
+
 def downsample(
     df,
     x_col: str,
@@ -118,9 +124,7 @@ def downsample(
     slim = df.select(*dict.fromkeys(cols))
 
     if series_col is None:
-        pdf = slim.toPandas()
-        out = lttb_pandas(pdf, x_col, y_cols, threshold)
-        return df.sparkSession.createDataFrame(out, schema=slim.schema)
+        return _lttb_collected(slim, slim.toPandas(), x_col, y_cols, threshold)
 
     def apply_group(pdf: pd.DataFrame) -> pd.DataFrame:
         return lttb_pandas(pdf, x_col, y_cols, threshold)
@@ -138,19 +142,22 @@ def downsample_single_series(
     """Scale path for one huge series: distributed pre-reduction, then
     exact LTTB on the bounded intermediate.
 
-    Stage 1 (distributed): if the series exceeds ``prefactor×threshold``
-    points, bucket ``x`` into ``prefactor×threshold`` equal-width ranges
-    and take per-bucket means — a single hash aggregation, no sort.
-    Stage 2 (driver): exact LTTB over ≤ ``prefactor×threshold`` rows.
+    One bounded probe, ``prefactor×threshold + 1`` rows collected once,
+    picks the path: a series that fits goes straight to exact LTTB on the
+    probed rows. Otherwise, stage 1 (distributed) buckets ``x`` into
+    ``prefactor×threshold`` equal-width ranges and takes per-bucket
+    means — a single hash aggregation, no sort — and stage 2 (driver)
+    runs exact LTTB over ≤ ``prefactor×threshold`` rows.
     """
     from pyspark.sql import functions as F
 
     from .query import _timestamp_kind, epoch_micros, from_epoch_micros
 
     target = prefactor * threshold
-    n = df.count()
-    if n <= target:
-        return downsample(df, x_col, y_cols, threshold)
+    slim = df.select(*dict.fromkeys([x_col, *y_cols]))
+    head = slim.limit(target + 1).toPandas()
+    if len(head) <= target:
+        return _lttb_collected(slim, head, x_col, y_cols, threshold)
 
     # instants and wall clocks bucket as epoch µs (Spark casts no
     # TIMESTAMP_NTZ to double) and come back as the same kind

@@ -50,3 +50,6 @@ class CachedQueryMetadata:
     last_update: float = 0.0
     selected_conversions: dict[str, str] = field(default_factory=dict)
     query_params: dict[str, Any] = field(default_factory=dict)
+    # Catalog.version of the table as of the last unlimited fetch; None
+    # means "unknown", and the next read probes for new rows
+    table_version: int | None = None

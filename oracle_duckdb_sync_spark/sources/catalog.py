@@ -40,7 +40,7 @@ class Catalog:
     def __init__(self, spark: SparkSession, config: EngineConfig | None = None):
         self.spark = spark
         self.config = config or EngineConfig()
-        # analyzed-relation memo: name -> (dir mtime_ns, DataFrame).
+        # analyzed-relation memo: name -> (version(name), DataFrame).
         # Re-reading a parquet dir costs a schema-inference job (footer
         # read) per call — the reference's DuckDB catalog answers
         # DESCRIBE from its own metadata in ~0 ms, so the interactive
@@ -60,18 +60,20 @@ class Catalog:
         return os.path.join(self.config.warehouse_dir, name)
 
     # -- reads -------------------------------------------------------------
-    def _dir_signature(self, path: str) -> int | None:
-        """Mutation signature of a table directory: XOR of every
-        (dir, mtime_ns) under it. Any file add/remove/rename anywhere in
-        the tree changes its parent directory's mtime, so the signature
-        catches appends into existing partition leaves, partition swaps,
-        and full-table swaps alike (parquet files themselves are
-        immutable — only directory membership ever changes). Driver-side
-        scandir only; bails out (None → no memoization) past 4096 dirs,
-        where re-listing would start to rival a real scan."""
+    def version(self, name: str) -> int | None:
+        """Mutation signature of a table's directory tree: XOR of every
+        (dir, mtime_ns) under it, equal between two calls iff no file
+        was added, removed or renamed anywhere in the tree between them
+        (each such change bumps its parent directory's mtime, and parquet
+        files themselves are immutable — only directory membership ever
+        changes). It catches appends into existing partition leaves,
+        partition swaps and full-table swaps alike. Driver-side scandir
+        only, no job. None — "unknown, re-read" — for a missing directory
+        or past 4096 directories, where re-listing would start to rival a
+        real scan."""
         sig = 0
         count = 0
-        stack = [path]
+        stack = [self.table_path(name)]
         while stack:
             d = stack.pop()
             try:
@@ -131,7 +133,7 @@ class Catalog:
         if not self._exists_on_disk(name):
             self._relations.pop(name, None)
             raise TableNotFoundError(name)
-        sig = self._dir_signature(path)
+        sig = self.version(name)
         if sig is not None:
             hit = self._relations.get(name)
             if hit is not None and hit[0] == sig:

@@ -26,7 +26,7 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -182,9 +182,10 @@ class SyncEngine:
         path = self.catalog.table_path(table)
 
         def write() -> int:
-            n = df.count()
-            sinks.overwrite(df, path)
-            return n
+            # the row count comes from the write's own pass
+            seen = Observation()
+            sinks.overwrite(df.observe(seen, F.count(F.lit(1)).alias("n")), path)
+            return seen.get["n"]
 
         return self._timed_write(table, write, "test")
 

@@ -68,3 +68,30 @@ def test_unparseable_becomes_null(spark):
     df = spark.createDataFrame([Row(c="99999999"), Row(c="20231301")])  # bad month
     out = inf.convert_selected_columns(df, {"c": "datetime"})
     assert out.filter(out.c.isNull()).count() == 2
+
+
+def _compilations(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_vote_is_one_job_and_reuses_generated_code(spark, varchar_df, tmp_path):
+    """The vote collects its sample once and scores it on the driver: one
+    job, and no new generated class on a repeat call. A codegen'd
+    ``limit`` names its counter with a process-wide id, so a vote that
+    aggregated over ``df.limit(n)`` compiled fresh classes every call."""
+    varchar_df.write.parquet(str(tmp_path / "vc"))
+    df = spark.read.parquet(str(tmp_path / "vc"))
+    want = inf.vote_string_columns(varchar_df)
+    assert inf.vote_string_columns(df) == want  # warm call
+    before = _compilations(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("vote-floor", "vote-floor")
+    try:
+        for _ in range(3):
+            assert inf.vote_string_columns(df) == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _compilations(spark) == before
+    assert len(sc.statusTracker().getJobIdsForGroup("vote-floor")) == 3

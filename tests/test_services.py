@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -25,6 +27,24 @@ def warehouse(spark, tmp_path):
     ]
     spark.createDataFrame(rows).write.parquet(catalog.table_path("sensor"))
     return cfg, catalog
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _timed_table(spark, catalog, name, rows, mode="overwrite"):
+    spark.createDataFrame(rows).withColumn("ts", F.to_timestamp("ts")).write.mode(
+        mode
+    ).parquet(catalog.table_path(name))
 
 
 # -- cache provider (K1) -----------------------------------------------------
@@ -155,3 +175,121 @@ def test_stale_serve_on_error(spark, tmp_path):
     shutil.rmtree(catalog.table_path("st"))
     res = svc.query_with_caching("st", "ts")
     assert not res.success and res.df is not None and res.error
+
+
+def test_aggregated_query_collects_its_buckets_once(spark, warehouse):
+    """The bucket aggregate runs once: the result is collected with its
+    row count and handed back as a driver-local relation, so rendering it
+    runs no scan (at the parent the count and the caller's toPandas ran
+    the whole plan twice)."""
+    cfg, catalog = warehouse
+    svc = QueryService(catalog, cfg)
+    svc.query_table_aggregated("sensor", "TRAN_TIME", "10 minutes")  # warm
+    (res, pdf), n = _jobs(spark, lambda: (
+        (r := svc.query_table_aggregated("sensor", "TRAN_TIME", "10 minutes")),
+        r.df.toPandas(),
+    ))
+    assert res.success and res.row_count == len(pdf) == 200
+    assert n <= 6
+    (res, pdf), n = _jobs(spark, lambda: (
+        (r := svc.query_table("sensor", limit=10)), r.df.toPandas()
+    ))
+    assert res.row_count == len(pdf) == 10 and n <= 2
+
+
+def test_collected_result_keeps_instants_and_wall_clocks(spark, tmp_path):
+    """The driver-local result carries the plan's schema: a TIMESTAMP
+    stays the same instant and a TIMESTAMP_NTZ the same wall clock (the
+    session here is America/New_York, which an Arrow round trip without
+    the schema would shift)."""
+    cfg = EngineConfig(warehouse_dir=str(tmp_path / "whz"))
+    catalog = Catalog(spark, cfg)
+    spark.sql(
+        "SELECT id, timestamp_micros(1699165800000000 + id * 3600000000) AS ts, "
+        "to_timestamp_ntz('2024-11-03 01:30:00') + make_interval(0, 0, 0, 0, 0, 0, id) "
+        "AS wall FROM range(3)"
+    ).write.parquet(catalog.table_path("tz"))
+    want = spark.read.parquet(catalog.table_path("tz")).selectExpr(
+        "id", "unix_micros(ts) AS us", "CAST(wall AS STRING) AS wall"
+    ).orderBy("id").collect()
+    res = QueryService(catalog, cfg).query_table("tz", limit=10)
+    assert dict(res.df.dtypes) == {"id": "bigint", "ts": "timestamp", "wall": "timestamp_ntz"}
+    got = res.df.selectExpr(
+        "id", "unix_micros(ts) AS us", "CAST(wall AS STRING) AS wall"
+    ).orderBy("id").collect()
+    assert got == want
+
+
+def test_cached_read_jobs_and_time_order(spark, tmp_path):
+    """initial → repeat → append → read: a repeat over an unchanged table
+    runs no job before the caller's own action, the read after the
+    append runs a bounded number, and the rows come back in time order
+    with the delta after the cached rows (the merge is not re-sorted)."""
+    cfg = EngineConfig(warehouse_dir=str(tmp_path / "whj"))
+    catalog = Catalog(spark, cfg)
+    # written in reverse, so file order is not time order
+    base = [Row(ID=i, ts=f"2024-01-01 00:{59 - i:02d}:00", v=float(i)) for i in range(60)]
+    _timed_table(spark, catalog, "jt", base)
+    svc = EnhancedQueryService(catalog, cfg)
+    r1 = svc.query_with_caching("jt", "ts")
+    assert r1.success and not r1.is_incremental
+    v1 = catalog.version("jt")
+    assert v1 is not None
+
+    r2, n = _jobs(spark, lambda: svc.query_with_caching("jt", "ts"))
+    assert r2.success and r2.is_incremental and r2.row_count == 60 and n == 0
+
+    delta = [Row(ID=100 + i, ts=f"2024-01-01 01:{9 - i:02d}:00", v=0.5) for i in range(10)]
+    _timed_table(spark, catalog, "jt", delta, mode="append")
+    assert catalog.version("jt") != v1
+    (r3, pdf), n = _jobs(spark, lambda: (
+        (r := svc.query_with_caching("jt", "ts")), r.df.toPandas()
+    ))
+    assert r3.success and r3.is_incremental and r3.row_count == len(pdf) == 70
+    assert n <= 6
+    assert pdf["ts"].is_monotonic_increasing
+    assert set(pdf["ID"][-10:]) == set(range(100, 110))
+
+    # the read after the delta recorded the new version: no probe again
+    r4, n = _jobs(spark, lambda: svc.query_with_caching("jt", "ts"))
+    assert r4.row_count == 70 and n == 0
+
+
+def test_limited_initial_load_keeps_probing(spark, tmp_path):
+    """A ``limit``-ed first read records no table version, so its repeat
+    still probes and pulls in the rows past the limit."""
+    cfg = EngineConfig(warehouse_dir=str(tmp_path / "whl"))
+    catalog = Catalog(spark, cfg)
+    _timed_table(spark, catalog, "lim", [
+        Row(ID=i, ts=f"2024-01-01 00:{i:02d}:00") for i in range(30)
+    ])
+    svc = EnhancedQueryService(catalog, cfg)
+    assert svc.query_with_caching("lim", "ts", limit=10).row_count == 10
+    r = svc.query_with_caching("lim", "ts")
+    assert r.success and r.is_incremental and r.row_count == 30
+    assert sorted(x.ID for x in r.df.collect()) == list(range(30))
+
+
+def test_empty_conversion_decision_holds_for_deltas(spark, tmp_path):
+    """An initial read that converted nothing stores ``{}``; a delta is
+    not voted again on its own sample. Here the delta alone looks
+    numeric and, voted alone, was cast to double — the merged cache then
+    failed on the first read with CAST_INVALID_INPUT on 'A0'."""
+    cfg = EngineConfig(warehouse_dir=str(tmp_path / "whe"))
+    catalog = Catalog(spark, cfg)
+    _timed_table(spark, catalog, "codes", [
+        Row(ID=i, ts=f"2024-01-01 00:{i:02d}:00", code=f"A{i}") for i in range(20)
+    ])
+    svc = EnhancedQueryService(catalog, cfg)
+    r1 = svc.query_with_caching("codes", "ts")
+    assert r1.success and r1.conversions == {}
+    _timed_table(spark, catalog, "codes", [
+        Row(ID=100 + i, ts=f"2024-01-01 01:{i:02d}:00", code=f"{i:03d}") for i in range(5)
+    ], mode="append")
+    r2 = svc.query_with_caching("codes", "ts")
+    assert r2.success and r2.row_count == 25
+    assert dict(r2.df.dtypes)["code"] == "string"
+    got = sorted((x.ID, x.code) for x in r2.df.collect())
+    assert got == sorted(
+        [(i, f"A{i}") for i in range(20)] + [(100 + i, f"{i:03d}") for i in range(5)]
+    )

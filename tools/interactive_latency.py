@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Measure the interactive-session hot path (VERDICT r6 ask #7).
+"""Measure the interactive-session hot path.
 
 The reference's interactive loop (application/query_service.py:222-357)
 answers list/count/aggregate/viz actions in ~50 ms because DuckDB has
@@ -9,12 +9,14 @@ filesystem + schema), and data actions must run as FEW jobs as
 possible, with the cache serving repeats without touching the scan.
 
 This tool drives one end-to-end session against a warehouse built from
-$SPARK_GRAFT_SF_DIR events (default sf0.1), printing per-action warm
-latency AND the number of Spark jobs each action scheduled (from the
-AppStatusStore), so "0 jobs" is measured, not claimed. Output: one JSON
-line per action + a summary — paste into SCALE.md.
+$SPARK_GRAFT_SF_DIR events (default sf0.1), in the session the engine
+ships (``session.build_session``, ``local[$SPARK_GRAFT_CPUS]``). For
+each action it prints the warm latency, the number of Spark jobs it
+scheduled (from the AppStatusStore) and the number of generated classes
+it compiled (Spark's CodegenMetrics), so "0 jobs" and "no recompile"
+are measured, not claimed. Output: one JSON line per action + a summary.
 
-Usage: python tools/interactive_latency.py
+Usage: SPARK_GRAFT_CPUS=4 python tools/interactive_latency.py
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def n_jobs(spark) -> int:
@@ -37,40 +38,33 @@ def n_jobs(spark) -> int:
     return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
 
 
-def main() -> None:
-    from pyspark.sql import SparkSession
+def n_compiled(spark) -> int:
+    """Generated classes compiled so far in this JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
+
+def main() -> None:
     from oracle_duckdb_sync_spark.config import EngineConfig
     from oracle_duckdb_sync_spark.plans.services import (
         EnhancedQueryService,
         QueryService,
     )
     from oracle_duckdb_sync_spark.plans.viz import prepare_plot_dataframe
+    from oracle_duckdb_sync_spark.session import build_session
     from oracle_duckdb_sync_spark.sources.catalog import Catalog
+    from oracle_duckdb_sync_spark.sources.testdata import load_table
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     wh = os.path.join(REPO, ".localdata", "interactive_wh")
     shutil.rmtree(wh, ignore_errors=True)
     cfg = EngineConfig(warehouse_dir=wh)
     cat = Catalog(spark, cfg)
-    # events with a proper timestamp column (ns BIGINT -> epoch seconds)
-    ev = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    ts_expr = (
-        "CAST(ts DIV 1000000000 AS TIMESTAMP) AS ts"
-        if dict(ev.dtypes)["ts"] == "bigint"
-        else "CAST(ts AS TIMESTAMP) AS ts"
-    )
-    ev.selectExpr(
-        "event_id", "user_id", "event_type", ts_expr, "value"
+    # events with a proper timestamp column
+    load_table(spark, SF_DIR, "events").select(
+        "event_id", "user_id", "event_type", "ts", "value"
     ).write.parquet(os.path.join(wh, "events"))
 
     svc = QueryService(cat, cfg)
@@ -99,7 +93,7 @@ def main() -> None:
             lambda: esvc.query_with_caching("events", "ts"),
         ),
         (
-            "cached_read (repeat: delta probe only)",
+            "cached_read (repeat: unchanged table, no job)",
             lambda: esvc.query_with_caching("events", "ts"),
         ),
     ]
@@ -114,12 +108,14 @@ def main() -> None:
         stateful = name.startswith("cached_read")
         if not stateful:
             fn()
-        j0 = n_jobs(spark)
+        j0, c0 = n_jobs(spark), n_compiled(spark)
         t0 = time.time()
         fn()
         dt = time.time() - t0
-        jobs = n_jobs(spark) - j0
-        results.append({"action": name, "sec": round(dt, 4), "jobs": jobs})
+        results.append({
+            "action": name, "sec": round(dt, 4), "jobs": n_jobs(spark) - j0,
+            "compiled": n_compiled(spark) - c0,
+        })
         print(json.dumps(results[-1]))
 
     total = sum(r["sec"] for r in results)
