@@ -14,13 +14,19 @@ Reference parity map (all DDL/CRUD against DuckDB in the reference):
   (menu/repository.py:54) — enforced here in :meth:`UserRepository.delete`
 
 Design: metadata tables are tiny (thousands of rows) and single-writer
-(the reference is too — guarded by ``SyncLock``). Each mutation is one
-:mod:`..sources.sinks` rewrite — ``insert`` through ``sinks.overwrite``,
-``update``/``delete`` through ``sinks.update_where``/``delete_where`` —
-so a failed job leaves the table as it was (the sinks' staged swap) and
-the table's rows never pass through the driver. The read path stays a
-plain ``spark.read.parquet``. At 100 TB the DATA tables never live here
-— only operational metadata.
+(the reference is too — guarded by ``SyncLock``), so they live off the
+Spark job path. Each table is a directory holding exactly one file,
+``data.parquet``. Every mutation runs on the driver with pyarrow: read
+the file, apply the change, write a hidden sibling, fsync it and
+``os.replace`` it onto the data file (:func:`..sources.state.replace_file`,
+the primitive the JSON state uses) — one rename is the commit point, so
+a kill leaves the old table or the new one, and no mutation runs a
+Spark job or needs a session. Reads stay on Spark: :meth:`ParquetRepository.df`
+scans the data file with the declared schema, so ``get``/``find``/
+``stats``/``recent`` return Spark rows. A directory Spark wrote (part
+files, ``_SUCCESS``) is migrated to the one-file layout when the
+repository opens. At 100 TB the DATA tables never live here — only
+operational metadata.
 """
 
 from __future__ import annotations
@@ -28,11 +34,15 @@ from __future__ import annotations
 import hashlib
 import os
 import secrets
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -45,7 +55,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.aggregate import conditional_rollup
-from ..sources import sinks
+from ..sources.state import replace_file
 
 SYNC_LOG_SCHEMA = StructType(
     [
@@ -102,7 +112,7 @@ def _utcnow() -> datetime:
 
 
 class ParquetRepository:
-    """Generic single-writer CRUD repository over one Parquet table.
+    """Generic single-writer CRUD repository over one Parquet file.
 
     ``insert`` assigns ``max(id)+1`` (A19 parity — the reference's
     ``last_insert_rowid()`` is equally single-writer, serialized by its
@@ -111,17 +121,60 @@ class ParquetRepository:
 
     schema: StructType = StructType([StructField("id", LongType(), False)])
     name: str = "table"
+    DATA_FILE = "data.parquet"
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.path = os.path.join(base_dir, self.name)
-        if not os.path.exists(os.path.join(self.path, "_SUCCESS")):
-            sinks.overwrite(spark.createDataFrame([], self.schema), self.path)
+        self.data_file = os.path.join(self.path, self.DATA_FILE)
+        self._arrow = to_arrow_schema(self.schema)
+        os.makedirs(self.path, exist_ok=True)
+        if not os.path.exists(self.data_file):
+            self._commit(self._spark_written_rows())
+        self._remove_strays()
+
+    # -- layout --------------------------------------------------------------
+
+    def _spark_written_rows(self) -> pa.Table:
+        """The rows of a directory Spark wrote (part files, its timestamp
+        encoding) in this table's Arrow schema; none when there are no
+        part files. Read only while no data file exists, so a migration
+        killed at any step is redone from the same part files."""
+        parts = sorted(
+            os.path.join(self.path, f) for f in os.listdir(self.path)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+        if not parts:
+            return self._arrow.empty_table()
+        tables = [pq.read_table(p, coerce_int96_timestamp_unit="us") for p in parts]
+        return pa.concat_tables(t.select(self._arrow.names).cast(self._arrow) for t in tables)
+
+    def _remove_strays(self) -> None:
+        """Delete all but the data file: part files and ``_SUCCESS`` a
+        migration committed past, and siblings of a write that never
+        reached its rename."""
+        for f in os.listdir(self.path):
+            if f != self.DATA_FILE:
+                os.remove(os.path.join(self.path, f))
+
+    def _read(self) -> pa.Table:
+        return pq.read_table(self.data_file)
+
+    def _commit(self, table: pa.Table) -> None:
+        replace_file(self.data_file, lambda f: pq.write_table(table, f))
+
+    def _matching(self, **eq) -> list[dict]:
+        """Rows with ``k == v`` for every pair, read on the driver: the
+        lookups mutations make, where :meth:`find` would run a job."""
+        cond = pc.scalar(True)
+        for k, v in eq.items():
+            cond = cond & (pc.field(k) == v)
+        return self._read().filter(cond).to_pylist()
 
     # -- reads ---------------------------------------------------------------
 
     def df(self) -> DataFrame:
-        return self.spark.read.schema(self.schema).parquet(self.path)
+        return self.spark.read.schema(self.schema).parquet(self.data_file)
 
     def all(self) -> list[Row]:
         return self.df().orderBy("id").collect()
@@ -140,31 +193,40 @@ class ParquetRepository:
     def count(self) -> int:
         return self.df().count()
 
-    # -- writes (single-writer, each one sinks rewrite) ----------------------
+    # -- writes (single-writer, each one file replace) -----------------------
 
     def insert(self, **values: Any) -> int:
-        cur = self.df()
-        new_id = int(cur.agg(F.max("id")).first()[0] or 0) + 1
-        values = {"id": new_id, **values}
-        row = [tuple(values.get(f.name) for f in self.schema.fields)]
-        new = self.spark.createDataFrame(row, self.schema)
-        # coalesce(1): the table stays one file
-        sinks.overwrite(cur.unionByName(new).coalesce(1), self.path)
+        cur = self._read()
+        new_id = (pc.max(cur["id"]).as_py() or 0) + 1
+        row = pa.Table.from_pylist([{**values, "id": new_id}], schema=self._arrow)
+        self._commit(pa.concat_tables([cur, row]))
         return new_id
 
     def update(self, id_: int, **values: Any) -> bool:
-        """Set ``values`` (literals or Columns over the pre-update row)
-        on row ``id_``; each is cast to its field's type, so column types
-        never drift. False when there is no such row."""
-        sets = {k: F.lit(v).cast(self.schema[k].dataType) for k, v in values.items()}
-        return sinks.update_where(self.spark, self.path, F.col("id") == id_, sets) > 0
+        """Set literal ``values`` on row ``id_``; each is cast to its
+        field's Arrow type, so column types never drift. False when there
+        is no such row."""
+        cur = self._read()
+        hit = pc.equal(cur["id"], id_)
+        if not pc.any(hit).as_py():
+            return False
+        sets = {k: pa.scalar(v).cast(self._arrow.field(k).type) for k, v in values.items()}
+        cols = [pc.if_else(hit, sets[f.name], cur[f.name]) if f.name in sets else cur[f.name]
+                for f in self._arrow]
+        self._commit(pa.Table.from_arrays(cols, schema=self._arrow))
+        return True
 
     def delete(self, id_: int) -> bool:
-        return self.delete_where(F.col("id") == id_) > 0
+        return self.delete_where(pc.field("id") == id_) > 0
 
-    def delete_where(self, condition) -> int:
-        """SQL DELETE: a row whose condition is NULL is kept."""
-        return sinks.delete_where(self.spark, self.path, condition)
+    def delete_where(self, condition: pc.Expression) -> int:
+        """SQL DELETE over a pyarrow predicate: a row whose condition is
+        NULL is kept. Returns the number of rows deleted."""
+        cur = self._read()
+        kept = cur.filter(~pc.coalesce(condition, pc.scalar(False)))
+        if kept.num_rows < cur.num_rows:
+            self._commit(kept)
+        return cur.num_rows - kept.num_rows
 
 
 class SyncLogRepository(ParquetRepository):
@@ -189,17 +251,19 @@ class SyncLogRepository(ParquetRepository):
         total_rows: int = 0,
         error_message: str | None = None,
     ) -> bool:
+        rows = self._matching(id=id_)
+        if not rows:
+            return False
         end = _utcnow()
-        # from the stored instant, not a collected start_time: that comes
-        # back as a naive datetime in the driver OS's time zone
-        dur = (F.unix_micros(F.lit(end)) - F.unix_micros("start_time")) / 1e6
+        # the stored start_time reads back as a UTC-aware datetime
+        start = rows[0]["start_time"]
         return self.update(
             id_,
             status=status,
             total_rows=total_rows,
             error_message=error_message,
             end_time=end,
-            duration_seconds=dur,
+            duration_seconds=None if start is None else (end - start).total_seconds(),
         )
 
     def recent(self, k: int = 10) -> list[Row]:
@@ -225,8 +289,8 @@ class SyncLogRepository(ParquetRepository):
 
     def cleanup_old(self, days: int) -> int:
         """B7 retention delete as a filtered rewrite."""
-        cutoff = F.current_timestamp() - F.expr(f"INTERVAL {int(days)} DAYS")
-        return self.delete_where(F.col("start_time") < cutoff)
+        cutoff = _utcnow() - timedelta(days=int(days))
+        return self.delete_where(pc.field("start_time") < cutoff)
 
 
 def hash_password(password: str, salt: str | None = None) -> str:
@@ -259,7 +323,7 @@ class UserRepository(ParquetRepository):
         self._menus = menus
 
     def create_user(self, username: str, password: str, role: str = "user") -> int:
-        if self.find(username=username):
+        if self._matching(username=username):
             raise ValueError(f"username exists: {username}")
         return self.insert(
             username=username,
@@ -280,7 +344,7 @@ class UserRepository(ParquetRepository):
         reference's FK is enforced by DuckDB; here the repository layer
         owns it."""
         if self._menus is not None:
-            self._menus.delete_where(F.col("user_id") == id_)
+            self._menus.delete_where(pc.field("user_id") == id_)
         return super().delete(id_)
 
 
@@ -306,7 +370,7 @@ class TableConfigRepository(ParquetRepository):
     name = "table_configs"
 
     def upsert_config(self, table_name: str, **values: Any) -> int:
-        existing = self.find(table_name=table_name)
+        existing = self._matching(table_name=table_name)
         if existing:
             self.update(existing[0]["id"], updated_at=_utcnow(), **values)
             return existing[0]["id"]

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from datetime import date, datetime, timedelta
+from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -90,13 +91,23 @@ def collect_watermark(df: DataFrame, time_col: str):
     """MAX(time_col) as a JSON-storable, timezone-proof value: epoch
     microseconds for timestamp columns (see :func:`watermark_literal`
     for why strings/datetimes are unsafe), the raw value otherwise."""
-    kind = _timestamp_kind(df, time_col)
-    if kind == "timestamp":
-        return df.agg(F.unix_micros(F.max(time_col))).first()[0]
-    top = df.agg(F.max(time_col)).first()[0]
-    if kind == "timestamp_ntz" and top is not None:
-        return (top - _EPOCH_WALL) // timedelta(microseconds=1)
-    return top
+    return count_and_watermark(df, time_col)[1]
+
+
+def count_and_watermark(df: DataFrame, time_col: str | None) -> tuple[int, Any]:
+    """COUNT(*) and the :func:`collect_watermark` value in one aggregate,
+    where ``count()`` and a MAX would be two actions (each its own jobs
+    under AQE). Without ``time_col`` the watermark is None."""
+    kind = _timestamp_kind(df, time_col) if time_col else None
+    aggs = [F.count(F.lit(1))]
+    if time_col:
+        top = F.max(time_col)
+        aggs.append(F.unix_micros(top) if kind == "timestamp" else top)
+    row = df.agg(*aggs).first()
+    wm = row[1] if time_col else None
+    if kind == "timestamp_ntz" and wm is not None:
+        wm = (wm - _EPOCH_WALL) // timedelta(microseconds=1)
+    return row[0], wm
 
 
 def epoch_micros(col: Column, kind: str) -> Column:

@@ -72,30 +72,39 @@ class CacheProvider(ABC):
 
 class MemoryCacheProvider(CacheProvider):
     """Driver-dict provider; DataFrame values are persisted on set and
-    unpersisted on delete/clear so executor memory is released."""
+    unpersisted on delete/clear so executor memory is released.
+
+    A DataFrame that ``set`` supersedes stays persisted until its key is
+    deleted or the cache cleared: the new value's plan may read it (a
+    delta merged onto the cached rows does) until that value is
+    materialised, and unpersisting it early would recompute its source."""
 
     def __init__(self, storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK):
         self._store: dict[str, Any] = {}
+        self._superseded: dict[str, list[DataFrame]] = {}
         self.storage_level = storage_level
 
     def get(self, key: str) -> Any:
         return self._store.get(self.hash_key(key))
 
     def set(self, key: str, value: Any) -> None:
+        key = self.hash_key(key)
+        old = self._store.get(key)
+        if isinstance(old, DataFrame) and old is not value:
+            self._superseded.setdefault(key, []).append(old)
         if isinstance(value, DataFrame):
             value.persist(self.storage_level)
-        self._store[self.hash_key(key)] = value
+        self._store[key] = value
 
     def delete(self, key: str) -> None:
-        v = self._store.pop(self.hash_key(key), None)
-        if isinstance(v, DataFrame):
-            v.unpersist()
-
-    def clear(self) -> None:
-        for v in self._store.values():
+        key = self.hash_key(key)
+        for v in [self._store.pop(key, None), *self._superseded.pop(key, [])]:
             if isinstance(v, DataFrame):
                 v.unpersist()
-        self._store.clear()
+
+    def clear(self) -> None:
+        for key in list(self._store):
+            self.delete(key)
 
     def has(self, key: str) -> bool:
         return self.hash_key(key) in self._store

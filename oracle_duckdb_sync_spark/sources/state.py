@@ -24,8 +24,9 @@ import json
 import os
 import socket
 import time
+from collections.abc import Callable
 from datetime import datetime
-from typing import Any
+from typing import Any, BinaryIO
 
 from ..config import LOCK_STALE_SECONDS
 from ..errors import LockHeldError
@@ -33,6 +34,21 @@ from ..errors import LockHeldError
 
 def _iso(v: Any) -> Any:
     return v.isoformat() if isinstance(v, datetime) else v
+
+
+def replace_file(path: str, write: Callable[[BinaryIO], Any]) -> None:
+    """Commit a whole new file at ``path``: ``write`` fills a hidden
+    sibling (``.tmp-*``, which no ``*.parquet`` glob matches and pyarrow's
+    discovery skips), the sibling is fsynced, and one ``os.replace`` is
+    the commit point. A crash at any instruction leaves the old file or
+    the whole new one, never a truncated one."""
+    head, base = os.path.split(path)
+    tmp = os.path.join(head, f".tmp-{base}-{os.getpid()}")
+    with open(tmp, "wb") as f:
+        write(f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 class JsonStateStore:
@@ -46,15 +62,8 @@ class JsonStateStore:
         return os.path.join(self.state_dir, name)
 
     def save_json(self, name: str, data: Any) -> None:
-        path = self._path(name)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(data, f, ensure_ascii=False, indent=2, default=_iso)
-            # on disk before the rename: a crash must leave the old file
-            # or the whole new one, never a truncated watermark
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)  # atomic commit
+        text = json.dumps(data, ensure_ascii=False, indent=2, default=_iso)
+        replace_file(self._path(name), lambda f: f.write(text.encode("utf-8")))
 
     def load_json(self, name: str, default: Any = None) -> Any:
         path = self._path(name)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..errors import SyncError
-from ..operators.query import collect_watermark, watermark_literal
+from ..operators.query import count_and_watermark, watermark_literal
 from ..sources import sinks
 from ..sources.catalog import Catalog
 from ..sources.state import SyncStateStore
@@ -150,9 +150,7 @@ class SyncEngine:
             # by every later incremental.
             df.persist()
             try:
-                n = df.count()
-                if time_column:
-                    wm_holder["wm"] = collect_watermark(df, time_column)
+                n, wm_holder["wm"] = count_and_watermark(df, time_column)
                 if primary_key and self.catalog.table_exists(table):
                     sinks.upsert(
                         self.spark, df, path, [primary_key], partition_cols=partition_cols
@@ -214,12 +212,14 @@ class SyncEngine:
         new_wm_holder: dict[str, Any] = {}
 
         def write() -> int:
-            # cache the delta so count / max / write share one scan
+            # cache the delta so count / max / write share one scan; the
+            # count is not observed on the append: an empty append still
+            # writes a part file into the table
             delta.persist()
             try:
-                n = delta.count()
+                n, wm = count_and_watermark(delta, time_column)
                 if n > 0:
-                    new_wm_holder["wm"] = collect_watermark(delta, time_column)
+                    new_wm_holder["wm"] = wm
                     sinks.append(delta, path)
                 return n
             finally:

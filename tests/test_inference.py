@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Row
 
 from oracle_duckdb_sync_spark.functions import inference as inf
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -86,12 +87,7 @@ def test_vote_is_one_job_and_reuses_generated_code(spark, varchar_df, tmp_path):
     want = inf.vote_string_columns(varchar_df)
     assert inf.vote_string_columns(df) == want  # warm call
     before = _compilations(spark)
-    sc = spark.sparkContext
-    sc.setJobGroup("vote-floor", "vote-floor")
-    try:
-        for _ in range(3):
-            assert inf.vote_string_columns(df) == want
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    votes, n = count_jobs(spark, lambda: [inf.vote_string_columns(df) for _ in range(3)])
+    assert votes == [want] * 3
     assert _compilations(spark) == before
-    assert len(sc.statusTracker().getJobIdsForGroup("vote-floor")) == 3
+    assert n == 3

@@ -3,9 +3,13 @@
 from __future__ import annotations
 
 import os
+import signal
+import subprocess
+import sys
 import time
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -14,6 +18,7 @@ from oracle_duckdb_sync_spark.agent.core import Agent, Conversation, LlmReply, T
 from oracle_duckdb_sync_spark.agent.tools import build_default_registry
 from oracle_duckdb_sync_spark.config import EngineConfig
 from oracle_duckdb_sync_spark.meta.repos import (
+    SYNC_LOG_SCHEMA,
     MenuRepository,
     SyncLogRepository,
     TableConfigRepository,
@@ -27,6 +32,7 @@ from oracle_duckdb_sync_spark.sync.scheduler import CronScheduler
 from oracle_duckdb_sync_spark.sync.service import SyncService
 from oracle_duckdb_sync_spark.sync.worker import COMPLETED, SyncWorker
 from oracle_duckdb_sync_spark import streaming as ST
+from tests.conftest import count_jobs
 
 
 # -- metadata repositories ---------------------------------------------------
@@ -105,6 +111,123 @@ def test_user_auth_and_menu_cascade(spark, tmp_path):
 
     users.delete(uid)  # FK ON DELETE CASCADE parity
     assert [m["id"] for m in menus.all()] == [public] and users.count() == 0
+
+
+def test_metadata_mutations_run_no_spark_job(spark, tmp_path):
+    """Opening a repository and every mutation run on the driver: no
+    Spark job. The reads after them see every change."""
+    old = datetime(2000, 1, 1, tzinfo=timezone.utc)
+
+    def mutate():
+        logs = SyncLogRepository(spark, str(tmp_path))
+        configs = TableConfigRepository(spark, str(tmp_path))
+        i = logs.log_start("s1", "orders", "full")
+        assert logs.log_end(i, "completed", total_rows=5)
+        j = logs.insert(sync_id="s0", table_name="orders", status="running", start_time=old)
+        assert logs.update(j, status="failed", total_rows="7")
+        assert logs.cleanup_old(days=30) == 1
+        assert logs.delete(logs.log_start("s2", "events", "full"))
+        c = configs.upsert_config("t", sync_enabled=True)
+        assert configs.upsert_config("t", sync_enabled=False, time_column="ts") == c
+        return logs, configs
+
+    (logs, configs), n = count_jobs(spark, mutate)
+    assert n == 0
+    [row] = logs.all()
+    assert (row["sync_id"], row["status"], row["total_rows"]) == ("s1", "completed", 5)
+    assert 0 <= row["duration_seconds"] < 60
+    [cfg] = configs.find(table_name="t")
+    assert cfg["sync_enabled"] is False and cfg["time_column"] == "ts"
+
+
+_T0 = datetime(2024, 3, 10, 6, 30, tzinfo=timezone.utc)  # New York's DST gap at 07:00
+
+
+def _spark_written_logs(spark, base) -> list[dict]:
+    """A ``sync_logs`` directory as Spark writes it (two part files,
+    ``_SUCCESS``, Spark's timestamp encoding); returns its rows."""
+    rows = [
+        {"id": i, "sync_id": f"s{i}", "table_name": "orders", "sync_type": "full",
+         "status": "completed", "total_rows": 10 * i, "error_message": None,
+         "start_time": _T0 + timedelta(minutes=i), "end_time": _T0 + timedelta(minutes=i, seconds=3),
+         "duration_seconds": 3.0}
+        for i in (1, 2, 5)
+    ]
+    names = SYNC_LOG_SCHEMA.fieldNames()
+    spark.createDataFrame([tuple(r[k] for k in names) for r in rows], SYNC_LOG_SCHEMA) \
+        .repartition(2).write.parquet(os.path.join(base, "sync_logs"))
+    return rows
+
+
+def _table_rows(repo) -> tuple[list, list[dict]]:
+    """The table through Spark (instants as epoch µs) and through
+    pyarrow's discovery of the whole directory."""
+    via_spark = [tuple(r) for r in repo.df().selectExpr(
+        "id", "status", "total_rows", "unix_micros(start_time)", "unix_micros(end_time)"
+    ).orderBy("id").collect()]
+    return via_spark, pq.read_table(repo.path).sort_by("id").to_pylist()
+
+
+def _as_spark(rows: list[dict]) -> list[tuple]:
+    us = lambda t: None if t is None else (t - datetime(1970, 1, 1, tzinfo=timezone.utc)) // timedelta(microseconds=1)  # noqa: E731
+    return [(r["id"], r["status"], r["total_rows"], us(r["start_time"]), us(r["end_time"]))
+            for r in rows]
+
+
+def test_spark_written_table_migrates_to_one_file(spark, tmp_path):
+    """A table the Spark write path left opens with the same rows as one
+    data file, and the next id is max+1."""
+    rows = _spark_written_logs(spark, str(tmp_path))
+    repo = SyncLogRepository(spark, str(tmp_path))
+    assert os.listdir(repo.path) == ["data.parquet"]
+    assert _table_rows(repo) == (_as_spark(rows), rows)
+    assert repo.log_start("s6", "orders", "full") == 6
+
+
+_KILL_CHILD = """
+import os, signal, sys
+from oracle_duckdb_sync_spark.meta.repos import SyncLogRepository
+
+base, point = sys.argv[1:]
+replace, remove = os.replace, os.remove
+
+def die():
+    os.kill(os.getpid(), signal.SIGKILL)
+
+if point == "before-replace":  # the sibling is written and fsynced
+    os.replace = lambda *a: die()
+elif point == "after-replace":
+    os.replace = lambda *a: (replace(*a), die())
+elif point == "mid-cleanup":  # one stray file removed
+    os.remove = lambda p: (remove(p), die())
+repo = SyncLogRepository(None, base)  # migrates a Spark-written table
+repo.update(1, status="failed", total_rows=7)
+sys.exit(3)
+"""
+
+
+@pytest.mark.parametrize("layout,point", [
+    ("one-file", "before-replace"), ("one-file", "after-replace"),
+    ("spark", "before-replace"), ("spark", "after-replace"), ("spark", "mid-cleanup"),
+])
+def test_kill_leaves_old_or_new_table(spark, tmp_path, layout, point):
+    """A process SIGKILLed at each step of a mutation or of the migration
+    leaves the old table or the new one: after a restart, Spark and
+    pyarrow both read exactly one of them. The child writes without a
+    session, so it starts no JVM."""
+    base = str(tmp_path)
+    before = _spark_written_logs(spark, base)
+    if layout == "one-file":
+        SyncLogRepository(spark, base)
+    after = [dict(r, status="failed", total_rows=7) if r["id"] == 1 else r for r in before]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run([sys.executable, "-c", _KILL_CHILD, base, point],
+                           env={**os.environ, "PYTHONPATH": root}, timeout=120)
+    assert child.returncode == -signal.SIGKILL
+    repo = SyncLogRepository(spark, base)
+    want = after if (layout, point) == ("one-file", "after-replace") else before
+    assert os.listdir(repo.path) == ["data.parquet"]
+    assert _table_rows(repo) == (_as_spark(want), want)
 
 
 # -- worker / scheduler ------------------------------------------------------

@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -14,6 +12,7 @@ from oracle_duckdb_sync_spark.plans.cache import MemoryCacheProvider, QueryCache
 from oracle_duckdb_sync_spark.plans.contracts import NO_DATA_ERROR
 from oracle_duckdb_sync_spark.plans.services import EnhancedQueryService, QueryService
 from oracle_duckdb_sync_spark.sources.catalog import Catalog
+from tests.conftest import count_jobs
 
 
 @pytest.fixture()
@@ -27,18 +26,6 @@ def warehouse(spark, tmp_path):
     ]
     spark.createDataFrame(rows).write.parquet(catalog.table_path("sensor"))
     return cfg, catalog
-
-
-def _jobs(spark, fn):
-    """``fn()`` and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _timed_table(spark, catalog, name, rows, mode="overwrite"):
@@ -185,13 +172,13 @@ def test_aggregated_query_collects_its_buckets_once(spark, warehouse):
     cfg, catalog = warehouse
     svc = QueryService(catalog, cfg)
     svc.query_table_aggregated("sensor", "TRAN_TIME", "10 minutes")  # warm
-    (res, pdf), n = _jobs(spark, lambda: (
+    (res, pdf), n = count_jobs(spark, lambda: (
         (r := svc.query_table_aggregated("sensor", "TRAN_TIME", "10 minutes")),
         r.df.toPandas(),
     ))
     assert res.success and res.row_count == len(pdf) == 200
     assert n <= 6
-    (res, pdf), n = _jobs(spark, lambda: (
+    (res, pdf), n = count_jobs(spark, lambda: (
         (r := svc.query_table("sensor", limit=10)), r.df.toPandas()
     ))
     assert res.row_count == len(pdf) == 10 and n <= 2
@@ -236,13 +223,13 @@ def test_cached_read_jobs_and_time_order(spark, tmp_path):
     v1 = catalog.version("jt")
     assert v1 is not None
 
-    r2, n = _jobs(spark, lambda: svc.query_with_caching("jt", "ts"))
+    r2, n = count_jobs(spark, lambda: svc.query_with_caching("jt", "ts"))
     assert r2.success and r2.is_incremental and r2.row_count == 60 and n == 0
 
     delta = [Row(ID=100 + i, ts=f"2024-01-01 01:{9 - i:02d}:00", v=0.5) for i in range(10)]
     _timed_table(spark, catalog, "jt", delta, mode="append")
     assert catalog.version("jt") != v1
-    (r3, pdf), n = _jobs(spark, lambda: (
+    (r3, pdf), n = count_jobs(spark, lambda: (
         (r := svc.query_with_caching("jt", "ts")), r.df.toPandas()
     ))
     assert r3.success and r3.is_incremental and r3.row_count == len(pdf) == 70
@@ -251,8 +238,30 @@ def test_cached_read_jobs_and_time_order(spark, tmp_path):
     assert set(pdf["ID"][-10:]) == set(range(100, 110))
 
     # the read after the delta recorded the new version: no probe again
-    r4, n = _jobs(spark, lambda: svc.query_with_caching("jt", "ts"))
+    r4, n = count_jobs(spark, lambda: svc.query_with_caching("jt", "ts"))
     assert r4.row_count == 70 and n == 0
+
+
+def test_cache_clear_releases_superseded_reads(spark, tmp_path):
+    """A read after a delta supersedes the cached rows; ``clear()``
+    unpersists both, so two initial → append → read chains leave Spark's
+    cache as it was before them."""
+    cfg = EngineConfig(warehouse_dir=str(tmp_path / "whc"))
+    catalog = Catalog(spark, cfg)
+    svc = EnhancedQueryService(catalog, cfg)
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData
+    before = cached().size()
+    for name in ("c1", "c2"):
+        _timed_table(spark, catalog, name, [Row(ID=i, ts=f"2024-01-01 00:{i:02d}:00")
+                                            for i in range(20)])
+        assert svc.query_with_caching(name, "ts").row_count == 20
+        _timed_table(spark, catalog, name, [Row(ID=99, ts="2024-01-01 01:00:00")],
+                     mode="append")
+        r = svc.query_with_caching(name, "ts")
+        assert r.is_incremental and r.df.count() == 21
+    assert cached().size() > before
+    svc.cache.clear()
+    assert cached().size() == before
 
 
 def test_limited_initial_load_keeps_probing(spark, tmp_path):

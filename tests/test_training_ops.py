@@ -17,6 +17,7 @@ from oracle_duckdb_sync_spark.operators import dedup as DD
 from oracle_duckdb_sync_spark.operators import multimodal as MM
 from oracle_duckdb_sync_spark.operators import similarity as SIM
 from oracle_duckdb_sync_spark.sources.testdata import load_table
+from tests.conftest import count_jobs
 from tests.oracle_check import assert_frames_match
 
 
@@ -246,11 +247,8 @@ def test_embedding_neardup_srp_with_dim_param(spark):
     df = spark.createDataFrame(
         [Row(vec_id=1, embedding=v), Row(vec_id=2, embedding=v), Row(vec_id=3, embedding=o)]
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup() or [])
-    plan = SIM.embedding_neardup_pairs(df, 0.9, dim=8)
-    after = len(tracker.getJobIdsForGroup() or [])
-    assert after == before  # plan construction triggered no Spark job
+    plan, n = count_jobs(spark, lambda: SIM.embedding_neardup_pairs(df, 0.9, dim=8))
+    assert n == 0  # plan construction triggered no Spark job
     pairs = plan.collect()
     assert [(p["id_a"], p["id_b"]) for p in pairs] == [(1, 2)]
 
