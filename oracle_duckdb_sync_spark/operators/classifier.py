@@ -28,12 +28,17 @@ classifier runs as Spark codegen with zero Python in the hot path.
   relational pass, still no iteration) and stores the midpoint of the
   per-class mean LENGTH-NORMALIZED scores as ``thr6``. Prediction is
   ``norm6 >= thr6`` — length-invariant and centered.
-- **Score** (:func:`nb_classifier_score`): explode -> LEFT broadcast
-  join against the weight table (<= n_buckets rows — broadcastable by
-  construction) -> per-document BIGINT sum. Unseen buckets fall back
-  to the smoothed floor via COALESCE, so NEW documents score against
-  a persisted model with no training-corpus access (same
-  persisted-model convention as the MinHash store / IVF index).
+- **Score** (:func:`nb_classifier_score`): read the model ONCE (at
+  most ``n_buckets`` rows, one ``toArrow()``), then explode -> LEFT
+  broadcast join against that driver-local ``(bucket, w6)`` table ->
+  per-document BIGINT sum, with the model's totals, prior and threshold
+  as literals — the Spark NB shape of *Large Scale Sentiment Analysis
+  on Twitter with Spark* (EDBT 2016). A lazily trained model's plan
+  runs once, at that read, not once per consumer of the scores. Unseen
+  buckets fall back to the smoothed floor via COALESCE, so NEW
+  documents score against a persisted model with no training-corpus
+  access (same persisted-model convention as the MinHash store / IVF
+  index).
 
 Cross-engine exactness: weights, scores, normalized scores, and the
 threshold are integer MICRONATS (ln * 1e6 rounded, the :mod:`lm`
@@ -159,18 +164,26 @@ def _hud_sql(num: str, den: str) -> str:
 # -------------------------------------------------------------- weights
 
 
+def _prior6(n_pos_docs: int, n_neg_docs: int) -> Column:
+    """The class prior ``ln(N_pos/N_neg)`` in micronats, a literal:
+    the document counts are known on the driver before training runs."""
+    return F.round(
+        F.log(F.lit(n_pos_docs).cast("double") / F.lit(n_neg_docs).cast("double"))
+        * F.lit(NAT_SCALE)
+    ).cast("long")
+
+
 def _nb_weights(
     bucketed: DataFrame,
     n_buckets: int,
-    doc_counts: tuple[int, int],
-) -> DataFrame:
+    prior6: Column,
+) -> tuple[DataFrame, DataFrame]:
     """Fitted weight table ``(bucket, n_pos, n_neg, w6, tot_pos,
-    tot_neg, prior6)`` from a ``(__id, __lab, bucket)`` feature-bucket
-    stream (the label rides through the explode as a carried column,
-    so training never re-joins the exploded stream against the
-    labels). ``doc_counts`` = (n_pos_docs, n_neg_docs) already
-    computed by the caller (the one-class guard's aggregate), so the
-    label column is scanned once, not twice."""
+    tot_neg, prior6)`` and its one-row totals ``(tot_pos, tot_neg)``
+    from a ``(__id, __lab, bucket)`` feature-bucket stream (the label
+    rides through the explode as a carried column, so training never
+    re-joins the exploded stream against the labels). ``prior6`` is
+    the literal of :func:`_prior6`."""
     counts = bucketed.groupBy("bucket").agg(
         F.sum(F.when(F.col("__lab"), 1).otherwise(0)).cast("long").alias("n_pos"),
         F.sum(F.when(F.col("__lab"), 0).otherwise(1)).cast("long").alias("n_neg"),
@@ -178,10 +191,6 @@ def _nb_weights(
     totals = counts.agg(
         F.sum("n_pos").cast("long").alias("tot_pos"),
         F.sum("n_neg").cast("long").alias("tot_neg"),
-    )
-    docs = bucketed.sparkSession.range(1).select(
-        F.lit(int(doc_counts[0])).cast("long").alias("__dp"),
-        F.lit(int(doc_counts[1])).cast("long").alias("__dn"),
     )
     b = F.lit(n_buckets).cast("double")
     w6 = F.round(
@@ -191,23 +200,16 @@ def _nb_weights(
         )
         * F.lit(NAT_SCALE)
     ).cast("long")
-    prior6 = F.round(
-        F.log(F.col("__dp").cast("double") / F.col("__dn").cast("double"))
-        * F.lit(NAT_SCALE)
-    ).cast("long")
-    return (
-        counts.crossJoin(F.broadcast(totals))
-        .crossJoin(F.broadcast(docs))
-        .select(
-            "bucket",
-            "n_pos",
-            "n_neg",
-            w6.alias("w6"),
-            "tot_pos",
-            "tot_neg",
-            prior6.alias("prior6"),
-        )
+    weights = counts.crossJoin(F.broadcast(totals)).select(
+        "bucket",
+        "n_pos",
+        "n_neg",
+        w6.alias("w6"),
+        "tot_pos",
+        "tot_neg",
+        prior6.alias("prior6"),
     )
+    return weights, totals
 
 
 def _nb_weights_sql(
@@ -251,42 +253,37 @@ def _nb_weights_sql(
 def _scores_from_buckets(
     bucketed: DataFrame,
     weights: DataFrame,
+    meta: tuple[Column, Column, Column],
     n_buckets: int,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """``(__id, *carry, n_feats, score6, norm6)`` from a
-    ``(__id, *carry, bucket)`` stream against a weight table — the
-    shared scoring aggregate (broadcast join + one partial-aggregated
-    groupBy on the document id; ``carry`` columns are functionally
-    dependent on ``__id`` and ride the group key so calibration never
-    re-joins the labels). ``norm6`` is the length-normalized score
-    (exact half-up micronats/feature)."""
-    meta = weights.agg(
-        F.max("tot_pos").alias("tot_pos"),
-        F.max("tot_neg").alias("tot_neg"),
-        F.max("prior6").alias("prior6"),
-    )
+    ``(__id, *carry, bucket)`` stream against a ``(bucket, w6)`` weight
+    table — the shared scoring aggregate (broadcast join + one
+    partial-aggregated groupBy on the document id; ``carry`` columns are
+    functionally dependent on ``__id`` and ride the group key so
+    calibration never re-joins the labels). ``meta`` is the model's
+    ``(tot_pos, tot_neg, prior6)``: all literals when scoring a read
+    model; in training ``prior6`` is a literal and the totals are
+    columns of ``bucketed`` (a broadcast totals row). ``norm6`` is the
+    length-normalized score (exact half-up micronats/feature)."""
+    tot_pos, tot_neg, prior6 = meta
     b = F.lit(n_buckets).cast("double")
     unseen6 = F.round(
-        (
-            F.log(F.lit(1.0) / (F.col("tot_pos") + b))
-            - F.log(F.lit(1.0) / (F.col("tot_neg") + b))
-        )
+        (F.log(F.lit(1.0) / (tot_pos + b)) - F.log(F.lit(1.0) / (tot_neg + b)))
         * F.lit(NAT_SCALE)
     ).cast("long")
     scored = (
         bucketed.join(F.broadcast(weights.select("bucket", "w6")), "bucket", "left")
-        .crossJoin(F.broadcast(meta))
         .select(
             "__id",
             *carry,
             F.coalesce(F.col("w6"), unseen6).alias("__w"),
-            "prior6",
         )
         .groupBy("__id", *carry)
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
-            (F.sum("__w") + F.max("prior6")).alias("score6"),
+            (F.sum("__w") + prior6).alias("score6"),
         )
     )
     return scored.select(
@@ -296,24 +293,6 @@ def _scores_from_buckets(
         "score6",
         _hud(F.col("score6"), F.col("n_feats")).alias("norm6"),
     )
-
-
-def _raw_scores(
-    docs: DataFrame,
-    weights: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_buckets: int,
-    bigrams: bool,
-) -> DataFrame:
-    """``(__id, n_feats, score6, norm6)`` against a weight table —
-    public scoring's streaming form: featurize lazily (map-only over
-    the possibly-unbounded corpus, never pinned) and aggregate via
-    :func:`_scores_from_buckets`."""
-    bucketed = _feature_stream(docs, id_col, text_col, bigrams).select(
-        "__id", bucket_expr(F.col("feat"), n_buckets).alias("bucket")
-    )
-    return _scores_from_buckets(bucketed, weights, n_buckets)
 
 
 def _raw_scores_sql(
@@ -388,7 +367,7 @@ def train_nb_classifier(
     classifiers train on a labeled REFERENCE set (the LLaMA recipe
     trains on Wikipedia-linked positives), not on the corpus being
     filtered — the unbounded corpus pass is scoring, which stays
-    streaming (:func:`_raw_scores` never pins). Note the pinned stream
+    streaming (:func:`nb_classifier_score` never pins). Note the pinned stream
     scales with the labeled set's TOTAL TOKEN COUNT (≈2 rows per token
     with bigrams on), not its document count — a caller whose labeled
     set outgrows memory+disk of the executors should sample it, not
@@ -438,12 +417,15 @@ def train_nb_classifier(
         )
         .localCheckpoint(eager=False)
     )
-    w = _nb_weights(
-        bucketed,
+    prior6 = _prior6(int(cls["__dp"]), int(cls["__dn"]))
+    w, totals = _nb_weights(bucketed, n_buckets, prior6)
+    scored = _scores_from_buckets(
+        bucketed.crossJoin(F.broadcast(totals)),
+        w,
+        (F.col("tot_pos"), F.col("tot_neg"), prior6),
         n_buckets,
-        doc_counts=(int(cls["__dp"]), int(cls["__dn"])),
+        carry=("__lab",),
     )
-    scored = _scores_from_buckets(bucketed, w, n_buckets, carry=("__lab",))
     means = scored.groupBy("__lab").agg(
         _hud(F.sum("norm6"), F.count(F.lit(1))).alias("m6")
     )
@@ -496,24 +478,37 @@ def nb_classifier_score(
     ``norm6`` its per-feature mean, and ``pred = norm6 >= thr6``
     (the model's calibrated threshold).
 
-    Shape: explode -> LEFT join ``broadcast(model)`` on the bucket
-    (the model is <= n_buckets rows by construction — always the small
-    side) -> one partial-aggregated groupBy on the document id. Unseen
-    buckets COALESCE to the add-one floor computed from the model's
-    own carried totals, so scoring never touches the training corpus.
-    ``n_buckets`` must match the value the model was trained with.
+    Shape: the model is read ONCE, at this call — at most
+    ``n_buckets`` rows through one ``toArrow()`` — and documents score
+    against that driver-local ``(bucket, w6)`` table: explode -> LEFT
+    broadcast join on the bucket -> one partial-aggregated groupBy on
+    the document id, with the model's ``tot_pos``, ``tot_neg``,
+    ``prior6`` and ``thr6`` as literals. A lazily trained model (the
+    plan :func:`train_nb_classifier` returns) therefore runs its
+    training jobs once here, however many actions the result sees; a
+    persisted model costs one read. Unseen buckets COALESCE to the
+    add-one floor computed from the model's carried totals, so scoring
+    never touches the training corpus. ``n_buckets`` must match the
+    value the model was trained with.
     """
-    thr = model.agg(F.max("thr6").alias("thr6"))
-    return (
-        _raw_scores(docs, model, id_col, text_col, n_buckets, bigrams)
-        .crossJoin(F.broadcast(thr))
-        .select(
-            F.col("__id").alias(id_col),
-            "n_feats",
-            "score6",
-            "norm6",
-            (F.col("norm6") >= F.col("thr6")).alias("pred"),
-        )
+    consts = ("tot_pos", "tot_neg", "prior6", "thr6")
+    table = model.select("bucket", "w6", *consts).toArrow()
+    first = table.slice(0, 1).to_pylist()
+    lit = {c: F.lit(first[0][c] if first else None).cast("long") for c in consts}
+    weights = docs.sparkSession.createDataFrame(
+        table.select(["bucket", "w6"]), schema=model.select("bucket", "w6").schema
+    )
+    bucketed = _feature_stream(docs, id_col, text_col, bigrams).select(
+        "__id", bucket_expr(F.col("feat"), n_buckets).alias("bucket")
+    )
+    return _scores_from_buckets(
+        bucketed, weights, (lit["tot_pos"], lit["tot_neg"], lit["prior6"]), n_buckets
+    ).select(
+        F.col("__id").alias(id_col),
+        "n_feats",
+        "score6",
+        "norm6",
+        (F.col("norm6") >= lit["thr6"]).alias("pred"),
     )
 
 

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -518,6 +518,11 @@ def minhash_dedup_incremental(
     artifacts are appended, so the loop invariant — the store describes
     exactly the deduplicated corpus — holds across batches.
 
+    ``survivors`` is a ``localCheckpoint`` pin taken before the store
+    append, so the store and whatever the caller writes from it hold
+    identical rows by construction; the pin lives as long as the
+    caller's reference to ``survivors``.
+
     Assumes globally unique doc ids with new ids sorting after stored
     ids (the append-stable convention the funnel's min-id rule relies
     on); one writer per store (the driver's sync lock covers this).
@@ -588,7 +593,9 @@ def minhash_dedup_incremental(
         .select(F.col("id").alias(id_col))
     )
     losers = cross_losers.unionByName(within_losers).distinct()
-    survivors = new.join(losers, id_col, "left_anti")
+    # pinned while the batch's shingle cache is still held: the store
+    # append and the caller read these same rows, never re-deriving them
+    survivors = new.join(losers, id_col, "left_anti").localCheckpoint()
 
     if update_store:
         save_minhash_store(
@@ -801,6 +808,17 @@ def simhash_pairs_sql(
 _PLAIN_ROUNDS = 3
 
 
+def _pin_label_sum(labels: DataFrame) -> tuple[DataFrame, int | None]:
+    """``labels`` pinned by an eager ``localCheckpoint`` and its label
+    sum (None when empty), observed on that same pass. Under AQE even a
+    lazy checkpoint runs every upstream shuffle when it is called, so
+    observing costs only the checkpoint's result job, where a separate
+    sum aggregate would be one more job per round."""
+    seen = Observation()
+    pinned = labels.observe(seen, F.sum("label").alias("s")).localCheckpoint()
+    return pinned, seen.get["s"]
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -836,13 +854,13 @@ def duplicate_clusters(
     (measured ~1.5 s/query on the sf0.1 cluster consumers), while a
     pathological chain of pairwise-similar documents still converges
     in logarithmic rounds. ``localCheckpoint`` cuts lineage so plans
-    don't grow with iterations — LAZILY, so the convergence agg that
-    follows materializes it and each round is ONE eager job, not two
-    (the closure is a chain of tiny-data rounds; its wall-clock is job
-    overhead, not bytes). Convergence is detected via the label-sum
-    invariant: the total strictly decreases until fixpoint (labels
-    only ever shrink), costing one tiny agg per round instead of a
-    full old⋈new comparison.
+    don't grow with iterations, and each round's label sum is observed
+    on that checkpoint's own pass (:func:`_pin_label_sum`), so a round
+    runs no job beyond its checkpoint (the closure is a chain of
+    tiny-data rounds; its wall-clock is job overhead, not bytes).
+    Convergence is detected via the label-sum invariant: the total
+    strictly decreases until fixpoint (labels only ever shrink), so
+    one observed sum per round replaces a full old⋈new comparison.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass without
     reaching the fixpoint — a silently partial closure would
@@ -866,21 +884,15 @@ def duplicate_clusters(
     # near-dup graphs (stars/cliques — the common case) then reach the
     # fixpoint one eager round earlier. Symmetrized edges list every
     # node as src, so the identity arm still covers isolated-pair
-    # endpoints. The checkpoint is LAZY: the convergence-sum agg below
-    # materializes it, one job instead of checkpoint-then-agg (the
-    # closure is a chain of tiny-data eager rounds, so per-round JOB
-    # overhead, not bytes, is its bench cost — measured 4.0 s of the
-    # 9.6 s funnel minhash block before this change).
-    labels = (
+    # endpoints.
+    labels, prev_sum = _pin_label_sum(
         edges.select(F.col("src").alias("id"), F.col("src").alias("label"))
         .unionByName(
             edges.select(F.col("dst").alias("id"), F.col("src").alias("label"))
         )
         .groupBy("id")
         .agg(F.min("label").alias("label"))
-        .localCheckpoint(eager=False)
     )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
     converged = prev_sum is None  # empty pair set: nothing to close
 
     def _propagate(lbls: DataFrame) -> DataFrame:
@@ -896,10 +908,7 @@ def duplicate_clusters(
             break
         merged = _propagate(labels)
         if rnd < _PLAIN_ROUNDS:
-            # lazy checkpoint + the sum agg that materializes it: one
-            # eager job per round (formerly eager checkpoint + agg = 2)
-            labels = merged.localCheckpoint(eager=False)
-            cur_sum = labels.agg(F.sum("label")).first()[0]
+            labels, cur_sum = _pin_label_sum(merged)
         else:
             # still not converged after the shallow-graph budget: deep
             # component — HOOK then JUMP (the two halves of star
@@ -937,7 +946,7 @@ def duplicate_clusters(
                 .agg(F.min("label").alias("label"))
                 .persist()
             )
-            labels = (
+            labels, cur_sum = _pin_label_sum(
                 merged2.alias("a")
                 .join(
                     merged2.select(
@@ -949,12 +958,10 @@ def duplicate_clusters(
                 .select(
                     F.col("a.id").alias("id"), F.col("__llab").alias("label")
                 )
-                .localCheckpoint(eager=False)
             )
-            # the agg materializes the jumped labels; only THEN are the
+            # the pin materialized the jumped labels; only THEN are the
             # propagation caches safe to drop (unpersisting first would
             # recompute them inside the hook/jump joins)
-            cur_sum = labels.agg(F.sum("label")).first()[0]
             merged.unpersist()
             merged2.unpersist()
         if cur_sum == prev_sum:

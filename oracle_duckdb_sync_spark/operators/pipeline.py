@@ -12,16 +12,26 @@ hash buckets), so the composition inherits their 100 TB properties:
 documents shuffle only inside the two dedup stages, and the final
 corpus can be written `partitionBy("split")` in the same pass.
 
-The function returns (corpus, stats) where stats is a small DataFrame
-of per-stage row counts — the survivorship funnel every data-prep run
-needs to report. The gate and exact-dedup outputs are persisted for the
-duration of the funnel so each stage count and the downstream joins read
-the materialized stage rather than recomputing annotate/gate lineage,
-and every funnel-internal persist (including the minhash shingle and
-signature tables) is unpersisted before returning — repeated
-prepare_corpus calls leak no cached blocks. The returned ``corpus`` is
-lazy as usual: the caller's first action on it re-derives the surviving
-rows once from source lineage.
+The function returns (corpus, stats) where stats is a small,
+one-partition DataFrame of per-stage row counts — the survivorship
+funnel every data-prep run needs to report. Each stage runs once per
+call:
+
+- the gate and exact-dedup outputs are persisted for the duration of
+  the funnel, so each stage count and the downstream joins read the
+  materialized stage rather than recomputing annotate/gate lineage;
+  every funnel-internal persist (including the minhash shingle and
+  signature tables) is unpersisted before returning, so repeated
+  prepare_corpus calls leak no cached blocks;
+- the classifier gate reads its model once (see
+  :func:`..classifier.nb_classifier_score`);
+- the last stage's survivors are pinned with ``localCheckpoint`` and
+  that stage's count is observed on the pinning pass. ``corpus`` is the
+  split assignment over the pin, so the caller's first action scans the
+  pinned rows instead of re-deriving annotate → dedup → closure →
+  gates. The pin lives as long as the caller holds ``corpus`` (Spark
+  drops checkpoint blocks when the frame is garbage-collected), like
+  the delta of :func:`..incremental.IncrementalLoader.fetch_incremental`.
 """
 
 from __future__ import annotations
@@ -35,6 +45,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from . import dedup as DD
 from . import sampling as SP
+from .query import observe_count_and_watermark
 
 
 def prepare_corpus(
@@ -77,7 +88,14 @@ def prepare_corpus(
     """Run the standard corpus-prep funnel; return (corpus, stats).
 
     corpus columns: id, text, lang_pred, quality_score, split — one row
-    per surviving document. stats rows: (stage, rows) in funnel order.
+    per surviving document. stats rows: (stage, rows) in funnel order,
+    one partition.
+
+    The surviving rows are computed here, once: ``corpus`` reads a
+    ``localCheckpoint`` pin of the last stage's survivors (taken on the
+    pass that also counts that stage), not the funnel's lineage. The
+    pin's blocks live as long as the caller's ``corpus``; drop the
+    reference to release them.
 
     Near-dup closure keeps the minimum doc id of each duplicate cluster
     (the canonical survivor), matching :func:`dedup.duplicate_clusters`
@@ -250,7 +268,6 @@ def prepare_corpus(
             F.col("id").alias(id_col)
         )
         neardup_free = deduped.join(losers, id_col, "left_anti")
-    n_neardup = neardup_free.count()
 
     stat_rows = [
         ("input", n_input),
@@ -259,9 +276,9 @@ def prepare_corpus(
     ]
     if n_substring is not None:
         stat_rows.append(("substring_deduped", n_substring))
-    stat_rows.append(("neardup_deduped", n_neardup))
-
+    # the stages from near-dup on, counted once the funnel is built
     survivors = neardup_free
+    stages = [("neardup_deduped", survivors)]
     if lm_max_nll is not None:
         from . import lm as LMOD
 
@@ -274,7 +291,7 @@ def prepare_corpus(
             .select(id_col)
         )
         survivors = survivors.join(flunk, id_col, "left_anti")
-        stat_rows.append(("lm_gated", survivors.count()))
+        stages.append(("lm_gated", survivors))
     if classifier_model is not None:
         from . import classifier as CLS
 
@@ -291,7 +308,7 @@ def prepare_corpus(
             .select(id_col)
         )
         survivors = survivors.join(cls_flunk, id_col, "left_anti")
-        stat_rows.append(("classifier_gated", survivors.count()))
+        stages.append(("classifier_gated", survivors))
     if embeddings is not None:
         from . import similarity as SIM
 
@@ -325,7 +342,7 @@ def prepare_corpus(
                 F.col("id") != F.col("cluster_id")
             ).select(F.col("id").alias(id_col))
             survivors = survivors.join(sem_losers, id_col, "left_anti")
-        stat_rows.append(("semantic_deduped", survivors.count()))
+        stages.append(("semantic_deduped", survivors))
     if decontaminate_bank is not None:
         from . import similarity as SIM
 
@@ -341,8 +358,15 @@ def prepare_corpus(
             vec_col=embed_vec_col,
         ).select(id_col)
         survivors = survivors.join(contaminated, id_col, "left_anti")
-        stat_rows.append(("decontaminated", survivors.count()))
+        stages.append(("decontaminated", survivors))
 
+    stat_rows += [(name, frame.count()) for name, frame in stages[:-1]]
+    # pin the last stage's survivors, counting them on that pass: the
+    # caller's actions scan these rows instead of re-running the funnel.
+    # localCheckpoint, not persist: the pin outlives this call
+    observed, counted = observe_count_and_watermark(survivors, None)
+    survivors = observed.localCheckpoint()
+    stat_rows.append((stages[-1][0], counted()[0]))
     if leakage_safe:
         corpus = SP.leakage_safe_split(
             survivors, clusters, id_col, splits, split_salt
@@ -352,7 +376,8 @@ def prepare_corpus(
     for cached in (*minhash_intermediates, *extra_cached, exact, gated):
         cached.unpersist()
 
-    stats = spark.createDataFrame(stat_rows, "stage string, rows long")
+    # one partition: a caller's orderBy needs no range sample or shuffle
+    stats = spark.createDataFrame(stat_rows, "stage string, rows long").coalesce(1)
     return corpus, stats
 
 
@@ -419,7 +444,12 @@ def ingest_batch(
     fingerprints append after every gate. All orders maintain the loop
     invariant (pinned in pytest across batches): the corpus parquet,
     the MinHash store, the substring store, and the IVF index all
-    describe exactly the same surviving document text.
+    describe exactly the same surviving document text. The lexical
+    survivors are pinned once (``localCheckpoint``, by
+    :func:`dedup.minhash_dedup_incremental` or the day-0 branch), so the
+    MinHash store append, the gates, the corpus append and the other
+    stores all read those pinned rows; the survivor count is observed
+    on the corpus append's pass.
 
     Returns the batch report: ``{"batch", "survivors", "duplicates"}``
     plus ``"substring_survivors"`` / ``"semantic_survivors"`` /
@@ -586,11 +616,12 @@ def ingest_batch(
             max_band_bucket=max_band_bucket,
             update_store=not gated,
         )
-    survivors = survivors.persist()
-    # every persisted intermediate is kept here and released together
+    # `survivors` is pinned by both branches (a localCheckpoint), so
+    # the gates, the sinks and the stores below read the same rows.
+    # Every persisted gate output is kept here and released together
     # after the sink writes — rebinding `survivors` must not orphan a
     # cached handle (each gate below persists a new frame)
-    pinned = [survivors]
+    pinned: list[DataFrame] = []
     report = {"batch": n_batch}
     if report_sub is not None:
         report["substring_survivors"] = report_sub
@@ -648,8 +679,10 @@ def ingest_batch(
             survivors = survivors.join(hits, id_col, "left_anti").persist()
             pinned.append(survivors)
             report["decontaminated"] = survivors.count()
-    n_surv = survivors.count()
-    sinks.append(survivors, corpus_path)
+    # the survivor count is taken on the corpus append's own pass
+    observed, counted = observe_count_and_watermark(survivors, None)
+    sinks.append(observed, corpus_path)
+    n_surv = counted()[0]
     if substring_store_path is not None:
         # survivors carry the TRIMMED text (new_docs was rewritten), so
         # this keeps the store describing exactly the corpus text

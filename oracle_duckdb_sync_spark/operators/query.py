@@ -18,11 +18,11 @@ pushed limit, and ``orderBy(...).limit(k)`` compiles to ``TakeOrderedAndProject`
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from datetime import date, datetime, timedelta
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
@@ -94,20 +94,48 @@ def collect_watermark(df: DataFrame, time_col: str):
     return count_and_watermark(df, time_col)[1]
 
 
+def _watermark_metrics(
+    df: DataFrame, time_col: str | None
+) -> tuple[list[Column], Callable[[dict], tuple[int, Any]]]:
+    """The aggregate columns ``n`` (COUNT(*)) and ``wm`` (the
+    :func:`collect_watermark` value before decoding), and the decoder
+    that turns their values into ``(count, watermark)``: the one place
+    the watermark's timestamp / TIMESTAMP_NTZ mapping is made, for an
+    aggregate and for an observed pass alike. Without ``time_col`` the
+    watermark is None."""
+    kind = _timestamp_kind(df, time_col) if time_col else None
+    cols = [F.count(F.lit(1)).alias("n")]
+    if time_col:
+        top = F.max(time_col)
+        cols.append((F.unix_micros(top) if kind == "timestamp" else top).alias("wm"))
+
+    def decode(values: dict) -> tuple[int, Any]:
+        wm = values.get("wm")
+        if kind == "timestamp_ntz" and wm is not None:
+            wm = (wm - _EPOCH_WALL) // timedelta(microseconds=1)
+        return values["n"], wm
+
+    return cols, decode
+
+
 def count_and_watermark(df: DataFrame, time_col: str | None) -> tuple[int, Any]:
     """COUNT(*) and the :func:`collect_watermark` value in one aggregate,
     where ``count()`` and a MAX would be two actions (each its own jobs
     under AQE). Without ``time_col`` the watermark is None."""
-    kind = _timestamp_kind(df, time_col) if time_col else None
-    aggs = [F.count(F.lit(1))]
-    if time_col:
-        top = F.max(time_col)
-        aggs.append(F.unix_micros(top) if kind == "timestamp" else top)
-    row = df.agg(*aggs).first()
-    wm = row[1] if time_col else None
-    if kind == "timestamp_ntz" and wm is not None:
-        wm = (wm - _EPOCH_WALL) // timedelta(microseconds=1)
-    return row[0], wm
+    cols, decode = _watermark_metrics(df, time_col)
+    return decode(df.agg(*cols).first().asDict())
+
+
+def observe_count_and_watermark(
+    df: DataFrame, time_col: str | None
+) -> tuple[DataFrame, Callable[[], tuple[int, Any]]]:
+    """``df`` with the :func:`count_and_watermark` values observed on the
+    next action that scans it once (a write, a pin), and a getter that
+    returns them once that action has run. Each call makes a fresh ``Observation``:
+    one observes a single action, so a retried write calls this again."""
+    cols, decode = _watermark_metrics(df, time_col)
+    seen = Observation()
+    return df.observe(seen, *cols), lambda: decode(seen.get)
 
 
 def epoch_micros(col: Column, kind: str) -> Column:

@@ -396,8 +396,8 @@ def stream_dedup_ingest(
                 .filter(F.col("id") != F.col("cluster_id"))
                 .select(F.col("id").alias(id_col))
             )
-            survivors = batch_df.join(losers, id_col, "left_anti")
-        survivors = survivors.localCheckpoint()  # one derivation for both writes
+            survivors = batch_df.join(losers, id_col, "left_anti").localCheckpoint()
+        # both branches pin the survivors: one derivation for both writes
         if survivors.isEmpty():
             return
         sinks.upsert(spark, survivors, corpus_path, [id_col])

@@ -26,12 +26,16 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..errors import SyncError
-from ..operators.query import count_and_watermark, watermark_literal
+from ..operators.query import (
+    count_and_watermark,
+    observe_count_and_watermark,
+    watermark_literal,
+)
 from ..sources import sinks
 from ..sources.catalog import Catalog
 from ..sources.state import SyncStateStore
@@ -143,23 +147,28 @@ class SyncEngine:
         wm_holder: dict[str, Any] = {}
 
         def write() -> int:
-            # persist so count / watermark / write share ONE source
-            # snapshot: on a live source, rows arriving between the
-            # write scan and a later MAX scan would push the committed
-            # watermark past data never written — permanently skipped
-            # by every later incremental.
-            df.persist()
-            try:
-                n, wm_holder["wm"] = count_and_watermark(df, time_column)
-                if primary_key and self.catalog.table_exists(table):
+            # count and watermark must describe exactly the rows written:
+            # on a live source, rows arriving between the write scan and
+            # a later MAX scan would push the committed watermark past
+            # data never written — permanently skipped by every later
+            # incremental.
+            if primary_key and self.catalog.table_exists(table):
+                # upsert scans its batch more than once: persist so the
+                # aggregate and every scan share one source snapshot
+                df.persist()
+                try:
+                    n, wm_holder["wm"] = count_and_watermark(df, time_column)
                     sinks.upsert(
                         self.spark, df, path, [primary_key], partition_cols=partition_cols
                     )
-                else:
-                    sinks.overwrite(df, path, partition_cols=partition_cols)
-                return n
-            finally:
-                df.unpersist()
+                    return n
+                finally:
+                    df.unpersist()
+            # the overwrite scans the source once: observe both on it
+            observed, counted = observe_count_and_watermark(df, time_column)
+            sinks.overwrite(observed, path, partition_cols=partition_cols)
+            n, wm_holder["wm"] = counted()
+            return n
 
         result = self._timed_write(table, write, "full")
         if result.success and time_column:
@@ -181,9 +190,9 @@ class SyncEngine:
 
         def write() -> int:
             # the row count comes from the write's own pass
-            seen = Observation()
-            sinks.overwrite(df.observe(seen, F.count(F.lit(1)).alias("n")), path)
-            return seen.get["n"]
+            observed, counted = observe_count_and_watermark(df, None)
+            sinks.overwrite(observed, path)
+            return counted()[0]
 
         return self._timed_write(table, write, "test")
 
@@ -212,18 +221,17 @@ class SyncEngine:
         new_wm_holder: dict[str, Any] = {}
 
         def write() -> int:
-            # cache the delta so count / max / write share one scan; the
-            # count is not observed on the append: an empty append still
-            # writes a part file into the table
-            delta.persist()
-            try:
-                n, wm = count_and_watermark(delta, time_column)
-                if n > 0:
-                    new_wm_holder["wm"] = wm
-                    sinks.append(delta, path)
-                return n
-            finally:
-                delta.unpersist()
+            # an empty append would still write a part file into the
+            # table: probe first, then take count and watermark on the
+            # append's own pass, so they describe exactly the rows it wrote
+            if delta.isEmpty():
+                return 0
+            observed, counted = observe_count_and_watermark(delta, time_column)
+            sinks.append(observed, path)
+            n, wm = counted()
+            if n > 0:
+                new_wm_holder["wm"] = wm
+            return n
 
         result = self._timed_write(table, write, "incremental")
         if result.success and "wm" in new_wm_holder:

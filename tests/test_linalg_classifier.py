@@ -226,6 +226,23 @@ def test_classifier_plan_is_broadcast_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_scorer_reads_a_lazily_trained_model_once(spark, sf_dir):
+    """The scorer reads its model at construction; the scoring plan
+    holds the weights as a local table and the totals and threshold as
+    literals, so no aggregate over the model (the weight groupBy, the
+    totals, the calibration re-score, the class means) is left in it:
+    the only HashAggregate pair is the per-document sum (a scorer that
+    joins the model plan itself inlines training three times)."""
+    docs = _load_docs(spark, sf_dir)
+    model = CL.train_nb_classifier(_labeled(docs), n_buckets=512)
+    scored = CL.nb_classifier_score(docs, model, n_buckets=512)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan [bucket" in plan
+    assert plan.count("HashAggregate") == 2
+    for name in ("n_pos", "tot_pos", "thr6"):
+        assert name not in plan
+
+
 def test_carried_label_scores_match_streaming_join(spark, sf_dir):
     """Training's calibration path scores the labeled set from the
     carried-label bucket stream (one featurize pass, no label
@@ -235,20 +252,18 @@ def test_carried_label_scores_match_streaming_join(spark, sf_dir):
     docs = _load_docs(spark, sf_dir).limit(200)
     labeled = _labeled(docs)
     model = CL.train_nb_classifier(labeled, n_buckets=512)
-    w = model.select(
-        "bucket", "n_pos", "n_neg", "w6", "tot_pos", "tot_neg", "prior6"
-    )
+    m = model.first()
+    meta = tuple(F.lit(m[c]).cast("long") for c in ("tot_pos", "tot_neg", "prior6"))
     bucketed = _feature_carry_stream(labeled)
     via_carry = (
-        CL._scores_from_buckets(bucketed, w, 512, carry=("__lab",))
+        CL._scores_from_buckets(bucketed, model, meta, 512, carry=("__lab",))
         .toPandas()
         .sort_values("__id")
         .reset_index(drop=True)
     )
     via_join = (
-        CL._raw_scores(
-            labeled.select("doc_id", "text"), w, "doc_id", "text", 512, True
-        )
+        CL.nb_classifier_score(labeled.select("doc_id", "text"), model, n_buckets=512)
+        .withColumnRenamed("doc_id", "__id")
         .join(
             labeled.select(
                 F.col("doc_id").alias("__id"),
@@ -358,6 +373,35 @@ def test_funnel_classifier_gate_counts(spark, sf_dir):
     flunked = {r["doc_id"] for r in scored.collect()}
     kept = {r["doc_id"] for r in corpus.collect()}
     assert not (kept & flunked)
+
+
+def test_funnel_corpus_first_action_scans_the_pin(spark, sf_dir):
+    """prepare_corpus pins the last stage's survivors: the corpus's
+    first action, with the stats read a funnel report makes, scans the
+    pin instead of re-running annotate -> dedup -> closure -> model ->
+    score (39 jobs over this corpus when the corpus is lazy), and
+    the one-partition stats sort without a range shuffle."""
+    from oracle_duckdb_sync_spark.operators.pipeline import prepare_corpus
+    from tests.conftest import count_jobs
+
+    docs = _load_docs(spark, sf_dir)
+    model = CL.train_nb_classifier(_labeled(docs))
+    corpus, stats = prepare_corpus(
+        docs,
+        min_quality=0.25,
+        jaccard_threshold=0.35,
+        num_perm=32,
+        shingle_k=2,
+        bands=8,
+        classifier_model=model,
+    )
+    (_, rows), n = count_jobs(spark, lambda: (
+        corpus.write.format("noop").mode("overwrite").save(),
+        stats.orderBy("stage").collect(),
+    ))
+    assert n <= 2
+    st = {r["stage"]: r["rows"] for r in rows}
+    assert corpus.count() == st["classifier_gated"] < st["neardup_deduped"]
 
 
 # ------------------------------------------------------------ k-means

@@ -119,6 +119,27 @@ def test_duplicate_clusters_empty_pairs(spark):
     assert duplicate_clusters(pairs).collect() == []
 
 
+def test_duplicate_clusters_observes_each_round_sum_on_its_pin(spark):
+    """Each round's label sum is observed on the pass that checkpoints
+    the round, not taken by a separate aggregate: one job fewer per
+    round (with a separate sum aggregate per round the star takes 10
+    jobs, the 12-node chain — which reaches the hook/jump rounds — 54,
+    and no pairs 3)."""
+    from tests.conftest import count_jobs
+
+    for edges, most in (
+        ([(1, i) for i in range(2, 8)], 8),
+        ([(i, i + 1) for i in range(1, 12)], 47),
+        ([], 2),
+    ):
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        duplicate_clusters(pairs).collect()  # warm: first-use planning
+        labels, n = count_jobs(spark, lambda: duplicate_clusters(pairs))
+        assert n <= most, (len(edges), n)
+        want = {(i, min(i, 1)) for e in edges for i in e}
+        assert {tuple(r) for r in labels.collect()} == want
+
+
 def test_duplicate_clusters_matches_union_find_on_mixed_graph(spark):
     """Differential pin for the r15 fused-init/lazy-round closure: a
     deterministic mixed graph (stars whose min id is a leaf, a deep

@@ -217,6 +217,43 @@ def test_ntz_watermark_full_then_incremental_sync(spark, env, tmp_path):
         spark.conf.set(conf, prev)
 
 
+def test_sync_counts_on_the_write_pass_and_skips_empty_deltas(spark, env, tmp_path):
+    """Count and watermark come from the write's own pass: a full sync
+    is the source's schema read and the overwrite (2 jobs; an aggregate
+    over a persisted snapshot makes it 5); an incremental adds one
+    emptiness probe (3). An empty delta writes no file and keeps the
+    saved watermark (2 jobs)."""
+    from tests.conftest import count_jobs
+
+    cfg, catalog, state, engine = env
+    src_path = str(tmp_path / "src_jobs")
+    src = ParquetSyncSource(src_path)
+
+    def top():
+        return (
+            spark.read.parquet(src_path)
+            .agg(F.unix_micros(F.max("TIMESTAMP_COL")))
+            .first()[0]
+        )
+
+    _write_source(spark, src_path, 0, 1000)
+    r, n = count_jobs(spark, lambda: engine.full_sync(src, "jc", time_column="TIMESTAMP_COL"))
+    assert r.success and r.rows == 1000 and n <= 2
+    assert r.new_watermark == state.load_state("jc") == top()
+
+    _write_source(spark, src_path, 0, 1500)
+    r, n = count_jobs(spark, lambda: engine.incremental_sync(src, "jc", "TIMESTAMP_COL"))
+    assert r.success and r.rows == 500 and n <= 3
+    assert r.new_watermark == state.load_state("jc") == top()
+    assert catalog.row_count("jc") == 1500
+
+    files = _file_stats(catalog.table_path("jc"))
+    r, n = count_jobs(spark, lambda: engine.incremental_sync(src, "jc", "TIMESTAMP_COL"))
+    assert r.success and r.rows == 0 and r.new_watermark is None and n <= 2
+    assert _file_stats(catalog.table_path("jc")) == files
+    assert state.load_state("jc") == top()
+
+
 def test_test_sync_row_limit(spark, env, tmp_path):
     cfg, catalog, state, engine = env
     src_path = str(tmp_path / "src2")
