@@ -1420,10 +1420,12 @@ def _unit_array_expr(text_col: str, unit: int | str) -> str:
         d = unit.replace("\\", "\\\\").replace("'", "\\'")
         return f"split({text_col}, '{d}')"
     n = int(unit)
-    words = f"split({text_col}, ' ')"
+    # the outer transform over a one-element array binds the split once:
+    # inlined into the inner lambda, it re-split the document per window
     definitional = (
-        f"transform(sequence(0, CAST(ceil(size({words}) / {n}.0) AS INT)"
-        f" - 1), g -> array_join(slice({words}, g * {n} + 1, {n}), ' '))"
+        f"transform(array(split({text_col}, ' ')), w -> transform(sequence(0,"
+        f" CAST(ceil(size(w) / {n}.0) AS INT) - 1),"
+        f" g -> array_join(slice(w, g * {n} + 1, {n}), ' ')))[0]"
     )
     sentinel = (
         f"split(regexp_replace({text_col}, "

@@ -30,6 +30,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _quantize(col: Column, lo: float, hi: float, bits: int) -> Column:
     """Map a numeric column into the integer grid [0, 2^bits): linear
@@ -253,9 +255,9 @@ def stats_manifest(
         f"`{c}_min` double, `{c}_max` double, `{c}_nulls` long" for c in cols
     )
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     par = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame([(f,) for f in files], "file string").repartition(par)
+    fdf = local_frame(spark, [(f,) for f in files], "file string").repartition(par)
 
     def read_footers(batches):
         import pyarrow.parquet as pq

@@ -35,6 +35,7 @@ import decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .aggregate import limb_sum
 
 MICRO = 6  # component quantization: round(v * 10^6) half-up, stored int
@@ -377,9 +378,10 @@ def pca_variance_check(
             f"eigenvalue sum {vals.sum()} != covariance trace {trace}"
         )
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, model_n, float(var[i])) for i in range(d)],
-        schema="dim int, n long, dim_var double",
+        "dim int, n long, dim_var double",
     ).orderBy("dim")
 
 

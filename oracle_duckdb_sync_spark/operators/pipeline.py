@@ -12,10 +12,10 @@ hash buckets), so the composition inherits their 100 TB properties:
 documents shuffle only inside the two dedup stages, and the final
 corpus can be written `partitionBy("split")` in the same pass.
 
-The function returns (corpus, stats) where stats is a small,
-one-partition DataFrame of per-stage row counts — the survivorship
-funnel every data-prep run needs to report. Each stage runs once per
-call:
+The function returns (corpus, stats) where stats holds the per-stage
+row counts — the survivorship funnel every data-prep run needs to
+report — as an Arrow-built local relation (``session.local_frame``), one
+partition, that needs no Python worker. Each stage runs once per call:
 
 - the gate and exact-dedup outputs are persisted for the duration of
   the funnel, so each stage count and the downstream joins read the
@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..session import local_frame
 from . import dedup as DD
 from . import sampling as SP
 from .query import observe_count_and_watermark
@@ -89,7 +90,9 @@ def prepare_corpus(
 
     corpus columns: id, text, lang_pred, quality_score, split — one row
     per surviving document. stats rows: (stage, rows) in funnel order,
-    one partition.
+    one partition: the counts are observed on the driver and enter Spark
+    as an Arrow-built local relation, so reading them starts no Python
+    worker.
 
     The surviving rows are computed here, once: ``corpus`` reads a
     ``localCheckpoint`` pin of the last stage's survivors (taken on the
@@ -377,7 +380,7 @@ def prepare_corpus(
         cached.unpersist()
 
     # one partition: a caller's orderBy needs no range sample or shuffle
-    stats = spark.createDataFrame(stat_rows, "stage string, rows long").coalesce(1)
+    stats = local_frame(spark, stat_rows, "stage string, rows long").coalesce(1)
     return corpus, stats
 
 

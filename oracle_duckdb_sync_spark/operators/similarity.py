@@ -28,6 +28,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .aggregate import limb_sum
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -669,8 +670,8 @@ def knn_join_blocked(
     q_rows = queries.select(F.col(query_id), F.col(vec_col)).collect()
     spark = corpus.sparkSession
     if not q_rows:
-        return spark.createDataFrame(
-            [], schema=f"`{query_id}` {q_type}, `{corpus_id}` {c_type}, `cosine` double"
+        return local_frame(
+            spark, [], f"`{query_id}` {q_type}, `{corpus_id}` {c_type}, `cosine` double"
         )
     q_ids = [r[0] for r in q_rows]
     bc = spark.sparkContext.broadcast(
@@ -1777,7 +1778,7 @@ def semantic_decontaminate(
     schema = f"`{corpus_id}` {c_type}, `{bank_id}` {b_type}, `cosine` double"
     b_rows = bank.select(F.col(bank_id), F.col(vec_col)).collect()
     if not b_rows:
-        return spark.createDataFrame([], schema=schema)
+        return local_frame(spark, [], schema)
     bc = spark.sparkContext.broadcast(
         ([r[0] for r in b_rows], [[float(x) for x in r[1]] for r in b_rows])
     )

@@ -9,7 +9,12 @@ time-bucket boundaries are reproducible across deployments.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Sequence
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 from .config import EngineConfig
 
@@ -49,3 +54,33 @@ def build_session(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.cbo.joinReorder.enabled", str(cfg.cbo_enabled).lower())
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over ``rows`` the driver already holds (tuples in the
+    field order of ``schema``, a StructType or DDL string).
+
+    The rows enter Spark as one Arrow table with the schema's Arrow
+    form, so the JVM builds the local relation itself. Handing Python
+    rows to ``createDataFrame`` instead pickles them through a Python
+    ``map``: the first action forks a Python worker and pickles every
+    row. A naive top-level TIMESTAMP value is read in the driver's
+    local time, as that path reads it; an empty ``rows`` gives an empty
+    relation of the same schema.
+    """
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [
+        pa.array(
+            [field.dataType.toInternal(v) for v in values]
+            if isinstance(field.dataType, TimestampType)
+            else values,
+            type=arrow_field.type,
+        )
+        for field, arrow_field, values in zip(schema.fields, arrow, columns)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

@@ -32,6 +32,7 @@ from pyspark.sql.types import StructType
 
 from ..config import EngineConfig
 from ..errors import TableNotFoundError
+from ..session import local_frame
 
 
 class Catalog:
@@ -212,7 +213,7 @@ class Catalog:
         """
         if self._exists_on_disk(name) and not overwrite:
             return
-        empty = self.spark.createDataFrame([], schema)
+        empty = local_frame(self.spark, [], schema)
         empty.write.mode("overwrite").parquet(self.table_path(name))
         self._relations.pop(name, None)
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import upsert as upsert_op
+from ..session import local_frame
 from .fs import _looks_remote, _strip_file_scheme
 
 # swap-staging siblings ``<path><suffix><run>``: the staged rewrite, the
@@ -75,9 +76,10 @@ def _scope_to_partitions(
             ),
         )
         return df.filter(cond)
-    tdf = spark.createDataFrame(
+    tdf = local_frame(
+        spark,
         [tuple(row[c] for c in pcols) for row in touched],
-        schema=df.select(*pcols).schema,
+        df.select(*pcols).schema,
     )
     cond = reduce(
         lambda a, b: a & b, (df[c].eqNullSafe(tdf[c]) for c in pcols)
